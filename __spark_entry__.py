@@ -1101,12 +1101,12 @@ def kg_triples_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata only, no extra job): vacuous pruning (all dirs opened) turns
     the row red against the oracle's literal TRUE."""
     from financial_knowledge_graphs_spark.operators.materialize import (
-        _as_dirs, _table_state, read_graph_table_pruned,
+        _table_state, read_graph_table_pruned,
     )
 
     t = ensure_fixture_clustered(spark, _kg_n_docs(sf_dir))
     st = _table_state(t)
-    n_total = sum(len(_as_dirs(vs)) for vs in st["buckets"].values())
+    n_total = sum(len(vs) for vs in st["buckets"].values())
     df = read_graph_table_pruned(spark, t, {"percentage": (10.0, 40.0)})
     n_opened = len({os.path.dirname(f) for f in df.inputFiles()})
     return df.select(

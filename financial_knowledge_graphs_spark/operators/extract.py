@@ -174,6 +174,10 @@ def extract_document(text: str, gaz: Gazetteer) -> dict[str, Any]:
                             float(tm.group(1)) * _UNIT[tm.group(2)], None, tm.group(3))
             elif kind == "mergedWith":
                 tm = _MERGE_TAIL.match(text, e2)
+                if not tm and _surf2.endswith("."):
+                    # the longest alias ("Acme Inc.") took the period that
+                    # ends the sentence: surface and date-less tail share it
+                    tm = _MERGE_TAIL.match(text, e2 - 1)
                 if tm:
                     add_rel("mergedWith", rec1, rec2, None, None, tm.group(1))
             elif kind == "hasEquityStakeIn":

@@ -524,10 +524,12 @@ def build_triples(raw_triples: DataFrame, mentions: DataFrame,
 # ---------------------------------------------------------------------------
 # Partition-scoped idempotent upsert (parquet emulation of Iceberg MERGE INTO)
 #
-# Layout: table_path/bucket=<id>/v_<n>/<parquet files> (immutable data
-# version dirs) + table_path/_metadata/v<sid>.metadata.json (full
-# bucket→version map, bucket count, schema — one file per snapshot) +
-# table_path/_metadata/version-hint.text naming the live snapshot id.
+# Layout — the only one any reader or writer here knows:
+#   table_path/bucket=<id>/v_<n>/<parquet files>   immutable version dirs
+#   table_path/_metadata/v<sid>.metadata.json      one file per snapshot:
+#       bucket → [version dirs], bucket count, schema, file stats, MOR state
+#   table_path/_metadata/version-hint.text          the live snapshot id
+# A directory without a committed snapshot is not a table: reads raise.
 #
 # A merge rewrites ONLY the buckets its update keys hash into — an
 # incremental batch touching 0.1% of keys rewrites ~0.1% of a 100 TB
@@ -535,14 +537,14 @@ def build_triples(raw_triples: DataFrame, mentions: DataFrame,
 # version-hint.text (POSIX rename atomicity): data dirs and the metadata
 # file are staged first, so a crash at any instant leaves the WHOLE TABLE
 # readable at either the previous or the new snapshot — never a torn
-# cross-bucket state (ADVICE r2: per-bucket pointer swaps left a
-# half-applied merge visible to concurrent readers).
+# cross-bucket state.
 #
-# This is exactly Iceberg's commit model (metadata.json + version-hint),
-# and the metadata carries the table's bucket count, so re-bucketing to
-# more buckets (``rebucket_table``) is just another snapshot — readers and
-# subsequent merges resolve the layout from metadata, never from a
-# hardcoded constant.
+# This is exactly Iceberg's commit model (metadata.json + version-hint).
+# The metadata is the single source of the table's bucket count and
+# schema, so re-bucketing (``rebucket_table``) is just another snapshot —
+# readers and subsequent merges resolve the layout from metadata, never
+# from a hardcoded constant, and zero-row tables read through the
+# recorded schema.
 # ---------------------------------------------------------------------------
 
 DEFAULT_MERGE_BUCKETS = 32  # one-box default; a real deployment sizes this
@@ -566,28 +568,14 @@ def _bucket_dirs(table_path: str) -> list[str]:
     )
 
 
-def _current_version(bucket_dir: str) -> str | None:
-    import os
-
-    ptr = os.path.join(bucket_dir, "CURRENT")
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as f:
-        v = f.read().strip()
-    return v or None
-
-
 def _next_version(bucket_dir: str) -> str:
-    """Next free version name: max over EXISTING v_* dirs and the CURRENT
-    pointer, +1. Scanning the dirs (not just CURRENT+1) makes replay after
-    a crash between the version-dir rename and the pointer swap safe — the
-    orphaned dir is skipped instead of colliding with the rename."""
+    """Next free version name: max over EXISTING v_* dirs, +1. Scanning
+    the dirs (not the snapshot's map) makes replay after a crash between
+    the version-dir rename and the snapshot commit safe — the orphaned dir
+    is skipped instead of colliding with the rename."""
     import os
 
     nums = [0]
-    cur = _current_version(bucket_dir)
-    if cur:
-        nums.append(int(cur[2:]))
     if os.path.isdir(bucket_dir):
         for d in os.listdir(bucket_dir):
             if d.startswith("v_"):
@@ -648,12 +636,6 @@ AUTO_COMPACT_FILES = 8  # max data files per bucket before a merge folds the
                         # bucket into its rewrite (inline compaction)
 
 
-def _as_dirs(v) -> list:
-    """Bucket map value → list of version dirs (pre-append-path metadata
-    recorded a single dir as a plain string)."""
-    return v if isinstance(v, list) else [v]
-
-
 def _meta_dir(table_path: str) -> str:
     import os
 
@@ -693,17 +675,6 @@ def _max_meta_sid(table_path: str) -> int:
     metadata write and the hint swap leaves an orphan metadata file whose id
     must not be reused by the replayed commit."""
     return max(_meta_sids_on_disk(table_path), default=0)
-
-
-def _legacy_jsonl_snapshots(table_path: str) -> list[dict]:
-    import json
-    import os
-
-    log = os.path.join(table_path, "_snapshots.jsonl")
-    if not os.path.exists(log):
-        return []
-    with open(log) as f:
-        return [json.loads(ln) for ln in f if ln.strip()]
 
 
 def _bucket_file_stats(version_dir: str) -> dict:
@@ -784,10 +755,8 @@ def read_graph_table_pruned(spark: SparkSession, table_path: str,
 
     ``ranges`` maps column → (lo, hi); either bound may be None (open).
     The exact predicate is always applied on top, so dirs without recorded
-    bounds (legacy snapshots, non-atomic columns) degrade to read+filter,
-    never to wrong results."""
-    import os
-
+    bounds (non-atomic columns) degrade to read+filter, never to wrong
+    results."""
     from functools import reduce
 
     def _pred(df):
@@ -800,7 +769,7 @@ def read_graph_table_pruned(spark: SparkSession, table_path: str,
         return df.filter(reduce(lambda a, b: a & b, cs)) if cs else df
 
     state = _table_state(table_path)
-    if not state or not state.get("dir_stats"):
+    if not state or not state["dir_stats"]:
         return _pred(read_graph_table(spark, table_path))
     dstats = state["dir_stats"]
 
@@ -822,12 +791,7 @@ def read_graph_table_pruned(spark: SparkSession, table_path: str,
     out = _snapshot_scan(spark, table_path, state, data_dir_filter=_keep,
                          strict=False)
     if out is None:
-        empty = _empty_df(spark, table_path, state)
-        if empty is not None:
-            return _pred(empty)
-        # no schema recorded and everything pruned: exact filter over the
-        # full read (still correct, just unpruned — legacy-only corner)
-        return _pred(read_graph_table(spark, table_path))
+        out = _empty_df(spark, state)
     return _pred(out)
 
 
@@ -836,13 +800,13 @@ def table_stats(table_path: str) -> dict | None:
     (from commit-time footers — no scan). The ops answer to 'is this table
     skewed / due a rebucket_table?': a bucket many times the median size
     means the hash key has heavy hitters or the layout is outgrown. None
-    for pre-metadata tables (no recorded stats)."""
+    for a path with no committed snapshot."""
     state = _table_state(table_path)
-    if not state or "stats" not in state:
+    if not state:
         return None
     per = state["stats"]
     return {
-        "n_buckets": state.get("n_buckets"),
+        "n_buckets": state["n_buckets"],
         "rows": sum(s.get("rows", 0) for s in per.values()),
         "bytes": sum(s.get("bytes", 0) for s in per.values()),
         "files": sum(s.get("files", 0) for s in per.values()),
@@ -859,13 +823,10 @@ class CommitConflictError(RuntimeError):
 
 
 def _live_sid(table_path: str) -> int:
-    """Snapshot id readers currently resolve — hint file, else the legacy
-    jsonl log's last entry, else 0 (no committed snapshot)."""
+    """Snapshot id readers currently resolve — the hint file, else 0 (no
+    committed snapshot)."""
     sid = _hint_sid(table_path)
-    if sid is not None:
-        return sid
-    legacy = _legacy_jsonl_snapshots(table_path)
-    return legacy[-1]["snapshot_id"] if legacy else 0
+    return 0 if sid is None else sid
 
 
 def _commit_lock(table_path: str, timeout: float = 60.0):
@@ -912,7 +873,7 @@ def _commit_lock(table_path: str, timeout: float = 60.0):
     return _lock()
 
 
-def _commit_snapshot(table_path: str, buckets_map: dict[str, str],
+def _commit_snapshot(table_path: str, buckets_map: dict[str, list[str]],
                      n_buckets: int, schema,
                      stats: dict | None = None,
                      base_sid: int | None = None,
@@ -951,9 +912,7 @@ def _commit_snapshot(table_path: str, buckets_map: dict[str, str],
                 f"{table_path}: live snapshot {_live_sid(table_path)} != "
                 f"staged base {base_sid}"
             )
-        legacy = _legacy_jsonl_snapshots(table_path)
-        base = max([_max_meta_sid(table_path)] + [s["snapshot_id"] for s in legacy])
-        sid = base + 1
+        sid = _max_meta_sid(table_path) + 1
         stamped_deletes = {
             b: [[d, sid if s is None else int(s)] for d, s in items]
             for b, items in (deletes or {}).items() if items
@@ -969,7 +928,7 @@ def _commit_snapshot(table_path: str, buckets_map: dict[str, str],
             "buckets": buckets_map,
             "stats": stats if stats is not None else {},
             "dir_stats": dir_stats if dir_stats is not None else {},
-            "schema": schema.jsonValue() if schema is not None else None,
+            "schema": schema.jsonValue(),
             "deletes": stamped_deletes,
             "dir_seq": stamped_seq,
             "delete_keys": delete_keys or None,
@@ -995,67 +954,10 @@ def _commit_snapshot(table_path: str, buckets_map: dict[str, str],
 
 
 def _table_state(table_path: str) -> dict | None:
-    """Live table state: the hinted metadata snapshot, or — for tables
-    written before the atomic-metadata layout — a state synthesized from
-    the per-bucket CURRENT pointers (read-only legacy path; the next merge
-    migrates the table to metadata commits)."""
-    import os
-
+    """Live table state: the metadata of the snapshot version-hint.text
+    names, or None when the path holds no committed snapshot."""
     sid = _hint_sid(table_path)
-    if sid is not None:
-        meta = _load_meta(table_path, sid)
-        if meta is not None:
-            return meta
-    buckets = _bucket_dirs(table_path)
-    if not buckets:
-        return None
-    state: dict[str, str] = {}
-    for b in buckets:
-        bdir = os.path.join(table_path, b)
-        v = _current_version(bdir)
-        if v and os.path.isdir(os.path.join(bdir, v)):
-            state[b] = v
-    legacy = _legacy_jsonl_snapshots(table_path)
-    return {
-        "snapshot_id": legacy[-1]["snapshot_id"] if legacy else 0,
-        "n_buckets": None,  # unrecorded pre-metadata; callers keep their arg
-        "buckets": state,
-        "schema": None,
-        "legacy": True,
-    }
-
-
-def _write_schema(table_path: str, schema) -> None:
-    """Persist the table schema (Iceberg keeps it in metadata; we need it to
-    read legitimately-empty tables and to type point-lookup literals)."""
-    import json
-    import os
-
-    import uuid
-
-    # UNIQUE tmp per writer: a fixed name races under concurrent merges —
-    # writer B's os.replace consumes A's tmp (or A's replace consumes B's),
-    # and the loser hits FileNotFoundError despite both schemas being valid
-    tmp = os.path.join(table_path, f"._SCHEMA.{uuid.uuid4().hex[:8]}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(schema.jsonValue(), f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(table_path, "_SCHEMA"))
-    _fsync_dir(table_path)
-
-
-def _read_schema(table_path: str):
-    import json
-    import os
-
-    from pyspark.sql.types import StructType
-
-    p = os.path.join(table_path, "_SCHEMA")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return StructType.fromJson(json.load(f))
+    return None if sid is None else _load_meta(table_path, sid)
 
 
 def _meta_sids_on_disk(table_path: str) -> list[int]:
@@ -1081,13 +983,12 @@ def snapshots(table_path: str) -> list[dict]:
     """All COMMITTED snapshots still on disk, oldest first (Iceberg
     ``.snapshots`` analog — expired snapshots' metadata is GC'd, so the
     list covers the retention window). Metadata files newer than the hint
-    are uncommitted orphans from a crashed commit and are excluded. Legacy
-    _snapshots.jsonl entries (pre-metadata tables) are listed when no
-    metadata commits exist."""
+    are uncommitted orphans from a crashed commit and are excluded; a path
+    with no committed snapshot lists none."""
     hint = _hint_sid(table_path)
     if hint is None:
-        return _legacy_jsonl_snapshots(table_path)
-    out = _legacy_jsonl_snapshots(table_path)
+        return []
+    out = []
     for sid in _meta_sids_on_disk(table_path):
         if sid > hint:
             continue
@@ -1260,19 +1161,19 @@ def _gc_versions_locked(table_path: str) -> None:
     live: dict[str, set[str]] = {}
     for s in retained:
         for b, vs in s["buckets"].items():
-            live.setdefault(b, set()).update(_as_dirs(vs))
+            live.setdefault(b, set()).update(vs)
         for b, items in (s.get("deletes") or {}).items():
             live.setdefault(b, set()).update(d for d, _ in items)
     expired_ref: dict[str, set[str]] = {}
     for s in expired:
         for b, vs in s["buckets"].items():
-            expired_ref.setdefault(b, set()).update(_as_dirs(vs))
+            expired_ref.setdefault(b, set()).update(vs)
         for b, items in (s.get("deletes") or {}).items():
             expired_ref.setdefault(b, set()).update(d for d, _ in items)
     cutoff = _time.time() - ORPHAN_STAGING_TTL_S
     for b in _bucket_dirs(table_path):
         bdir = os.path.join(table_path, b)
-        keep = live.get(b, set()) | {_current_version(bdir) or ""}
+        keep = live.get(b, set())
         was_expired = expired_ref.get(b, set())
         for d in os.listdir(bdir):
             if not d.startswith("v_") or d in keep:
@@ -1301,15 +1202,9 @@ def _gc_versions_locked(table_path: str) -> None:
 
 
 def table_exists(table_path: str) -> bool:
-    import os
-
-    return os.path.isdir(table_path) and (
-        bool(_bucket_dirs(table_path))
-        or os.path.exists(os.path.join(table_path, "_SCHEMA"))
-        or any(
-            f.endswith(".parquet") or f == "_SUCCESS" for f in os.listdir(table_path)
-        )
-    )
+    """True when the path holds a committed snapshot (a truncated or
+    zero-row table included) — exactly when ``read_graph_table`` reads."""
+    return _table_state(table_path) is not None
 
 
 def _evolve_schema(old_schema_json: dict | None, new_schema):
@@ -1343,19 +1238,15 @@ def _evolve_schema(old_schema_json: dict | None, new_schema):
 
 
 def _read_with_schema(spark: SparkSession, paths: list[str],
-                      meta: dict | None) -> DataFrame:
+                      meta: dict) -> DataFrame:
     """Read data files THROUGH the snapshot's recorded schema (Iceberg
     resolves reads via table metadata, never file footers): files written
-    before an ADD COLUMN lack the new column and surface it as NULL;
-    without a recorded schema, fall back to footer inference (legacy
-    tables, which are single-schema by construction)."""
+    before an ADD COLUMN lack the new column and surface it as NULL."""
     from pyspark.sql.types import StructField, StructType
 
-    if meta and meta.get("schema"):
-        st = StructType.fromJson(meta["schema"])
-        st = StructType([StructField(f.name, f.dataType, True) for f in st.fields])
-        return spark.read.schema(st).parquet(*paths)
-    return spark.read.parquet(*paths)
+    st = StructType.fromJson(meta["schema"])
+    st = StructType([StructField(f.name, f.dataType, True) for f in st.fields])
+    return spark.read.schema(st).parquet(*paths)
 
 
 def _snapshot_scan(spark: SparkSession, table_path: str, snap: dict,
@@ -1406,7 +1297,7 @@ def _snapshot_scan(spark: SparkSession, table_path: str, snap: dict,
     entries = []  # (bucket, seq, path) for data dirs
     dseq = snap.get("dir_seq") or {}
     for b in sel:
-        for v in _as_dirs(bmap[b]):
+        for v in bmap[b]:
             if data_dir_filter is not None and not data_dir_filter(b, v):
                 continue
             p = _dir(b, v)
@@ -1464,15 +1355,11 @@ def _snapshot_scan(spark: SparkSession, table_path: str, snap: dict,
     return out
 
 
-def _empty_df(spark: SparkSession, table_path: str, meta: dict | None):
+def _empty_df(spark: SparkSession, meta: dict) -> DataFrame:
+    """Zero rows typed by the snapshot's recorded schema."""
     from pyspark.sql.types import StructType
 
-    if meta and meta.get("schema"):
-        return spark.createDataFrame([], StructType.fromJson(meta["schema"]))
-    schema = _read_schema(table_path)
-    if schema is not None:
-        return spark.createDataFrame([], schema)
-    return None
+    return spark.createDataFrame([], StructType.fromJson(meta["schema"]))
 
 
 def read_graph_table(spark: SparkSession, table_path: str,
@@ -1484,10 +1371,9 @@ def read_graph_table(spark: SparkSession, table_path: str,
     ``snapshot``, at that snapshot id (time travel, Iceberg ``VERSION AS
     OF``; the last SNAPSHOT_RETENTION snapshots stay readable), or with
     ``tag``, at a named ref (``tag_snapshot``; tagged snapshots never
-    expire). Falls back to per-bucket CURRENT pointers for pre-metadata
-    tables and to a plain parquet read for legacy flat dirs."""
-    import os
-
+    expire). Rows are typed by the snapshot's recorded schema, so a
+    zero-row snapshot reads as an empty frame. A path with no committed
+    snapshot raises ValueError."""
     if tag is not None:
         if snapshot is not None:
             raise ValueError("pass snapshot= or tag=, not both")
@@ -1499,38 +1385,15 @@ def read_graph_table(spark: SparkSession, table_path: str,
     if snapshot is not None:
         snap = _load_meta(table_path, snapshot)
         if snap is None:
-            snap = next(
-                (s for s in _legacy_jsonl_snapshots(table_path)
-                 if s["snapshot_id"] == snapshot), None
-            )
-        if snap is None:
             raise ValueError(f"no snapshot {snapshot} recorded for {table_path}")
         out = _snapshot_scan(spark, table_path, snap, strict=True)
-        if out is None:
-            empty = _empty_df(spark, table_path, snap)
-            if empty is not None:
-                return empty
-            raise ValueError(f"snapshot {snapshot} is empty and carries no schema")
-        return out
+        return _empty_df(spark, snap) if out is None else out
 
     state = _table_state(table_path)
     if state is None:
-        if os.path.isdir(table_path) and not any(
-            f.endswith(".parquet") or f == "_SUCCESS" for f in os.listdir(table_path)
-        ):
-            empty = _empty_df(spark, table_path, None)
-            if empty is not None:  # committed zero-row table
-                return empty
-        return spark.read.parquet(table_path)
+        raise ValueError(f"{table_path}: no committed snapshot to read")
     out = _snapshot_scan(spark, table_path, state, strict=False)
-    if out is None:
-        empty = _empty_df(spark, table_path, state)
-        if empty is not None:
-            return empty
-        raise ValueError(
-            f"{table_path}: bucket layout present but no readable versions"
-        )
-    return out
+    return _empty_df(spark, state) if out is None else out
 
 
 def read_table_changes(spark: SparkSession, table_path: str,
@@ -1561,11 +1424,6 @@ def read_table_changes(spark: SparkSession, table_path: str,
         if sid == 0:
             return {"snapshot_id": 0, "buckets": {}, "schema": None}
         meta = _load_meta(table_path, sid)
-        if meta is None:
-            meta = next(
-                (s for s in _legacy_jsonl_snapshots(table_path)
-                 if s["snapshot_id"] == sid), None
-            )
         if meta is None:
             raise ValueError(
                 f"no snapshot {sid} recorded for {table_path} "
@@ -1605,8 +1463,8 @@ def read_table_changes(spark: SparkSession, table_path: str,
     dels_a = a.get("deletes") or {}
     dels_b = b.get("deletes") or {}
     for bk in set(a["buckets"]) | set(b["buckets"]):
-        da = set(_as_dirs(a["buckets"].get(bk, [])))
-        db = set(_as_dirs(b["buckets"].get(bk, [])))
+        da = set(a["buckets"].get(bk, []))
+        db = set(b["buckets"].get(bk, []))
         same_dels = dels_a.get(bk, []) == dels_b.get(bk, [])
         if da == db and same_dels:
             continue  # untouched bucket: zero I/O
@@ -1619,10 +1477,6 @@ def read_table_changes(spark: SparkSession, table_path: str,
             # rewritten, or merge-on-read commit (new equality deletes):
             # row-level multiset diff over the bucket's RESOLVED rows
             diff_buckets.append(bk)
-
-    def _empty():
-        e = _empty_df(spark, table_path, b if b.get("schema") else None)
-        return e
 
     parts = []
     if append_paths:
@@ -1648,13 +1502,12 @@ def read_table_changes(spark: SparkSession, table_path: str,
             rows_a.exceptAll(rows_b).withColumn("_change_type", F.lit("delete"))
         )
     if not parts:
-        e = _empty()
-        if e is None:
+        if not b.get("schema"):
             raise ValueError(
                 f"{table_path}: no changes between snapshots and no recorded "
                 f"schema to type an empty result"
             )
-        return e.withColumn("_change_type", F.lit("insert")).limit(0)
+        return _empty_df(spark, b).withColumn("_change_type", F.lit("insert"))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -1662,65 +1515,44 @@ def read_table_changes(spark: SparkSession, table_path: str,
 
 
 def lookup_by_key(spark: SparkSession, table_path: str, keys: list[str],
-                  values: tuple, n_buckets: int = DEFAULT_MERGE_BUCKETS) -> DataFrame:
+                  values: tuple) -> DataFrame:
     """Point lookup with BUCKET PRUNING: hash the key values to their
     bucket and read only that bucket's live version — a 1/n_buckets scan
     instead of the whole table (Iceberg partition-pruned point read). The
-    table's REAL bucket count comes from its metadata (a re-bucketed table
-    ignores the caller's n_buckets). Falls back to a filtered full read on
-    legacy flat dirs."""
-    import os
-
+    bucket count and the key columns' types come from the live snapshot's
+    metadata, so a re-bucketed table is looked up in its new layout. A
+    path with no committed snapshot raises ValueError."""
     from functools import reduce
 
     from pyspark.sql.types import StructType
 
     assert len(keys) == len(values)
     state = _table_state(table_path)
-    if state and state.get("n_buckets"):
-        n_buckets = state["n_buckets"]
+    if state is None:
+        raise ValueError(f"{table_path}: no committed snapshot to look up")
+    n_buckets = state["n_buckets"]
     # xxhash64 is TYPE-sensitive (int32 and int64 hash differently), so a
     # Python literal must be cast to the table column's declared type before
     # bucketing — otherwise the lookup scans the wrong bucket and silently
-    # returns nothing (review finding r2-6). The type comes from the table
-    # metadata (or the legacy _SCHEMA marker).
-    schema = None
-    if state and state.get("schema"):
-        schema = StructType.fromJson(state["schema"])
-    if schema is None:
-        schema = _read_schema(table_path)
-    types = {f.name: f.dataType for f in schema.fields} if schema else {}
-
-    def lit_of(k, v):
-        c = F.lit(v)
-        return c.cast(types[k]) if k in types else c
-
+    # returns nothing.
+    types = {f.name: f.dataType
+             for f in StructType.fromJson(state["schema"]).fields}
+    missing = [k for k in keys if k not in types]
+    if missing:
+        raise ValueError(f"{table_path}: no key column(s) {missing}")
+    lits = [F.lit(v).cast(types[k]) for k, v in zip(keys, values)]
     pred = reduce(
         lambda a, c: a & c,
-        [F.col(k).eqNullSafe(lit_of(k, v)) for k, v in zip(keys, values)],
+        [F.col(k).eqNullSafe(c) for k, c in zip(keys, lits)],
     )
-    if not _bucket_dirs(table_path) and state is None:
-        return spark.read.parquet(table_path).filter(pred)
-    if any(k not in types for k in keys):
-        # No recorded type for a key column (pre-metadata table with a
-        # deleted _SCHEMA marker): an uncast literal could hash to the
-        # WRONG bucket and silently return nothing — fall back to a
-        # filtered full-table read instead of trusting the bucket (ADVICE
-        # r2 low #3).
-        return read_graph_table(spark, table_path).filter(pred)
-    cond_df = spark.range(1).select(
-        *[lit_of(k, v).alias(k) for k, v in zip(keys, values)]
-    )
-    b = cond_df.select(_bucket_expr(keys, n_buckets).alias("b")).first()["b"]
-    bname = f"bucket={b}"
-    out = _snapshot_scan(spark, table_path, state or {}, buckets=[bname],
+    b = spark.range(1).select(
+        *[c.alias(k) for k, c in zip(keys, lits)]
+    ).select(_bucket_expr(keys, n_buckets).alias("b")).first()["b"]
+    out = _snapshot_scan(spark, table_path, state, buckets=[f"bucket={b}"],
                          strict=False)
     if out is None:
         # bucket empty at this snapshot → key absent (typed hash is exact)
-        empty = _empty_df(spark, table_path, state)
-        if empty is not None:
-            return empty.filter(pred)
-        return read_graph_table(spark, table_path).filter(pred).limit(0)
+        out = _empty_df(spark, state)
     return out.filter(pred)
 
 
@@ -1751,7 +1583,7 @@ def rollback_table(table_path: str, snapshot_id: int) -> int:
             f"committed)"
         )
     targets = [
-        (b, v) for b, vs in meta["buckets"].items() for v in _as_dirs(vs)
+        (b, v) for b, vs in meta["buckets"].items() for v in vs
     ] + [
         (b, d) for b, items in (meta.get("deletes") or {}).items()
         for d, _ in items
@@ -1762,21 +1594,15 @@ def rollback_table(table_path: str, snapshot_id: int) -> int:
                 f"snapshot {snapshot_id} expired (bucket {b} version "
                 f"{v} GC'd; retention={SNAPSHOT_RETENTION})"
             )
-    schema = StructType.fromJson(meta["schema"]) if meta.get("schema") else None
-    sid = _commit_snapshot(
-        table_path, meta["buckets"], meta.get("n_buckets"), schema,
+    return _commit_snapshot(
+        table_path, meta["buckets"], meta["n_buckets"],
+        StructType.fromJson(meta["schema"]),
         meta.get("stats") or {}, base_sid=_live_sid(table_path),
         dir_stats=meta.get("dir_stats") or {},
         deletes=meta.get("deletes") or {},
         dir_seq=meta.get("dir_seq") or {},
         delete_keys=meta.get("delete_keys"),
     )
-    # _SCHEMA marker only after the CAS commit lands (ADVICE r3): a
-    # conflicting concurrent commit must not see the marker run ahead of
-    # the committed snapshot.
-    if schema is not None:
-        _write_schema(table_path, schema)
-    return sid
 
 
 def truncate_table(table_path: str) -> None:
@@ -1797,24 +1623,23 @@ def truncate_table(table_path: str) -> None:
     - pre-truncate snapshots stay time-travelable within retention, and
       retention GC (run here) reclaims the data dirs on the normal path.
 
-    A directory that never committed a snapshot (legacy flat parquet or
-    arbitrary files) has no commit machinery to fence — plain removal."""
+    A directory with no committed snapshot (e.g. the staged dirs of a
+    first commit that never landed) has no commit machinery to fence —
+    plain removal."""
     import shutil
 
     from pyspark.sql.types import StructType
 
     state = _table_state(table_path)
-    if state is None or not state.get("snapshot_id"):
+    if state is None:
         shutil.rmtree(table_path, ignore_errors=True)
         return
     for _ in range(MERGE_COMMIT_RETRIES):
-        schema_json = state.get("schema")
-        schema = (StructType.fromJson(schema_json) if schema_json
-                  else _read_schema(table_path))
         try:
             _commit_snapshot(
-                table_path, {}, state.get("n_buckets") or DEFAULT_MERGE_BUCKETS,
-                schema, stats={}, base_sid=state["snapshot_id"],
+                table_path, {}, state["n_buckets"],
+                StructType.fromJson(state["schema"]), stats={},
+                base_sid=state["snapshot_id"],
             )
             _gc_versions(table_path)
             return
@@ -1901,13 +1726,11 @@ def _merge_upsert_attempt(spark: SparkSession, table_path: str,
 
     state = _table_state(table_path)
     base_sid = state["snapshot_id"] if state else 0
-    if state and state.get("n_buckets"):
+    if state:
         # the table's recorded layout wins over the caller's default —
         # after rebucket_table, merges keep hashing into the NEW layout
         n_buckets = state["n_buckets"]
-    prev_map: dict[str, list[str]] = (
-        {b: _as_dirs(v) for b, v in state["buckets"].items()} if state else {}
-    )
+    prev_map: dict[str, list[str]] = dict(state["buckets"]) if state else {}
 
     # recorded schema = old schema + any columns this merge introduces (the
     # append fast path can land a new column without touching old files, so
@@ -1920,7 +1743,7 @@ def _merge_upsert_attempt(spark: SparkSession, table_path: str,
     # merge_upsert (see there); only the layout-dependent bucket column is
     # added per attempt.
     dedup = updates.withColumn("__bucket", _bucket_expr(keys, n_buckets))
-    exists = state is not None or table_exists(table_path)
+    exists = state is not None
     # ONE driver-blocking job answers all three head questions (any update
     # rows? any delete rows? which buckets touched?) — these were three
     # separate jobs, and at ~0.5s scheduling latency each across the 4-5
@@ -1957,8 +1780,7 @@ def _merge_upsert_attempt(spark: SparkSession, table_path: str,
     mor_gone = None        # their equality-delete key frame
     if exists:
         touched = pre_touched
-        # read ONLY the touched buckets' live data files (legacy flat dirs
-        # degrade to a full read + full re-bucket, a one-time migration)
+        # read ONLY the touched buckets' live data files
         if prev_map:
             # resolved through _snapshot_scan: schema-evolution-safe (reads
             # through the snapshot's recorded schema, not footer inference)
@@ -1973,16 +1795,8 @@ def _merge_upsert_attempt(spark: SparkSession, table_path: str,
                 scan.withColumn("__bucket", _bucket_expr(keys, n_buckets))
                 if scan is not None else None
             )
-        elif state is None and any(
-            f.endswith(".parquet") or f == "_SUCCESS" for f in os.listdir(table_path)
-        ):
-            touched = list(range(n_buckets))  # migrate: rewrite everything once
-            existing = spark.read.parquet(table_path).withColumn(
-                "__bucket", _bucket_expr(keys, n_buckets)
-            )
-            dirty = set(touched)
         else:
-            # committed zero-row table (schema marker / empty snapshot):
+            # committed zero-row table (empty or truncated snapshot):
             # behaves like a first write — install every staged bucket
             touched = None
             existing = None
@@ -2083,7 +1897,6 @@ def _merge_upsert_attempt(spark: SparkSession, table_path: str,
             "__bucket"
         ).mode("overwrite").parquet(del_staging)
 
-    migrated_flat = exists and state is None and not _bucket_dirs(table_path)
     # STAGE: move each staged bucket dir to a fresh immutable version dir.
     # No pointers move here — until the hint swap below, readers still
     # resolve the previous snapshot, so there is never a torn cross-bucket
@@ -2156,7 +1969,7 @@ def _merge_upsert_attempt(spark: SparkSession, table_path: str,
         shutil.rmtree(del_staging, ignore_errors=True)
     # per-dir column bounds follow the bucket map: entries for dirs no
     # longer referenced are dropped with them
-    live_dirs = {f"{b}/{v}" for b, vs in new_map.items() for v in _as_dirs(vs)}
+    live_dirs = {f"{b}/{v}" for b, vs in new_map.items() for v in vs}
     new_dir_stats = {k: v for k, v in new_dir_stats.items() if k in live_dirs}
     new_dir_seq = {k: v for k, v in new_dir_seq.items() if k in live_dirs}
     new_deletes = {b: v for b, v in new_deletes.items() if b in new_map and v}
@@ -2175,26 +1988,7 @@ def _merge_upsert_attempt(spark: SparkSession, table_path: str,
                      base_sid=base_sid, dir_stats=new_dir_stats,
                      deletes=new_deletes, dir_seq=new_dir_seq,
                      delete_keys=delete_keys)
-    # _SCHEMA marker AFTER the CAS commit (ADVICE r3): it is only the
-    # legacy/zero-row fallback — metadata carries the authoritative schema.
-    # Writing it pre-commit let a CommitConflictError leave the marker
-    # ahead of the committed snapshot, so legacy readers (and
-    # lookup_by_key's fallback) could see columns no committed snapshot has.
-    _write_schema(table_path, schema)
-    for b in _bucket_dirs(table_path):
-        # drop stale per-bucket CURRENT pointers (pre-metadata layout) so
-        # they can't pin GC'd versions or confuse legacy readers
-        cur = os.path.join(table_path, b, "CURRENT")
-        if os.path.exists(cur):
-            os.remove(cur)
     _gc_versions(table_path)
-    if migrated_flat:
-        # one-time cleanup: drop the legacy flat files now fully re-bucketed
-        # (NOT the metadata just written)
-        for f in os.listdir(table_path):
-            fp = os.path.join(table_path, f)
-            if os.path.isfile(fp) and f not in ("_snapshots.jsonl", "_SCHEMA"):
-                os.remove(fp)
 
 
 def rebucket_table(spark: SparkSession, table_path: str, keys: list[str],
@@ -2238,7 +2032,7 @@ def rebucket_table(spark: SparkSession, table_path: str, keys: list[str],
         "__bucket"
     ).mode("overwrite").parquet(staging)
 
-    new_map: dict[str, str] = {}
+    new_map: dict[str, list[str]] = {}
     new_stats: dict[str, dict] = {}
     new_dir_stats: dict[str, dict] = {}
     new_dir_seq: dict[str, int | None] = {}
@@ -2260,11 +2054,6 @@ def rebucket_table(spark: SparkSession, table_path: str, keys: list[str],
     _commit_snapshot(table_path, new_map, new_buckets, schema, new_stats,
                      base_sid=base_sid, dir_stats=new_dir_stats,
                      dir_seq=new_dir_seq)
-    _write_schema(table_path, schema)  # marker trails the commit (ADVICE r3)
-    for b in _bucket_dirs(table_path):
-        cur = os.path.join(table_path, b, "CURRENT")
-        if os.path.exists(cur):
-            os.remove(cur)
     _gc_versions(table_path)
 
 
@@ -2293,28 +2082,22 @@ def compact_table(spark: SparkSession, table_path: str,
     # merge-on-read equality-delete files — compaction is what reconciles
     # MOR state back to a single clean file (Iceberg rewrite_data_files
     # with delete-file compaction)
-    todo = {
-        b: _as_dirs(vs)
-        for b, vs in state["buckets"].items()
-        if len(_as_dirs(vs)) > max_files or pending_dels.get(b)
-    }
+    todo = [
+        b for b, vs in state["buckets"].items()
+        if len(vs) > max_files or pending_dels.get(b)
+    ]
     if not todo:
         return
     staging = f"{table_path}__staging_{uuid.uuid4().hex[:12]}"
     shutil.rmtree(staging, ignore_errors=True)
-    # a legacy (pre-metadata) table has NO recorded bucket count — keep it
-    # unrecorded (None) rather than stamping DEFAULT_MERGE_BUCKETS: a wrong
-    # recorded count would override callers' n_buckets on later merges and
-    # hash keys into the wrong bucket space (missed matches → duplicates)
-    n_buckets = state.get("n_buckets")
     # each over-full bucket is read and rewritten independently (bounded:
     # only buckets past the threshold; rows already belong to their bucket)
-    new_map = dict({b: _as_dirs(vs) for b, vs in state["buckets"].items()})
+    new_map = dict(state["buckets"])
     new_stats = dict(state.get("stats") or {})
     new_dir_stats = dict(state.get("dir_stats") or {})
     new_deletes = {b: list(v) for b, v in pending_dels.items()}
     new_dir_seq = dict(state.get("dir_seq") or {})
-    for b, vs in todo.items():
+    for b in todo:
         # resolved read: applies the bucket's pending equality deletes
         # (which this rewrite then CLEARS) and resolves mixed-schema files
         # through the snapshot's recorded schema — footer inference could
@@ -2333,17 +2116,14 @@ def compact_table(spark: SparkSession, table_path: str,
         new_dir_seq[f"{b}/{nxt}"] = None  # stamped with the commit's sid
         new_deletes.pop(b, None)  # applied by the rewrite
     shutil.rmtree(staging, ignore_errors=True)
-    live_dirs = {f"{b}/{v}" for b, vs in new_map.items() for v in _as_dirs(vs)}
+    live_dirs = {f"{b}/{v}" for b, vs in new_map.items() for v in vs}
     new_dir_stats = {k: v for k, v in new_dir_stats.items() if k in live_dirs}
     new_dir_seq = {k: v for k, v in new_dir_seq.items() if k in live_dirs}
     new_deletes = {b: v for b, v in new_deletes.items() if b in new_map and v}
     from pyspark.sql.types import StructType
 
-    schema = (
-        StructType.fromJson(state["schema"]) if state.get("schema")
-        else _read_schema(table_path)
-    )
-    _commit_snapshot(table_path, new_map, n_buckets, schema, new_stats,
+    _commit_snapshot(table_path, new_map, state["n_buckets"],
+                     StructType.fromJson(state["schema"]), new_stats,
                      base_sid=base_sid, dir_stats=new_dir_stats,
                      deletes=new_deletes, dir_seq=new_dir_seq,
                      delete_keys=state.get("delete_keys") if new_deletes else None)
@@ -2469,14 +2249,11 @@ def cluster_table(spark: SparkSession, table_path: str,
     sort_cols = [sort_by] if isinstance(sort_by, str) else list(sort_by)
     if not sort_cols:
         raise ValueError("cluster_table needs at least one sort column")
-    schema_cols = {
-        f["name"] for f in (state.get("schema") or {}).get("fields", [])
-    }
+    schema_cols = {f["name"] for f in state["schema"]["fields"]}
     for c in sort_cols:
-        if schema_cols and c not in schema_cols:
+        if c not in schema_cols:
             raise ValueError(f"cluster column {c!r} not in table schema")
     base_sid = state["snapshot_id"]
-    n_buckets = state.get("n_buckets")
     k = max(1, files_per_bucket)
     staging = f"{table_path}__staging_{uuid.uuid4().hex[:12]}"
     shutil.rmtree(staging, ignore_errors=True)
@@ -2492,25 +2269,24 @@ def cluster_table(spark: SparkSession, table_path: str,
         if rows is None:
             continue
         out = os.path.join(staging, b)
-        cached = None
         if zorder:
             # the z-order path reads the bucket twice (approxQuantile in
             # _with_zorder_key, then the rewrite) — persist around the
-            # pair so the resolved scan runs once (ADVICE r4)
+            # pair so the resolved scan runs once, and release
+            # it on every exit, the key guards' ValueError included
             cached = rows.persist()
-            ranged = (
-                _with_zorder_key(cached, sort_cols, zorder_bits)
-                .repartitionByRange(k, F.col("__zkey"))
-                .sortWithinPartitions("__zkey")
-                .drop("__zkey")
-            )
+            try:
+                (_with_zorder_key(cached, sort_cols, zorder_bits)
+                 .repartitionByRange(k, F.col("__zkey"))
+                 .sortWithinPartitions("__zkey")
+                 .drop("__zkey")
+                 .write.mode("overwrite").parquet(out))
+            finally:
+                cached.unpersist()
         else:
-            ranged = rows.repartitionByRange(
+            rows.repartitionByRange(
                 k, *[F.col(c) for c in sort_cols]
-            ).sortWithinPartitions(*sort_cols)
-        ranged.write.mode("overwrite").parquet(out)
-        if cached is not None:
-            cached.unpersist()
+            ).sortWithinPartitions(*sort_cols).write.mode("overwrite").parquet(out)
         parts = sorted(
             f for f in os.listdir(out)
             if f.endswith(".parquet") and
@@ -2544,11 +2320,8 @@ def cluster_table(spark: SparkSession, table_path: str,
     shutil.rmtree(staging, ignore_errors=True)
     from pyspark.sql.types import StructType
 
-    schema = (
-        StructType.fromJson(state["schema"]) if state.get("schema")
-        else _read_schema(table_path)
-    )
-    _commit_snapshot(table_path, new_map, n_buckets, schema, new_stats,
+    _commit_snapshot(table_path, new_map, state["n_buckets"],
+                     StructType.fromJson(state["schema"]), new_stats,
                      base_sid=base_sid, dir_stats=new_dir_stats,
                      deletes={}, dir_seq=new_dir_seq, delete_keys=None)
     _gc_versions(table_path)

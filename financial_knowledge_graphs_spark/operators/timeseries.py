@@ -54,13 +54,23 @@ def _resolve_hub_chunk(
     time_expr,
     hub_chunk_seconds: float | str | None,
 ) -> float | None:
-    """Resolve the ``hub_chunk_seconds`` knob: pass numeric/None through;
-    for ``"auto"`` profile the hottest key (``skew.key_profile`` top-1 —
+    """Resolve the ``hub_chunk_seconds`` knob: pass a positive number or
+    None through, and raise ValueError for anything else but ``"auto"``
+    (before any job runs, not deep in the chunked plan); for ``"auto"``
+    profile the hottest key (``skew.key_profile`` top-1 —
     one partial-agg groupBy + TakeOrdered, driver fetch is 1 row) and, if
     it exceeds ``AUTO_HUB_MAX_ROWS``, measure that key's time span (one
     min/max aggregate) and split it into ``ceil(n / AUTO_HUB_MAX_ROWS)``
     chunks. Uniform data resolves to None → the plain single-window plan."""
+    if hub_chunk_seconds is None:
+        return None
     if hub_chunk_seconds != "auto":
+        if (isinstance(hub_chunk_seconds, bool)
+                or not isinstance(hub_chunk_seconds, (int, float))
+                or not hub_chunk_seconds > 0):
+            raise ValueError(
+                f"hub_chunk_seconds must be None, 'auto' or a positive "
+                f"number of seconds, got {hub_chunk_seconds!r}")
         return hub_chunk_seconds
     from .skew import key_profile
 

@@ -230,10 +230,6 @@ class _ChangesStreamReader(DataSourceStreamReader):
                 return {"snapshot_id": 0, "buckets": {}}
             meta = m._load_meta(self.table_path, sid)
             if meta is None:
-                meta = next(
-                    (s for s in m._legacy_jsonl_snapshots(self.table_path)
-                     if s["snapshot_id"] == sid), None)
-            if meta is None:
                 raise ValueError(
                     f"stream offset snapshot {sid} expired for "
                     f"{self.table_path} (retention={m.SNAPSHOT_RETENTION})")
@@ -246,8 +242,8 @@ class _ChangesStreamReader(DataSourceStreamReader):
         seq_b = b.get("dir_seq") or {}
         parts: list[_ChangesPartition] = []
         for bk in set(a["buckets"]) | set(b["buckets"]):
-            da = set(m._as_dirs(a["buckets"].get(bk, [])))
-            db = set(m._as_dirs(b["buckets"].get(bk, [])))
+            da = set(a["buckets"].get(bk, []))
+            db = set(b["buckets"].get(bk, []))
             same_dels = dels_a.get(bk, []) == dels_b.get(bk, [])
             if da == db and same_dels:
                 continue

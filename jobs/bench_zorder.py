@@ -63,7 +63,7 @@ def main() -> None:
             mat.cluster_table(spark, t, ["user_id", "value"],
                               files_per_bucket=8, **kw)
             st = mat._table_state(t)
-            ndirs = sum(len(mat._as_dirs(v)) for v in st["buckets"].values())
+            ndirs = sum(len(v) for v in st["buckets"].values())
             print(f"{name}: cluster_wall={time.time() - t0:.1f}s "
                   f"dirs={ndirs}", flush=True)
             tables[name] = (t, ndirs)

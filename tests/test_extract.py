@@ -49,6 +49,25 @@ def test_equity_stake_and_partial_date_merge():
     assert d2["relationships"][0]["attributes"]["transactionDate"] == "2023-07"
 
 
+def test_merge_tail_shares_the_surface_period():
+    """An alias ending in "." can take the period that ends a date-less
+    merge sentence; the merge is still extracted, and a dated tail after
+    such a surface keeps its date."""
+    g = Gazetteer([
+        ("Juniper Tech LLC", "Juniper Tech LLC", "JT", "Technology", "USA"),
+        ("Pinnacle Industries Inc", "Pinnacle Industries Inc.", "PI", "Energy", "USA"),
+        ("Pinnacle Industries Inc.", "Pinnacle Industries Inc.", "PI", "Energy", "USA"),
+    ])
+    for text in ("Juniper Tech LLC merged with Pinnacle Industries Inc.",
+                 "Juniper Tech LLC merged with Pinnacle Industries Inc. Shares rose."):
+        (r,) = extract_document(text, g)["relationships"]
+        assert r["type"] == "mergedWith"
+        assert r["attributes"]["transactionDate"] is None
+    dated = "Juniper Tech LLC merged with Pinnacle Industries Inc. on 2023-07."
+    (r,) = extract_document(dated, g)["relationships"]
+    assert r["attributes"]["transactionDate"] == "2023-07"
+
+
 def test_debt_holder_direction():
     # "B is a debt holder of A" => (A, hasDebtHolder, B)
     text = "Beta Capital is a debt holder of Alpha Systems, holding notes worth $300 million."

@@ -78,14 +78,65 @@ def test_null_key_merge_idempotent(spark, tmp_warehouse):
     assert materialize.read_graph_table(spark, t).count() == 3
 
 
-def test_legacy_flat_dir_migrates(spark, tmp_warehouse):
-    t = os.path.join(tmp_warehouse, "flat")
-    _mk(spark, [(f"k{i}", i) for i in range(20)]).write.parquet(t)
-    materialize.merge_upsert(spark, t, _mk(spark, [("k0", 99), ("x", 1)]), ["k"], n_buckets=4)
-    got = materialize.read_graph_table(spark, t)
-    assert got.count() == 21
-    assert got.filter(F.col("k") == "k0").collect()[0]["v"] == 99
-    assert len(_versions(t)) > 0  # now bucketed
+def _assert_single_layout(t):
+    """The table dir holds bucket=* dirs of v_* version dirs plus
+    _metadata/ — nothing else (no pointer, log or marker files)."""
+    top = set(os.listdir(t))
+    assert "_metadata" in top
+    assert all(d.startswith("bucket=") for d in top - {"_metadata"}), top
+    for d in top - {"_metadata"}:
+        inner = os.listdir(os.path.join(t, d))
+        assert all(v.startswith("v_") for v in inner), (d, inner)
+
+
+def test_every_write_path_keeps_the_single_layout(spark, tmp_warehouse):
+    t = os.path.join(tmp_warehouse, "tbl")
+    rows = [(f"k{i}", i) for i in range(40)]
+    materialize.merge_upsert(spark, t, _mk(spark, rows), ["k"], n_buckets=4)
+    _assert_single_layout(t)
+    materialize.merge_upsert(
+        spark, t, _mk(spark, [("k0", 99)]), ["k"], n_buckets=4, mode="mor")
+    _assert_single_layout(t)
+    materialize.rebucket_table(spark, t, ["k"], new_buckets=8)
+    _assert_single_layout(t)
+    materialize.compact_table(spark, t, max_files=0)
+    _assert_single_layout(t)
+    sid = materialize.snapshots(t)[-1]["snapshot_id"]
+    materialize.cluster_table(spark, t, "v", files_per_bucket=2)
+    _assert_single_layout(t)
+    materialize.rollback_table(t, sid)
+    _assert_single_layout(t)
+    got = {(r["k"], r["v"]) for r in materialize.read_graph_table(spark, t).collect()}
+    assert got == {("k0", 99)} | set(rows[1:])
+    materialize.truncate_table(t)
+    _assert_single_layout(t)
+    assert materialize.read_graph_table(spark, t).count() == 0
+
+
+def test_path_without_snapshot_is_not_a_table(spark, tmp_warehouse):
+    """Only a committed snapshot makes a table: flat parquet or staged
+    bucket dirs alone are not read, and a merge into such a dir is a
+    first write (crash-replay of a first commit that never landed)."""
+    import re
+    import shutil
+
+    import pytest
+
+    flat = os.path.join(tmp_warehouse, "flat")
+    _mk(spark, [("a", 1)]).write.parquet(flat)
+    for path in (flat, os.path.join(tmp_warehouse, "missing")):
+        assert not materialize.table_exists(path)
+        with pytest.raises(ValueError, match=re.escape(path)):
+            materialize.read_graph_table(spark, path)
+        with pytest.raises(ValueError, match=re.escape(path)):
+            materialize.lookup_by_key(spark, path, ["k"], ("a",))
+
+    t = os.path.join(tmp_warehouse, "tbl")
+    materialize.merge_upsert(spark, t, _mk(spark, [("a", 1)]), ["k"], n_buckets=2)
+    shutil.rmtree(os.path.join(t, "_metadata"))  # first commit never landed
+    materialize.merge_upsert(spark, t, _mk(spark, [("a", 2)]), ["k"], n_buckets=2)
+    got = [(r["k"], r["v"]) for r in materialize.read_graph_table(spark, t).collect()]
+    assert got == [("a", 2)]
 
 
 def test_truncate(spark, tmp_warehouse):
@@ -147,14 +198,14 @@ def test_lookup_by_key_prunes_to_one_bucket(spark, tmp_warehouse):
     t = os.path.join(tmp_warehouse, "tbl")
     rows = [(f"k{i}", i) for i in range(100)]
     materialize.merge_upsert(spark, t, _mk(spark, rows), ["k"], n_buckets=8)
-    got = materialize.lookup_by_key(spark, t, ["k"], ("k42",), n_buckets=8)
+    got = materialize.lookup_by_key(spark, t, ["k"], ("k42",))
     assert [(r["k"], r["v"]) for r in got.collect()] == [("k42", 42)]
     # the plan reads exactly one bucket dir
     files = [f.replace("file:", "") for f in got.inputFiles()]
     bucket_dirs = {f.split("/bucket=")[1].split("/")[0] for f in files}
     assert len(bucket_dirs) == 1
     # missing key -> empty, still pruned
-    assert materialize.lookup_by_key(spark, t, ["k"], ("nope",), n_buckets=8).count() == 0
+    assert materialize.lookup_by_key(spark, t, ["k"], ("nope",)).count() == 0
 
 
 def test_crash_orphan_version_replay(spark, tmp_warehouse):
@@ -174,7 +225,8 @@ def test_crash_orphan_version_replay(spark, tmp_warehouse):
 
 def test_empty_first_merge_then_rows(spark, tmp_warehouse):
     """Review r2-2: a zero-row first merge must commit a readable empty
-    table (schema marker), and a later real merge must build on it."""
+    table (typed by the schema in its snapshot metadata), and a later real
+    merge must build on it."""
     t = os.path.join(tmp_warehouse, "tbl")
     empty = spark.createDataFrame([], "k string, v long")
     materialize.merge_upsert(spark, t, empty, ["k"], n_buckets=4)
@@ -187,7 +239,7 @@ def test_empty_first_merge_then_rows(spark, tmp_warehouse):
 def test_time_travel_with_tombstoned_bucket(spark, tmp_warehouse):
     """Review r2-4/5: a snapshot taken right after a delete-emptied bucket
     must stay readable (bucket reads empty), and a fully-emptied table
-    reads as zero rows via the schema marker."""
+    reads as zero rows through the schema its snapshot records."""
     t = os.path.join(tmp_warehouse, "tbl")
     materialize.merge_upsert(spark, t, _mk(spark, [("a", 1), ("b", 2)]), ["k"], n_buckets=2)
     materialize.merge_upsert(
@@ -213,7 +265,7 @@ def test_lookup_by_key_typed_literals(spark, tmp_warehouse):
     df = spark.createDataFrame([(i, f"v{i}") for i in range(50)], "id long, s string")
     materialize.merge_upsert(spark, t, df, ["id"], n_buckets=8)
     for probe in (5, 42):
-        got = materialize.lookup_by_key(spark, t, ["id"], (probe,), n_buckets=8).collect()
+        got = materialize.lookup_by_key(spark, t, ["id"], (probe,)).collect()
         assert [(r["id"], r["s"]) for r in got] == [(probe, f"v{probe}")]
 
 
@@ -261,8 +313,8 @@ def test_rebucket_table(spark, tmp_warehouse):
     got = {(r["k"], r["v"]) for r in materialize.read_graph_table(spark, t).collect()}
     assert got == set(rows)
 
-    # point lookup with the STALE caller constant still prunes correctly
-    hit = materialize.lookup_by_key(spark, t, ["k"], ("k42",), n_buckets=4)
+    # point lookup resolves the new layout from metadata and still prunes
+    hit = materialize.lookup_by_key(spark, t, ["k"], ("k42",))
     assert [(r["k"], r["v"]) for r in hit.collect()] == [("k42", 42)]
     files = [f.replace("file:", "") for f in hit.inputFiles()]
     assert len({f.split("/bucket=")[1].split("/")[0] for f in files}) == 1
@@ -543,35 +595,6 @@ def test_metadata_files_expired_with_snapshots(spark, tmp_warehouse):
     assert materialize.read_graph_table(spark, t, snapshot=sids[0]).count() > 0
 
 
-def test_compact_legacy_table_does_not_stamp_bucket_count(spark, tmp_warehouse):
-    """Review r3: compacting a pre-metadata table whose real bucket count is
-    unrecorded must NOT stamp DEFAULT_MERGE_BUCKETS into the snapshot — a
-    wrong recorded count would override callers' n_buckets on later merges
-    and hash keys into the wrong bucket (missed match → duplicate row)."""
-    import shutil
-
-    t = os.path.join(tmp_warehouse, "legacy")
-    rows = [(f"k{i}", i) for i in range(40)]
-    materialize.merge_upsert(spark, t, _mk(spark, rows), ["k"], n_buckets=8)
-    # strip to the legacy layout: per-bucket CURRENT pointers, no metadata
-    for b in sorted(os.listdir(t)):
-        bdir = os.path.join(t, b)
-        if not b.startswith("bucket="):
-            continue
-        vs = sorted(x for x in os.listdir(bdir) if x.startswith("v_"))
-        with open(os.path.join(bdir, "CURRENT"), "w") as f:
-            f.write(vs[-1])
-    shutil.rmtree(os.path.join(t, "_metadata"))
-
-    materialize.compact_table(spark, t, max_files=0)
-    assert materialize.snapshots(t)[-1]["n_buckets"] is None
-    # later merge keeps the caller's (true) bucket count: update matches
-    materialize.merge_upsert(spark, t, _mk(spark, [("k0", 999)]), ["k"], n_buckets=8)
-    got = materialize.read_graph_table(spark, t)
-    assert got.count() == 40
-    assert got.filter(F.col("k") == "k0").collect()[0]["v"] == 999
-
-
 def _dirs_of(files):
     """{(bucket=N, v_X)} pairs actually opened by a DataFrame."""
     out = set()
@@ -767,7 +790,7 @@ def test_cluster_table_tightens_bounds_and_prunes(spark, tmp_warehouse):
     st = materialize._table_state(t)
     assert not st.get("deletes"), "clustering must fold MOR deletes"
     all_dirs = {(b, v) for b, vs in st["buckets"].items()
-                for v in materialize._as_dirs(vs)}
+                for v in vs}
     assert len(all_dirs) >= 6  # 2 buckets x ~4 range chunks
 
     narrow = materialize.read_graph_table_pruned(spark, t, {"v": (10, 30)})
@@ -852,7 +875,7 @@ def test_cluster_table_composite_sort_order(spark, tmp_warehouse):
     assert {(r["k"], r["v"]) for r in after.collect()} == before
     st = materialize._table_state(t)
     all_dirs = {(b, v) for b, vs in st["buckets"].items()
-                for v in materialize._as_dirs(vs)}
+                for v in vs}
     narrow = materialize.read_graph_table_pruned(spark, t, {"v": (0, 10)})
     assert {(r["k"], r["v"]) for r in narrow.collect()} == \
         {kv for kv in before if 0 <= kv[1] <= 10}
@@ -878,8 +901,7 @@ def test_cluster_table_zorder_prunes_every_dimension(spark, tmp_warehouse):
         materialize.cluster_table(
             spark, t, ["x", "y"], files_per_bucket=8, **cluster_kw)
         st = materialize._table_state(t)
-        n_dirs = sum(len(materialize._as_dirs(vs))
-                     for vs in st["buckets"].values())
+        n_dirs = sum(len(vs) for vs in st["buckets"].values())
         return t, n_dirs
 
     t_lex, lex_dirs = build("zorder_lex")
@@ -921,6 +943,27 @@ def test_cluster_table_zorder_rejects_string_column(spark, tmp_warehouse):
             materialize.read_graph_table(spark, t).collect()] == [("a", 1)]
 
 
+def test_cluster_table_releases_cache_on_error(spark, tmp_warehouse):
+    """The z-order rewrite persists each bucket's rows; a key-guard error
+    must not leave that frame cached for the rest of the session."""
+    import pytest
+    from pyspark import StorageLevel
+
+    t = os.path.join(tmp_warehouse, "zorder_leak")
+    rows = [(f"k{i}", i, i * 2) for i in range(20)]
+    materialize.merge_upsert(
+        spark, t, spark.createDataFrame(rows, "k string, x long, y long"),
+        ["k"], n_buckets=2)
+    with pytest.raises(ValueError, match="<= 63"):
+        materialize.cluster_table(spark, t, ["x", "y"], zorder=True,
+                                  zorder_bits=32)
+    st = materialize._table_state(t)
+    for b in st["buckets"]:
+        scan = materialize._snapshot_scan(spark, t, st, buckets=[b],
+                                          strict=False)
+        assert scan.storageLevel == StorageLevel.NONE, f"{b} left cached"
+
+
 def test_zorder_key_guards(spark, tmp_warehouse):
     """ADVICE r4: the interleaved key is a BIGINT — bits*ncols > 63 must
     raise (not silently wrap through the sign bit / Java shift-mod), a
@@ -937,13 +980,16 @@ def test_zorder_key_guards(spark, tmp_warehouse):
         materialize._with_zorder_key(
             df.withColumn("__zkey", F.lit(1)), ["a", "b"], bits=4)
     # bits=16 x 2 cols = 32 key bits: the top positions land at 31..30 —
-    # exactly where an int shift would wrap into the sign bit. With the
-    # bigint cast, rank(a) dominates every second bit so __zkey must be
-    # monotone in a on this fixture (b is a's mirror; ranks are exact at
-    # 64 rows << 2^16 ranks... the quantile splits give distinct ranks)
+    # exactly where an int shift would wrap into the sign bit. The 64 rows
+    # get 64 distinct ranks per column, and b = 63 - a, so in every bit
+    # pair b's bit (the higher position) is the complement of a's:
+    # __zkey = C - sum_k bit_k(rank a) * 4^k, strictly DECREASING in a.
+    # A wrap would break that order (or the sign).
     keyed = materialize._with_zorder_key(df, ["a", "b"], bits=16)
     got = [r["__zkey"] for r in keyed.orderBy("a").collect()]
     assert all(k >= 0 for k in got), "sign-bit wrap leaked into __zkey"
+    assert got == sorted(got, reverse=True)
+    assert len(set(got)) == 64
 
 
 def test_corrupt_tags_file_fails_closed(spark, tmp_warehouse):

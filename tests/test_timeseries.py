@@ -2,6 +2,7 @@
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from financial_knowledge_graphs_spark.operators.timeseries import asof_join, sessionize
@@ -312,6 +313,20 @@ def test_auto_hub_chunk_uniform_resolves_to_plain(spark):
     auto = {r["eid"]: r["session_num"]
             for r in ts.sessionize(ev, hub_chunk_seconds="auto", **kw).collect()}
     assert auto == plain
+
+
+@pytest.mark.parametrize("bad", ["Auto", "30", 0, -5.0, True, [30]])
+def test_hub_chunk_seconds_rejects_bad_values(spark, bad):
+    """The knob is checked where it is passed in: a typo or a numeric
+    string raises ValueError naming it, before any Spark job."""
+    from financial_knowledge_graphs_spark.operators import timeseries as ts
+
+    ev = spark.range(4).select(
+        F.col("id").alias("key"), F.timestamp_seconds("id").alias("ts"),
+        F.col("id").alias("eid"))
+    with pytest.raises(ValueError, match="hub_chunk_seconds"):
+        ts.sessionize(ev, key="key", time="ts", gap_seconds=30,
+                      tiebreak="eid", hub_chunk_seconds=bad)
 
 
 def test_auto_hub_chunk_engages_on_hub(spark, monkeypatch):
