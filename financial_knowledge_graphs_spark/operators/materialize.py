@@ -22,6 +22,8 @@ Semantics preserved from the reference:
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -545,6 +547,22 @@ def build_triples(raw_triples: DataFrame, mentions: DataFrame,
 # readers and subsequent merges resolve the layout from metadata, never
 # from a hardcoded constant, and zero-row tables read through the
 # recorded schema.
+#
+# Every writer (merge_upsert, rebucket_table, compact_table, cluster_table,
+# truncate_table) stages its files in one ``_staging`` dir, removed on
+# every exit, and hands them to ``_build_snapshot``: install the staged
+# dirs, read each one's parquet footers once (``_footer_stats``), build the
+# next snapshot from the base one, compare-and-swap commit, GC. Its rules:
+# - a REPLACED bucket holds exactly its new dirs and its deletes clear;
+# - an APPENDED bucket keeps its prior dirs and its stats add up;
+# - a DROPPED bucket (or a replaced one left without rows) loses its
+#   stats and deletes; a staged dir with no rows is never installed;
+# - ``dir_stats``/``dir_seq`` cover exactly the live data dirs; new dirs'
+#   sequence numbers are stamped with the commit's snapshot id;
+# - ``delete_keys`` is kept only while deletes remain: the table's
+#   recorded keys, else the merge's.
+# ``rollback_table`` is the one other commit: it copies its target's
+# metadata verbatim.
 # ---------------------------------------------------------------------------
 
 DEFAULT_MERGE_BUCKETS = 32  # one-box default; a real deployment sizes this
@@ -677,41 +695,19 @@ def _max_meta_sid(table_path: str) -> int:
     return max(_meta_sids_on_disk(table_path), default=0)
 
 
-def _bucket_file_stats(version_dir: str) -> dict:
-    """Manifest-level file stats from the parquet footers (rows + bytes) —
-    the metadata Iceberg keeps per data file; zero extra Spark jobs."""
+def _footer_stats(version_dir: str) -> tuple[dict, dict]:
+    """One pass over a dir's parquet footers — the manifest metadata Iceberg
+    keeps per data file, at zero extra Spark jobs: file stats (rows, bytes,
+    files) and per-column [min, max] from the row-group statistics. Only
+    JSON-safe atomic types (int/float/str/bool) get bounds; a column any of
+    whose chunks lacks stats is omitted (absent bounds == never prune,
+    always safe)."""
     import os
 
-    try:
-        import pyarrow.parquet as pq
-    except Exception:  # pragma: no cover - pyarrow is baked in
-        return {}
-    rows = 0
-    nbytes = 0
-    files = 0
-    for f in os.listdir(version_dir):
-        fp = os.path.join(version_dir, f)
-        if not (f.endswith(".parquet") and os.path.isfile(fp)):
-            continue
-        rows += pq.ParquetFile(fp).metadata.num_rows
-        nbytes += os.path.getsize(fp)
-        files += 1
-    return {"rows": rows, "bytes": nbytes, "files": files}
+    import pyarrow.parquet as pq
 
-
-def _dir_col_stats(version_dir: str) -> dict:
-    """Per-column [min, max] over a version dir's parquet files, from the
-    footer row-group statistics (the manifest column bounds Iceberg keeps
-    per data file) — zero extra Spark jobs. Only JSON-safe atomic types
-    (int/float/str/bool) are recorded; a column any of whose chunks lacks
-    stats is omitted (absent bounds == never prune, always safe)."""
-    import os
-
-    try:
-        import pyarrow.parquet as pq
-    except Exception:  # pragma: no cover - pyarrow is baked in
-        return {}
     ok_types = (int, float, str, bool)
+    totals = {"rows": 0, "bytes": 0, "files": 0}
     bounds: dict[str, list] = {}
     dead: set[str] = set()
     for f in os.listdir(version_dir):
@@ -719,6 +715,9 @@ def _dir_col_stats(version_dir: str) -> dict:
         if not (f.endswith(".parquet") and os.path.isfile(fp)):
             continue
         md = pq.ParquetFile(fp).metadata
+        totals["rows"] += md.num_rows
+        totals["bytes"] += os.path.getsize(fp)
+        totals["files"] += 1
         for rg in range(md.num_row_groups):
             g = md.row_group(rg)
             for ci in range(g.num_columns):
@@ -742,7 +741,7 @@ def _dir_col_stats(version_dir: str) -> dict:
                 else:
                     cur[0] = min(cur[0], st.min)
                     cur[1] = max(cur[1], st.max)
-    return bounds
+    return totals, bounds
 
 
 def read_graph_table_pruned(spark: SparkSession, table_path: str,
@@ -1045,9 +1044,6 @@ def tag_snapshot(table_path: str, name: str, snapshot_id: int | None = None) -> 
     the live snapshot. The audit/publish primitive: tag a validated
     snapshot ('published-2026-08-18') and readers pin to it while later
     merges keep landing."""
-    import json
-    import os
-
     with _commit_lock(table_path):
         sid = int(snapshot_id) if snapshot_id is not None else _live_sid(table_path)
         known = {s["snapshot_id"] for s in snapshots(table_path)}
@@ -1064,9 +1060,6 @@ def tag_snapshot(table_path: str, name: str, snapshot_id: int | None = None) -> 
 def drop_tag(table_path: str, name: str) -> None:
     """Drop a named ref; the snapshot re-enters normal retention and the
     next GC may expire it."""
-    import json
-    import os
-
     with _commit_lock(table_path):
         t = table_tags(table_path)
         if name not in t:
@@ -1081,10 +1074,11 @@ ORPHAN_STAGING_TTL_S = 3600.0  # age before a crashed attempt's staging dir
 
 
 def _gc_orphan_staging(table_path: str) -> None:
-    """Remove ``<table>__staging_<uuid>`` dirs left by crashed merge
-    attempts (the Iceberg ``remove_orphan_files`` analog). Age-gated:
-    a LIVE concurrent writer's staging dir must survive its own merge
-    window, so only dirs past ORPHAN_STAGING_TTL_S are dropped."""
+    """Remove ``<table>__staging_<uuid>`` dirs left by writer processes
+    that died mid-write (``_staging`` removes them on every other exit;
+    the Iceberg ``remove_orphan_files`` analog). Age-gated: a LIVE
+    concurrent writer's staging dir must survive its own write window, so
+    only dirs past ORPHAN_STAGING_TTL_S are dropped."""
     import os
     import shutil
     import time as _time
@@ -1199,6 +1193,168 @@ def _gc_versions_locked(table_path: str) -> None:
                 os.remove(mp)
         except OSError:
             pass
+
+
+@contextlib.contextmanager
+def _staging(table_path: str):
+    """A fresh ``<table>__staging_<uuid>`` dir for one write attempt —
+    concurrent writers and conflict retries never share one — removed on
+    every exit, error paths included. Only a process that dies mid-write
+    leaves it behind, for ``_gc_orphan_staging``."""
+    import shutil
+    import uuid
+
+    path = f"{table_path}__staging_{uuid.uuid4().hex[:12]}"
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def _staged_buckets(staging_dir: str) -> dict[str, list[str]]:
+    """bucket name → [staged dir] for a ``partitionBy("__bucket")`` write."""
+    import os
+
+    if not os.path.isdir(staging_dir):
+        return {}
+    return {
+        f"bucket={int(d.split('=', 1)[1])}": [os.path.join(staging_dir, d)]
+        for d in os.listdir(staging_dir)
+        if d.startswith("__bucket=") and os.path.isdir(os.path.join(staging_dir, d))
+    }
+
+
+def _build_snapshot(table_path: str, base: dict | None, n_buckets: int, schema,
+                    replace: dict[str, list[str]] | None = None,
+                    append: dict[str, list[str]] | None = None,
+                    drop: list[str] = (),
+                    add_deletes: dict[str, list[str]] | None = None,
+                    delete_keys: list[str] | None = None) -> int:
+    """THE snapshot builder every table writer commits through (rules in
+    the section comment above). ``base`` is the state the writer staged
+    against (None for a first write); ``replace``/``append``/``add_deletes``
+    map bucket name → staged dirs (data, data, equality-delete);
+    ``drop`` names buckets to remove. Installs the staged dirs, reads each
+    data dir's footers once, compare-and-swap commits against ``base``
+    (CommitConflictError if another writer landed since), then expires
+    versions beyond retention. Returns the new snapshot id."""
+    import os
+
+    base = base or {}
+    buckets = dict(base.get("buckets") or {})
+    stats = dict(base.get("stats") or {})
+    dir_stats = dict(base.get("dir_stats") or {})
+    dir_seq = dict(base.get("dir_seq") or {})
+    deletes = {b: list(v) for b, v in (base.get("deletes") or {}).items()}
+
+    for b in (*drop, *(replace or {})):
+        # dropped and replaced buckets start empty; a rewrite's resolved
+        # read already applied the bucket's deletes
+        buckets.pop(b, None)
+        stats.pop(b, None)
+        deletes.pop(b, None)
+    for b, staged in [*(replace or {}).items(), *(append or {}).items()]:
+        bdir = os.path.join(table_path, b)
+        for src in staged:
+            fs, bounds = _footer_stats(src)
+            if not fs["rows"]:
+                continue  # an empty range chunk, or a bucket deletes emptied
+            os.makedirs(bdir, exist_ok=True)
+            nxt = _install_version(src, bdir)
+            buckets[b] = buckets.get(b, []) + [nxt]
+            old = stats.get(b) or {}
+            stats[b] = {k: old.get(k, 0) + n for k, n in fs.items()}
+            dir_stats[f"{b}/{nxt}"] = bounds
+            dir_seq[f"{b}/{nxt}"] = None  # stamped with the commit's sid
+    for b, staged in (add_deletes or {}).items():
+        bdir = os.path.join(table_path, b)
+        os.makedirs(bdir, exist_ok=True)
+        deletes.setdefault(b, []).extend(
+            [_install_version(src, bdir), None] for src in staged)
+    live = {f"{b}/{v}" for b, vs in buckets.items() for v in vs}
+    deletes = {b: v for b, v in deletes.items() if b in buckets and v}
+    sid = _commit_snapshot(
+        table_path, buckets, n_buckets, schema,
+        {b: s for b, s in stats.items() if b in buckets},
+        base_sid=base.get("snapshot_id", 0),
+        dir_stats={k: v for k, v in dir_stats.items() if k in live},
+        deletes=deletes,
+        dir_seq={k: v for k, v in dir_seq.items() if k in live},
+        delete_keys=(base.get("delete_keys") or delete_keys) if deletes else None,
+    )
+    _gc_versions(table_path)
+    return sid
+
+
+def _check_count(name: str, value, minimum: int = 1) -> None:
+    """Table knobs are ints (not bools) >= ``minimum``, checked where they
+    are passed in — before any Spark job, whose failure would be opaque."""
+    if isinstance(value, bool) or not isinstance(value, int) or value < minimum:
+        raise ValueError(f"{name} must be an int >= {minimum}, got {value!r}")
+
+
+def _retained_snapshot(table_path: str, sid: int) -> dict:
+    """Metadata of committed snapshot ``sid``, which must still be within
+    the retention window (time travel, rollback, CDC)."""
+    meta = _load_meta(table_path, sid)
+    if meta is None:
+        raise ValueError(
+            f"no snapshot {sid} recorded for {table_path} (expired past "
+            f"retention={SNAPSHOT_RETENTION}, or never committed)"
+        )
+    return meta
+
+
+def _retained_dirs(table_path: str, sid: int,
+                   dirs: list[tuple[str, str]]) -> list[str]:
+    """Paths of the (bucket, version dir) pairs snapshot ``sid`` references;
+    ValueError if retention GC already removed one."""
+    import os
+
+    out = []
+    for b, v in dirs:
+        p = os.path.join(table_path, b, v)
+        if not os.path.isdir(p):
+            raise ValueError(
+                f"snapshot {sid} expired (bucket {b} version {v} GC'd; "
+                f"retention={SNAPSHOT_RETENTION})"
+            )
+        out.append(p)
+    return out
+
+
+def _changed_buckets(table_path: str, from_sid: int, to_sid: int):
+    """The change plan both CDC readers (``read_table_changes`` and the
+    streaming ``graph_table_changes`` source) follow, from snapshot
+    metadata alone. Returns ``(a, b, grown, rewritten)``: the two
+    snapshots (sid 0 = the empty table before the first commit); ``grown``
+    maps each bucket whose version-dir set only grew, with unchanged
+    deletes, to its sorted new dirs — their sequence numbers exceed every
+    pending delete's, so none of their rows are hidden and they ship as
+    inserts at file granularity; ``rewritten`` lists every other changed
+    bucket (rewritten, dropped, or given new equality deletes), which needs
+    a row-level diff. Untouched buckets are in neither: zero I/O."""
+    def _snap(sid: int) -> dict:
+        if sid == 0:
+            return {"snapshot_id": 0, "buckets": {}, "schema": None}
+        return _retained_snapshot(table_path, sid)
+
+    a, b = _snap(from_sid), _snap(to_sid)
+    dels_a = a.get("deletes") or {}
+    dels_b = b.get("deletes") or {}
+    grown: dict[str, list[str]] = {}
+    rewritten: list[str] = []
+    for bk in sorted(set(a["buckets"]) | set(b["buckets"])):
+        da = set(a["buckets"].get(bk, []))
+        db = set(b["buckets"].get(bk, []))
+        same_dels = dels_a.get(bk, []) == dels_b.get(bk, [])
+        if da == db and same_dels:
+            continue
+        if da <= db and same_dels:
+            grown[bk] = sorted(db - da)
+        else:
+            rewritten.append(bk)
+    return a, b, grown, rewritten
 
 
 def table_exists(table_path: str) -> bool:
@@ -1383,9 +1539,7 @@ def read_graph_table(spark: SparkSession, table_path: str,
                              f"(tags: {sorted(refs)})")
         snapshot = refs[tag]
     if snapshot is not None:
-        snap = _load_meta(table_path, snapshot)
-        if snap is None:
-            raise ValueError(f"no snapshot {snapshot} recorded for {table_path}")
+        snap = _retained_snapshot(table_path, snapshot)
         out = _snapshot_scan(spark, table_path, snap, strict=True)
         return _empty_df(spark, snap) if out is None else out
 
@@ -1418,20 +1572,6 @@ def read_table_changes(spark: SparkSession, table_path: str,
     expired metadata or GC'd dirs raise ValueError, same as time travel.
     Rows are read through the TO snapshot's schema, so a column added
     between the two snapshots reads as NULL on the old images."""
-    import os
-
-    def _snap(sid: int) -> dict:
-        if sid == 0:
-            return {"snapshot_id": 0, "buckets": {}, "schema": None}
-        meta = _load_meta(table_path, sid)
-        if meta is None:
-            raise ValueError(
-                f"no snapshot {sid} recorded for {table_path} "
-                f"(expired past retention={SNAPSHOT_RETENTION}, or never "
-                f"committed)"
-            )
-        return meta
-
     if to_snapshot is None:
         to_snapshot = _live_sid(table_path)
     if from_snapshot > to_snapshot:
@@ -1443,40 +1583,11 @@ def read_table_changes(spark: SparkSession, table_path: str,
             f"read_table_changes: from_snapshot={from_snapshot} > "
             f"to_snapshot={to_snapshot} for {table_path}"
         )
-    a = _snap(from_snapshot)
-    b = _snap(to_snapshot)
-
-    def _paths(sid: int, bucket: str, dirs) -> list[str]:
-        out = []
-        for v in sorted(dirs):
-            p = os.path.join(table_path, bucket, v)
-            if not os.path.isdir(p):
-                raise ValueError(
-                    f"snapshot {sid} expired (bucket {bucket} version {v} "
-                    f"GC'd; retention={SNAPSHOT_RETENTION})"
-                )
-            out.append(p)
-        return out
-
-    append_paths: list[str] = []
-    diff_buckets: list[str] = []
-    dels_a = a.get("deletes") or {}
-    dels_b = b.get("deletes") or {}
-    for bk in set(a["buckets"]) | set(b["buckets"]):
-        da = set(a["buckets"].get(bk, []))
-        db = set(b["buckets"].get(bk, []))
-        same_dels = dels_a.get(bk, []) == dels_b.get(bk, [])
-        if da == db and same_dels:
-            continue  # untouched bucket: zero I/O
-        if da <= db and same_dels:
-            # pure growth with unchanged deletes: the new dirs' sequence
-            # numbers exceed every pending delete's, so none of their rows
-            # are hidden — ship them at file granularity, zero old-data I/O
-            append_paths += _paths(to_snapshot, bk, db - da)
-        else:
-            # rewritten, or merge-on-read commit (new equality deletes):
-            # row-level multiset diff over the bucket's RESOLVED rows
-            diff_buckets.append(bk)
+    a, b, grown, diff_buckets = _changed_buckets(table_path, from_snapshot,
+                                                 to_snapshot)
+    append_paths = _retained_dirs(
+        table_path, to_snapshot,
+        [(bk, v) for bk, dirs in grown.items() for v in dirs])
 
     parts = []
     if append_paths:
@@ -1571,29 +1682,15 @@ def rollback_table(table_path: str, snapshot_id: int) -> int:
     handled by the usual compare-and-swap: a merge landing after the
     rollback read its state raises CommitConflictError here (offline
     maintenance op — rerun after inspecting the winner)."""
-    import os
-
     from pyspark.sql.types import StructType
 
-    meta = _load_meta(table_path, snapshot_id)
-    if meta is None:
-        raise ValueError(
-            f"no snapshot {snapshot_id} recorded for {table_path} "
-            f"(expired past retention={SNAPSHOT_RETENTION}, or never "
-            f"committed)"
-        )
-    targets = [
+    meta = _retained_snapshot(table_path, snapshot_id)
+    _retained_dirs(table_path, snapshot_id, [
         (b, v) for b, vs in meta["buckets"].items() for v in vs
     ] + [
         (b, d) for b, items in (meta.get("deletes") or {}).items()
         for d, _ in items
-    ]
-    for b, v in targets:
-        if not os.path.isdir(os.path.join(table_path, b, v)):
-            raise ValueError(
-                f"snapshot {snapshot_id} expired (bucket {b} version "
-                f"{v} GC'd; retention={SNAPSHOT_RETENTION})"
-            )
+    ])
     return _commit_snapshot(
         table_path, meta["buckets"], meta["n_buckets"],
         StructType.fromJson(meta["schema"]),
@@ -1636,12 +1733,9 @@ def truncate_table(table_path: str) -> None:
         return
     for _ in range(MERGE_COMMIT_RETRIES):
         try:
-            _commit_snapshot(
-                table_path, {}, state["n_buckets"],
-                StructType.fromJson(state["schema"]), stats={},
-                base_sid=state["snapshot_id"],
-            )
-            _gc_versions(table_path)
+            _build_snapshot(table_path, state, state["n_buckets"],
+                            StructType.fromJson(state["schema"]),
+                            drop=list(state["buckets"]))
             return
         except CommitConflictError:
             state = _table_state(table_path)  # a merge won the race; retry
@@ -1689,6 +1783,7 @@ def merge_upsert(spark: SparkSession, table_path: str, updates: DataFrame,
     """
     if mode not in ("cow", "mor"):
         raise ValueError(f"merge mode must be 'cow' or 'mor', got {mode!r}")
+    _check_count("n_buckets", n_buckets)
     # dedup once and PERSIST: the attempt evaluates this frame 3-5 times
     # (bucket-discovery collect, matched semi-join, survivors anti-join,
     # data write, MOR delete write) — unpersisted, each evaluation re-runs
@@ -1720,12 +1815,10 @@ def _merge_upsert_attempt(spark: SparkSession, table_path: str,
                           deletes: DataFrame | None = None,
                           mode: str = "cow") -> None:
     import os
-    import shutil
 
     from functools import reduce
 
     state = _table_state(table_path)
-    base_sid = state["snapshot_id"] if state else 0
     if state:
         # the table's recorded layout wins over the caller's default —
         # after rebucket_table, merges keep hashing into the NEW layout
@@ -1743,7 +1836,6 @@ def _merge_upsert_attempt(spark: SparkSession, table_path: str,
     # merge_upsert (see there); only the layout-dependent bucket column is
     # added per attempt.
     dedup = updates.withColumn("__bucket", _bucket_expr(keys, n_buckets))
-    exists = state is not None
     # ONE driver-blocking job answers all three head questions (any update
     # rows? any delete rows? which buckets touched?) — these were three
     # separate jobs, and at ~0.5s scheduling latency each across the 4-5
@@ -1764,119 +1856,100 @@ def _merge_upsert_attempt(spark: SparkSession, table_path: str,
     del_buckets = per_src.get(1, set())
     if not del_buckets:
         deletes = None
-    if exists and deletes is None and not upd_buckets:
+    if state and deletes is None and not upd_buckets:
         return  # nothing to merge; don't churn the table (snapshot no-op)
-    pre_touched = sorted(upd_buckets | del_buckets)
-
-    # per-attempt staging dir: concurrent writers (and conflict retries)
-    # must not clobber each other's staged files before commit
-    import uuid
-
-    staging = f"{table_path}__staging_{uuid.uuid4().hex[:12]}"
-    shutil.rmtree(staging, ignore_errors=True)
+    touched = sorted(upd_buckets | del_buckets)
 
     dirty: set[int] = set()
     mor: set[int] = set()  # matched buckets taking the merge-on-read path
     mor_gone = None        # their equality-delete key frame
-    if exists:
-        touched = pre_touched
-        # read ONLY the touched buckets' live data files
-        if prev_map:
-            # resolved through _snapshot_scan: schema-evolution-safe (reads
-            # through the snapshot's recorded schema, not footer inference)
-            # AND merge-on-read-safe (pending equality deletes applied — a
-            # MOR-hidden row must not count as a match nor survive a
-            # rewrite, or deleted rows would resurrect)
-            scan = _snapshot_scan(
-                spark, table_path, state,
-                buckets=[f"bucket={b}" for b in touched], strict=False,
-            )
-            existing = (
-                scan.withColumn("__bucket", _bucket_expr(keys, n_buckets))
-                if scan is not None else None
-            )
-        else:
-            # committed zero-row table (empty or truncated snapshot):
-            # behaves like a first write — install every staged bucket
-            touched = None
-            existing = None
-        if existing is not None:
-            # NULL-SAFE key equality: merge keys include nullable columns
-            # (percentage / transactionDate on triples); a plain anti-join's
-            # NULL != NULL would let an identical re-merged row survive and
-            # duplicate — exactly the crash-replay case MERGE must absorb.
-            gone = dedup.select(*keys)
-            if deletes is not None:
-                gone = gone.unionByName(deletes)
-            gone = gone.distinct()
-            cond = reduce(
-                lambda a, b: a & b,
-                [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys],
-            )
-            # APPEND FAST PATH (the steady-state-ingest scale property): a
-            # bucket none of whose existing rows matches an update/delete
-            # key is CLEAN — its files stay referenced as-is and only the
-            # new rows are written. Without this, every batch of
-            # uniformly-hashed new keys (new doc ids!) touches every bucket
-            # and copy-on-write rewrites the WHOLE table: O(history) writes
-            # per batch. With it, clean buckets cost O(batch) writes; a
-            # bucket accumulating > AUTO_COMPACT_FILES data files is folded
-            # into the rewrite (inline compaction — amortized O(history /
-            # AUTO_COMPACT_FILES), the Iceberg rewrite_data_files analog).
-            matched = {
-                r["__bucket"]
-                for r in existing.alias("t")
-                .join(gone.alias("s"), cond, "left_semi")
-                .select("__bucket").distinct().collect()
+    merged = dedup
+    existing = None
+    # read ONLY the touched buckets' live data files. A first write or a
+    # committed zero-row table (empty or truncated snapshot) reads nothing:
+    # every staged bucket lands as an append onto an empty bucket.
+    if prev_map:
+        # resolved through _snapshot_scan: schema-evolution-safe (reads
+        # through the snapshot's recorded schema, not footer inference)
+        # AND merge-on-read-safe (pending equality deletes applied — a
+        # MOR-hidden row must not count as a match nor survive a
+        # rewrite, or deleted rows would resurrect)
+        scan = _snapshot_scan(
+            spark, table_path, state,
+            buckets=[f"bucket={b}" for b in touched], strict=False,
+        )
+        if scan is not None:
+            existing = scan.withColumn("__bucket", _bucket_expr(keys, n_buckets))
+    if existing is not None:
+        # NULL-SAFE key equality: merge keys include nullable columns
+        # (percentage / transactionDate on triples); a plain anti-join's
+        # NULL != NULL would let an identical re-merged row survive and
+        # duplicate — exactly the crash-replay case MERGE must absorb.
+        gone = dedup.select(*keys)
+        if deletes is not None:
+            gone = gone.unionByName(deletes)
+        gone = gone.distinct()
+        cond = reduce(
+            lambda a, b: a & b,
+            [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys],
+        )
+        # APPEND FAST PATH (the steady-state-ingest scale property): a
+        # bucket none of whose existing rows matches an update/delete
+        # key is CLEAN — its files stay referenced as-is and only the
+        # new rows are written. Without this, every batch of
+        # uniformly-hashed new keys (new doc ids!) touches every bucket
+        # and copy-on-write rewrites the WHOLE table: O(history) writes
+        # per batch. With it, clean buckets cost O(batch) writes; a
+        # bucket accumulating > AUTO_COMPACT_FILES data files is folded
+        # into the rewrite (inline compaction — amortized O(history /
+        # AUTO_COMPACT_FILES), the Iceberg rewrite_data_files analog).
+        matched = {
+            r["__bucket"]
+            for r in existing.alias("t")
+            .join(gone.alias("s"), cond, "left_semi")
+            .select("__bucket").distinct().collect()
+        }
+        if mode == "mor" and matched:
+            prior_dk = state.get("delete_keys")
+            if prior_dk and list(prior_dk) != list(keys):
+                raise ValueError(
+                    f"{table_path}: merge-on-read requires a stable key "
+                    f"set per table (recorded {prior_dk}, got {keys}) — "
+                    f"equality-delete files join on their own columns"
+                )
+            prior_dels = state.get("deletes") or {}
+            # a matched bucket stays merge-on-read only while BOTH its
+            # file counts stay under the cap; past it, fold into a
+            # copy-on-write rewrite (applies + clears its deletes) —
+            # bounded read amplification, Iceberg's compaction contract
+            mor = {
+                b for b in matched
+                if len(prev_map.get(f"bucket={b}", [])) + 1 <= AUTO_COMPACT_FILES
+                and len(prior_dels.get(f"bucket={b}", [])) + 1 <= AUTO_COMPACT_FILES
             }
-            if mode == "mor" and matched:
-                prior_dk = (state or {}).get("delete_keys")
-                if prior_dk and list(prior_dk) != list(keys):
-                    raise ValueError(
-                        f"{table_path}: merge-on-read requires a stable key "
-                        f"set per table (recorded {prior_dk}, got {keys}) — "
-                        f"equality-delete files join on their own columns"
-                    )
-                prior_dels = (state or {}).get("deletes") or {}
-                # a matched bucket stays merge-on-read only while BOTH its
-                # file counts stay under the cap; past it, fold into a
-                # copy-on-write rewrite (applies + clears its deletes) —
-                # bounded read amplification, Iceberg's compaction contract
-                mor = {
-                    b for b in matched
-                    if len(prev_map.get(f"bucket={b}", [])) + 1 <= AUTO_COMPACT_FILES
-                    and len(prior_dels.get(f"bucket={b}", [])) + 1 <= AUTO_COMPACT_FILES
-                }
-            dirty |= matched - mor
-            dirty |= {
-                b for b in (touched or [])
-                if b not in mor
-                and len(prev_map.get(f"bucket={b}", [])) + 1 > AUTO_COMPACT_FILES
-            }
-            if mor:
-                # the batch's key tuples, restricted to MOR buckets — the
-                # equality-delete file content (Iceberg streaming-upsert
-                # writers emit a delete for every upsert key; applying a
-                # delete for an unmatched key is a no-op by construction)
-                mor_gone = gone.withColumn(
-                    "__bucket", _bucket_expr(keys, n_buckets)
-                ).filter(F.col("__bucket").isin(*[int(x) for x in mor]))
-            if dirty:
-                survivors = existing.alias("t").join(
-                    gone.alias("s"), cond, "left_anti"
-                ).filter(F.col("__bucket").isin(*[int(b) for b in dirty]))
-                # allowMissingColumns = ADD-COLUMN schema evolution: updates
-                # may introduce columns (survivors read NULL) or omit old
-                # ones (replaced rows get NULL — MERGE UPDATE SET * from a
-                # narrower source); the evolved schema is recorded below
-                merged = survivors.unionByName(dedup, allowMissingColumns=True)
-            else:
-                merged = dedup
-        else:
-            merged = dedup
-    else:
-        touched = None  # first write: install every bucket present in updates
-        merged = dedup
+        dirty |= matched - mor
+        dirty |= {
+            b for b in touched
+            if b not in mor
+            and len(prev_map.get(f"bucket={b}", [])) + 1 > AUTO_COMPACT_FILES
+        }
+        if mor:
+            # the batch's key tuples, restricted to MOR buckets — the
+            # equality-delete file content (Iceberg streaming-upsert
+            # writers emit a delete for every upsert key; applying a
+            # delete for an unmatched key is a no-op by construction)
+            mor_gone = gone.withColumn(
+                "__bucket", _bucket_expr(keys, n_buckets)
+            ).filter(F.col("__bucket").isin(*[int(x) for x in mor]))
+        if dirty:
+            survivors = existing.alias("t").join(
+                gone.alias("s"), cond, "left_anti"
+            ).filter(F.col("__bucket").isin(*[int(b) for b in dirty]))
+            # allowMissingColumns = ADD-COLUMN schema evolution: updates
+            # may introduce columns (survivors read NULL) or omit old
+            # ones (replaced rows get NULL — MERGE UPDATE SET * from a
+            # narrower source); the evolved schema is recorded below
+            merged = survivors.unionByName(dedup, allowMissingColumns=True)
 
     # co-locate each bucket in one task before the partitioned write: without
     # this, partitionBy emits one file per (shuffle-task × bucket) pair —
@@ -1884,111 +1957,30 @@ def _merge_upsert_attempt(spark: SparkSession, table_path: str,
     # __bucket gives exactly one file per bucket (at real scale, pair with
     # spark.sql.files.maxRecordsPerFile to re-split oversized buckets).
     # Only dirty buckets' survivors + the new rows cross this shuffle.
-    merged.repartition(n_buckets, F.col("__bucket")).write.partitionBy(
-        "__bucket"
-    ).mode("overwrite").parquet(staging)
-    del_staging = None
-    if mor_gone is not None:
-        # equality-delete files staged exactly like data files: one dir per
-        # MOR bucket, installed as ordinary immutable version dirs and only
-        # made visible by the snapshot's `deletes` map at the hint swap
-        del_staging = f"{table_path}__staging_{uuid.uuid4().hex[:12]}"
-        mor_gone.repartition(max(len(mor), 1), F.col("__bucket")).write.partitionBy(
+    with _staging(table_path) as staging:
+        merged.repartition(n_buckets, F.col("__bucket")).write.partitionBy(
             "__bucket"
-        ).mode("overwrite").parquet(del_staging)
-
-    # STAGE: move each staged bucket dir to a fresh immutable version dir.
-    # No pointers move here — until the hint swap below, readers still
-    # resolve the previous snapshot, so there is never a torn cross-bucket
-    # state (ADVICE r2 medium: per-bucket commits tore mid-crash).
-    staged = [
-        d for d in os.listdir(staging)
-        if d.startswith("__bucket=") and os.path.isdir(os.path.join(staging, d))
-    ]
-    new_map = dict(prev_map)
-    # untouched/clean buckets inherit their commit-time file stats; dirty
-    # ones get fresh footer stats, appended ones accumulate (manifest-level
-    # stats, Iceberg-style)
-    new_stats = {
-        k: v for k, v in ((state or {}).get("stats") or {}).items() if k in new_map
-    }
-    new_dir_stats = dict((state or {}).get("dir_stats") or {})
-    # merge-on-read bookkeeping: pending equality deletes + data sequence
-    # numbers carry forward; COW-rewritten (and first-write) buckets clear
-    # their deletes — the resolved survivor read already applied them
-    new_deletes = {
-        b: list(items)
-        for b, items in (((state or {}).get("deletes") or {}).items())
-    } if touched is not None else {}
-    new_dir_seq = dict((state or {}).get("dir_seq") or {})
-    installed = set()
-    for d in staged:
-        b = int(d.split("=", 1)[1])
-        if touched is not None and b not in touched:
-            continue  # defensive; staged buckets always ⊆ touched ∪ first-write
-        bname = f"bucket={b}"
-        bdir = os.path.join(table_path, bname)
-        os.makedirs(bdir, exist_ok=True)
-        nxt = _install_version(os.path.join(staging, d), bdir)
-        fresh = _bucket_file_stats(os.path.join(bdir, nxt))
-        new_dir_stats[f"{bname}/{nxt}"] = _dir_col_stats(os.path.join(bdir, nxt))
-        new_dir_seq[f"{bname}/{nxt}"] = None  # stamped with the commit's sid
-        if b in dirty or touched is None or not new_map.get(bname):
-            # full rewrite (or first write): the new dir IS the bucket
-            new_map[bname] = [nxt]
-            new_stats[bname] = fresh
-        else:
-            # clean append: prior files stay live, stats accumulate
-            new_map[bname] = new_map[bname] + [nxt]
-            old = new_stats.get(bname) or {}
-            new_stats[bname] = {
-                k: old.get(k, 0) + fresh.get(k, 0)
-                for k in ("rows", "bytes", "files")
-            }
-        installed.add(b)
-    # DIRTY buckets with NO staged rows were fully emptied by deletes: drop
-    # them from the snapshot map — an unmapped bucket reads as empty. Clean
-    # touched buckets without staged rows (a delete that matched nothing)
-    # keep their files.
-    for b in dirty:
-        new_deletes.pop(f"bucket={b}", None)  # rewrite applied them
-        if b not in installed:
-            new_map.pop(f"bucket={b}", None)
-            new_stats.pop(f"bucket={b}", None)
-    if del_staging is not None:
-        for d in os.listdir(del_staging):
-            if not (d.startswith("__bucket=")
-                    and os.path.isdir(os.path.join(del_staging, d))):
-                continue
-            b = int(d.split("=", 1)[1])
-            bname = f"bucket={b}"
-            bdir = os.path.join(table_path, bname)
-            os.makedirs(bdir, exist_ok=True)
-            nxt = _install_version(os.path.join(del_staging, d), bdir)
-            new_deletes.setdefault(bname, []).append([nxt, None])
-        shutil.rmtree(del_staging, ignore_errors=True)
-    # per-dir column bounds follow the bucket map: entries for dirs no
-    # longer referenced are dropped with them
-    live_dirs = {f"{b}/{v}" for b, vs in new_map.items() for v in vs}
-    new_dir_stats = {k: v for k, v in new_dir_stats.items() if k in live_dirs}
-    new_dir_seq = {k: v for k, v in new_dir_seq.items() if k in live_dirs}
-    new_deletes = {b: v for b, v in new_deletes.items() if b in new_map and v}
-    shutil.rmtree(staging, ignore_errors=True)
-    os.makedirs(table_path, exist_ok=True)  # zero-row first write still commits
-    # COMMIT: one atomic compare-and-swap installs the whole snapshot (a
-    # conflict raises to the retry wrapper); then expire versions beyond
-    # the retention window (prior snapshots stay readable via time travel)
-    # keys recorded for the surviving delete files: the set that WROTE them
-    # (the MOR guard enforces stability, so prior and current agree when
-    # both contribute)
-    delete_keys = (
-        ((state or {}).get("delete_keys") or list(keys)) if new_deletes else None
-    )
-    _commit_snapshot(table_path, new_map, n_buckets, schema, new_stats,
-                     base_sid=base_sid, dir_stats=new_dir_stats,
-                     deletes=new_deletes, dir_seq=new_dir_seq,
-                     delete_keys=delete_keys)
-    _gc_versions(table_path)
+        ).mode("overwrite").parquet(os.path.join(staging, "data"))
+        if mor_gone is not None:
+            # equality-delete files staged exactly like data files: one dir
+            # per MOR bucket, installed as ordinary immutable version dirs
+            # and only made visible by the snapshot's `deletes` map
+            mor_gone.repartition(max(len(mor), 1), F.col("__bucket")).write.partitionBy(
+                "__bucket"
+            ).mode("overwrite").parquet(os.path.join(staging, "deletes"))
+        # dirty buckets are rewritten — dropped from the map when deletes
+        # emptied them (an unmapped bucket reads as empty); every other
+        # staged bucket is a clean append (or a first write). One atomic
+        # compare-and-swap installs the whole snapshot — a conflict raises
+        # to the retry wrapper.
+        staged = _staged_buckets(os.path.join(staging, "data"))
+        rewrite = {f"bucket={b}": staged.pop(f"bucket={b}", []) for b in dirty}
+        _build_snapshot(
+            table_path, state, n_buckets, schema, replace=rewrite,
+            append=staged,
+            add_deletes=_staged_buckets(os.path.join(staging, "deletes")),
+            delete_keys=list(keys),
+        )
 
 
 def rebucket_table(spark: SparkSession, table_path: str, keys: list[str],
@@ -2017,44 +2009,18 @@ def rebucket_table(spark: SparkSession, table_path: str, keys: list[str],
     CommitConflictError here (no auto-retry — rerun against the new
     snapshot); the CAS guarantees the rewrite never erases that merge.
     """
-    import os
-    import shutil
-    import uuid
-
+    _check_count("new_buckets", new_buckets)
     state = _table_state(table_path)
-    base_sid = state["snapshot_id"] if state else 0
     rows = read_graph_table(spark, table_path)
-    schema = rows.schema
-    dedup = rows.withColumn("__bucket", _bucket_expr(keys, new_buckets))
-    staging = f"{table_path}__staging_{uuid.uuid4().hex[:12]}"
-    shutil.rmtree(staging, ignore_errors=True)
-    dedup.repartition(new_buckets, F.col("__bucket")).write.partitionBy(
-        "__bucket"
-    ).mode("overwrite").parquet(staging)
-
-    new_map: dict[str, list[str]] = {}
-    new_stats: dict[str, dict] = {}
-    new_dir_stats: dict[str, dict] = {}
-    new_dir_seq: dict[str, int | None] = {}
-    for d in os.listdir(staging):
-        if not (d.startswith("__bucket=") and os.path.isdir(os.path.join(staging, d))):
-            continue
-        b = int(d.split("=", 1)[1])
-        bdir = os.path.join(table_path, f"bucket={b}")
-        os.makedirs(bdir, exist_ok=True)
-        nxt = _install_version(os.path.join(staging, d), bdir)
-        new_map[f"bucket={b}"] = [nxt]
-        new_stats[f"bucket={b}"] = _bucket_file_stats(os.path.join(bdir, nxt))
-        new_dir_stats[f"bucket={b}/{nxt}"] = _dir_col_stats(os.path.join(bdir, nxt))
-        new_dir_seq[f"bucket={b}/{nxt}"] = None
-    shutil.rmtree(staging, ignore_errors=True)
-    os.makedirs(table_path, exist_ok=True)
-    # the resolved full read applied any pending equality deletes, so the
-    # re-bucketed table starts with a clean (delete-free) MOR state
-    _commit_snapshot(table_path, new_map, new_buckets, schema, new_stats,
-                     base_sid=base_sid, dir_stats=new_dir_stats,
-                     dir_seq=new_dir_seq)
-    _gc_versions(table_path)
+    with _staging(table_path) as staging:
+        rows.withColumn("__bucket", _bucket_expr(keys, new_buckets)).repartition(
+            new_buckets, F.col("__bucket")
+        ).write.partitionBy("__bucket").mode("overwrite").parquet(staging)
+        # the resolved full read applied any pending equality deletes, so
+        # the re-bucketed table starts with a clean (delete-free) MOR state
+        _build_snapshot(table_path, state, new_buckets, rows.schema,
+                        drop=list(state["buckets"]),
+                        replace=_staged_buckets(staging))
 
 
 def compact_table(spark: SparkSession, table_path: str,
@@ -2070,13 +2036,13 @@ def compact_table(spark: SparkSession, table_path: str,
     CommitConflictError (no auto-retry; rerun — content is unchanged by
     compaction, so nothing is lost by deferring)."""
     import os
-    import shutil
-    import uuid
 
+    from pyspark.sql.types import StructType
+
+    _check_count("max_files", max_files, minimum=0)
     state = _table_state(table_path)
     if not state:
         return
-    base_sid = state["snapshot_id"]
     pending_dels = state.get("deletes") or {}
     # a bucket compacts when its data files pass the threshold OR it holds
     # merge-on-read equality-delete files — compaction is what reconciles
@@ -2088,46 +2054,24 @@ def compact_table(spark: SparkSession, table_path: str,
     ]
     if not todo:
         return
-    staging = f"{table_path}__staging_{uuid.uuid4().hex[:12]}"
-    shutil.rmtree(staging, ignore_errors=True)
-    # each over-full bucket is read and rewritten independently (bounded:
-    # only buckets past the threshold; rows already belong to their bucket)
-    new_map = dict(state["buckets"])
-    new_stats = dict(state.get("stats") or {})
-    new_dir_stats = dict(state.get("dir_stats") or {})
-    new_deletes = {b: list(v) for b, v in pending_dels.items()}
-    new_dir_seq = dict(state.get("dir_seq") or {})
-    for b in todo:
-        # resolved read: applies the bucket's pending equality deletes
-        # (which this rewrite then CLEARS) and resolves mixed-schema files
-        # through the snapshot's recorded schema — footer inference could
-        # drop an evolved column for the whole compacted bucket
-        rows = _snapshot_scan(spark, table_path, state, buckets=[b],
-                              strict=False)
-        if rows is None:
-            continue
-        out = os.path.join(staging, b)
-        rows.coalesce(1).write.mode("overwrite").parquet(out)
-        bdir = os.path.join(table_path, b)
-        nxt = _install_version(out, bdir)
-        new_map[b] = [nxt]
-        new_stats[b] = _bucket_file_stats(os.path.join(bdir, nxt))
-        new_dir_stats[f"{b}/{nxt}"] = _dir_col_stats(os.path.join(bdir, nxt))
-        new_dir_seq[f"{b}/{nxt}"] = None  # stamped with the commit's sid
-        new_deletes.pop(b, None)  # applied by the rewrite
-    shutil.rmtree(staging, ignore_errors=True)
-    live_dirs = {f"{b}/{v}" for b, vs in new_map.items() for v in vs}
-    new_dir_stats = {k: v for k, v in new_dir_stats.items() if k in live_dirs}
-    new_dir_seq = {k: v for k, v in new_dir_seq.items() if k in live_dirs}
-    new_deletes = {b: v for b, v in new_deletes.items() if b in new_map and v}
-    from pyspark.sql.types import StructType
-
-    _commit_snapshot(table_path, new_map, state["n_buckets"],
-                     StructType.fromJson(state["schema"]), new_stats,
-                     base_sid=base_sid, dir_stats=new_dir_stats,
-                     deletes=new_deletes, dir_seq=new_dir_seq,
-                     delete_keys=state.get("delete_keys") if new_deletes else None)
-    _gc_versions(table_path)
+    with _staging(table_path) as staging:
+        # each over-full bucket is read and rewritten independently
+        # (bounded: only buckets past the threshold; rows already belong
+        # to their bucket)
+        rewrite = {}
+        for b in todo:
+            # resolved read: applies the bucket's pending equality deletes
+            # (which this rewrite then CLEARS) and resolves mixed-schema
+            # files through the snapshot's recorded schema — footer
+            # inference could drop an evolved column for the whole bucket
+            rows = _snapshot_scan(spark, table_path, state, buckets=[b],
+                                  strict=False)
+            if rows is None:
+                continue
+            rewrite[b] = [os.path.join(staging, b)]
+            rows.coalesce(1).write.mode("overwrite").parquet(rewrite[b][0])
+        _build_snapshot(table_path, state, state["n_buckets"],
+                        StructType.fromJson(state["schema"]), replace=rewrite)
 
 
 def _with_zorder_key(df: DataFrame, cols: list[str],
@@ -2240,9 +2184,10 @@ def cluster_table(spark: SparkSession, table_path: str,
     landing underneath raises CommitConflictError — rerun (content is
     unchanged by clustering, nothing is lost by deferring)."""
     import os
-    import shutil
-    import uuid
 
+    from pyspark.sql.types import StructType
+
+    _check_count("files_per_bucket", files_per_bucket)
     state = _table_state(table_path)
     if not state:
         return
@@ -2253,75 +2198,50 @@ def cluster_table(spark: SparkSession, table_path: str,
     for c in sort_cols:
         if c not in schema_cols:
             raise ValueError(f"cluster column {c!r} not in table schema")
-    base_sid = state["snapshot_id"]
-    k = max(1, files_per_bucket)
-    staging = f"{table_path}__staging_{uuid.uuid4().hex[:12]}"
-    shutil.rmtree(staging, ignore_errors=True)
-    new_map: dict[str, list] = {}
-    new_stats: dict[str, dict] = {}
-    new_dir_stats: dict[str, dict] = {}
-    new_dir_seq: dict[str, int | None] = {}
-    for b in state["buckets"]:
-        # resolved read: folds the bucket's pending equality deletes and
-        # reads mixed-schema files through the snapshot schema
-        rows = _snapshot_scan(spark, table_path, state, buckets=[b],
-                              strict=False)
-        if rows is None:
-            continue
-        out = os.path.join(staging, b)
-        if zorder:
-            # the z-order path reads the bucket twice (approxQuantile in
-            # _with_zorder_key, then the rewrite) — persist around the
-            # pair so the resolved scan runs once, and release
-            # it on every exit, the key guards' ValueError included
-            cached = rows.persist()
-            try:
-                (_with_zorder_key(cached, sort_cols, zorder_bits)
-                 .repartitionByRange(k, F.col("__zkey"))
-                 .sortWithinPartitions("__zkey")
-                 .drop("__zkey")
-                 .write.mode("overwrite").parquet(out))
-            finally:
-                cached.unpersist()
-        else:
-            rows.repartitionByRange(
-                k, *[F.col(c) for c in sort_cols]
-            ).sortWithinPartitions(*sort_cols).write.mode("overwrite").parquet(out)
-        parts = sorted(
-            f for f in os.listdir(out)
-            if f.endswith(".parquet") and
-            os.path.getsize(os.path.join(out, f)) > 0 and
-            not f.startswith(("_", "."))
-        )
-        bdir = os.path.join(table_path, b)
-        os.makedirs(bdir, exist_ok=True)
-        dirs: list[str] = []
-        brows, bbytes, bfiles = 0, 0, 0
-        for i, p in enumerate(parts):
-            sub = os.path.join(staging, f"{b}__chunk{i}")
-            os.makedirs(sub)
-            os.rename(os.path.join(out, p), os.path.join(sub, p))
-            nxt = _install_version(sub, bdir)
-            vdir = os.path.join(bdir, nxt)
-            fs = _bucket_file_stats(vdir)
-            if fs.get("rows", 0) == 0:
-                # empty range chunk (fewer distinct values than k): drop it
-                shutil.rmtree(vdir, ignore_errors=True)
+    k = files_per_bucket
+    with _staging(table_path) as staging:
+        # every bucket is rewritten (an unreadable one is dropped); each
+        # range chunk becomes its own single-file dir, so its footer
+        # bounds cover one narrow range — empty chunks (fewer distinct
+        # values than k) are never installed
+        rewrite: dict[str, list[str]] = {}
+        for b in state["buckets"]:
+            rewrite[b] = []
+            # resolved read: folds the bucket's pending equality deletes and
+            # reads mixed-schema files through the snapshot schema
+            rows = _snapshot_scan(spark, table_path, state, buckets=[b],
+                                  strict=False)
+            if rows is None:
                 continue
-            dirs.append(nxt)
-            brows += fs.get("rows", 0)
-            bbytes += fs.get("bytes", 0)
-            bfiles += fs.get("files", 0)
-            new_dir_stats[f"{b}/{nxt}"] = _dir_col_stats(vdir)
-            new_dir_seq[f"{b}/{nxt}"] = None  # stamped with the commit sid
-        if dirs:
-            new_map[b] = dirs
-            new_stats[b] = {"rows": brows, "bytes": bbytes, "files": bfiles}
-    shutil.rmtree(staging, ignore_errors=True)
-    from pyspark.sql.types import StructType
-
-    _commit_snapshot(table_path, new_map, state["n_buckets"],
-                     StructType.fromJson(state["schema"]), new_stats,
-                     base_sid=base_sid, dir_stats=new_dir_stats,
-                     deletes={}, dir_seq=new_dir_seq, delete_keys=None)
-    _gc_versions(table_path)
+            out = os.path.join(staging, b)
+            if zorder:
+                # the z-order path reads the bucket twice (approxQuantile in
+                # _with_zorder_key, then the rewrite) — persist around the
+                # pair so the resolved scan runs once, and release
+                # it on every exit, the key guards' ValueError included
+                cached = rows.persist()
+                try:
+                    (_with_zorder_key(cached, sort_cols, zorder_bits)
+                     .repartitionByRange(k, F.col("__zkey"))
+                     .sortWithinPartitions("__zkey")
+                     .drop("__zkey")
+                     .write.mode("overwrite").parquet(out))
+                finally:
+                    cached.unpersist()
+            else:
+                rows.repartitionByRange(
+                    k, *[F.col(c) for c in sort_cols]
+                ).sortWithinPartitions(*sort_cols).write.mode("overwrite").parquet(out)
+            parts = sorted(
+                f for f in os.listdir(out)
+                if f.endswith(".parquet") and
+                os.path.getsize(os.path.join(out, f)) > 0 and
+                not f.startswith(("_", "."))
+            )
+            for i, p in enumerate(parts):
+                sub = os.path.join(staging, f"{b}__chunk{i}")
+                os.makedirs(sub)
+                os.rename(os.path.join(out, p), os.path.join(sub, p))
+                rewrite[b].append(sub)
+        _build_snapshot(table_path, state, state["n_buckets"],
+                        StructType.fromJson(state["schema"]), replace=rewrite)

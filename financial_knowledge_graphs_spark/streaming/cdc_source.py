@@ -15,10 +15,11 @@ semantics (the parity test asserts byte-equality against it):
 - offsets ARE snapshot ids (initial = 0, i.e. the whole table arrives as
   inserts first; ``.option("from_snapshot", N)`` starts later); restart
   resumes from the checkpointed snapshot id.
-- planning mirrors the batch CDC classification: a bucket whose version-dir
-  set only grew (append fast path) ships its NEW dirs at FILE granularity —
-  one InputPartition per version dir, zero old-data I/O; only rewritten /
-  MOR-touched buckets pay a per-bucket resolved diff.
+- planning shares the batch CDC classification (``_changed_buckets``): a
+  bucket whose version-dir set only grew (append fast path) ships its NEW
+  dirs at FILE granularity — one InputPartition per version dir, zero
+  old-data I/O; only rewritten / MOR-touched buckets pay a per-bucket
+  resolved diff.
 - ``read()`` runs on executors WITHOUT a SparkSession, so the per-partition
   work is pyarrow/pandas: schema-evolved reads resolve missing columns to
   NULL through the TO snapshot's schema, merge-on-read equality deletes
@@ -225,43 +226,26 @@ class _ChangesStreamReader(DataSourceStreamReader):
         if a_sid == b_sid:
             return [_ChangesPartition({"kind": "noop"})]
 
-        def _snap(sid: int) -> dict:
-            if sid == 0:
-                return {"snapshot_id": 0, "buckets": {}}
-            meta = m._load_meta(self.table_path, sid)
-            if meta is None:
-                raise ValueError(
-                    f"stream offset snapshot {sid} expired for "
-                    f"{self.table_path} (retention={m.SNAPSHOT_RETENTION})")
-            return meta
+        a, b, grown, rewritten = m._changed_buckets(self.table_path, a_sid, b_sid)
+        parts = [
+            _ChangesPartition({"kind": "insert_dir", "bucket": bk, "dir": v})
+            for bk, dirs in grown.items() for v in dirs
+        ]
 
-        a, b = _snap(a_sid), _snap(b_sid)
-        dels_a = a.get("deletes") or {}
-        dels_b = b.get("deletes") or {}
-        seq_a = a.get("dir_seq") or {}
-        seq_b = b.get("dir_seq") or {}
-        parts: list[_ChangesPartition] = []
-        for bk in set(a["buckets"]) | set(b["buckets"]):
-            da = set(a["buckets"].get(bk, []))
-            db = set(b["buckets"].get(bk, []))
-            same_dels = dels_a.get(bk, []) == dels_b.get(bk, [])
-            if da == db and same_dels:
-                continue
-            if da <= db and same_dels:
-                for v in sorted(db - da):
-                    parts.append(_ChangesPartition(
-                        {"kind": "insert_dir", "bucket": bk, "dir": v}))
-            else:
-                parts.append(_ChangesPartition({
-                    "kind": "diff",
-                    "bucket": bk,
-                    "data_a": [[v, int(seq_a.get(f"{bk}/{v}", 0))]
-                               for v in sorted(da)],
-                    "data_b": [[v, int(seq_b.get(f"{bk}/{v}", 0))]
-                               for v in sorted(db)],
-                    "dels_a": [[d, int(s)] for d, s in dels_a.get(bk, [])],
-                    "dels_b": [[d, int(s)] for d, s in dels_b.get(bk, [])],
-                }))
+        def _side(snap: dict, bk: str) -> tuple[list, list]:
+            seq = snap.get("dir_seq") or {}
+            data = [[v, int(seq.get(f"{bk}/{v}", 0))]
+                    for v in sorted(snap["buckets"].get(bk, []))]
+            dels = [[d, int(s)] for d, s in (snap.get("deletes") or {}).get(bk, [])]
+            return data, dels
+
+        for bk in rewritten:
+            data_a, dels_a = _side(a, bk)
+            data_b, dels_b = _side(b, bk)
+            parts.append(_ChangesPartition({
+                "kind": "diff", "bucket": bk, "data_a": data_a,
+                "data_b": data_b, "dels_a": dels_a, "dels_b": dels_b,
+            }))
         return parts or [_ChangesPartition({"kind": "noop"})]
 
     # -- executor-side read ---------------------------------------------------

@@ -4,6 +4,7 @@ merge must rewrite only the buckets it touches, not the whole table."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from financial_knowledge_graphs_spark.operators import materialize
@@ -89,28 +90,132 @@ def _assert_single_layout(t):
         assert all(v.startswith("v_") for v in inner), (d, inner)
 
 
+def _assert_metadata_consistent(t):
+    """The live snapshot's maps agree with its bucket map and the files:
+    per-bucket stats for exactly the mapped buckets, with footer-true row
+    counts; per-dir bounds and sequence numbers for exactly the live data
+    dirs, none newer than the snapshot; deletes only on live buckets."""
+    import pyarrow.parquet as pq
+
+    snap = materialize._table_state(t)
+    live = {f"{b}/{v}" for b, vs in snap["buckets"].items() for v in vs}
+    assert set(snap["stats"]) == set(snap["buckets"])
+    for b, vs in snap["buckets"].items():
+        rows = sum(
+            pq.ParquetFile(os.path.join(t, b, v, f)).metadata.num_rows
+            for v in vs for f in os.listdir(os.path.join(t, b, v))
+            if f.endswith(".parquet")
+        )
+        assert snap["stats"][b]["rows"] == rows, b
+    assert set(snap["dir_stats"]) == live
+    assert set(snap["dir_seq"]) == live
+    assert all(s <= snap["snapshot_id"] for s in snap["dir_seq"].values())
+    assert set(snap["deletes"]) <= set(snap["buckets"])
+
+
 def test_every_write_path_keeps_the_single_layout(spark, tmp_warehouse):
     t = os.path.join(tmp_warehouse, "tbl")
+
+    def check():
+        _assert_single_layout(t)
+        _assert_metadata_consistent(t)
+
     rows = [(f"k{i}", i) for i in range(40)]
     materialize.merge_upsert(spark, t, _mk(spark, rows), ["k"], n_buckets=4)
-    _assert_single_layout(t)
+    check()
     materialize.merge_upsert(
         spark, t, _mk(spark, [("k0", 99)]), ["k"], n_buckets=4, mode="mor")
-    _assert_single_layout(t)
+    check()
+    assert materialize._table_state(t)["deletes"]  # the MOR path was taken
     materialize.rebucket_table(spark, t, ["k"], new_buckets=8)
-    _assert_single_layout(t)
+    check()
     materialize.compact_table(spark, t, max_files=0)
-    _assert_single_layout(t)
+    check()
     sid = materialize.snapshots(t)[-1]["snapshot_id"]
     materialize.cluster_table(spark, t, "v", files_per_bucket=2)
-    _assert_single_layout(t)
+    check()
     materialize.rollback_table(t, sid)
-    _assert_single_layout(t)
+    check()
     got = {(r["k"], r["v"]) for r in materialize.read_graph_table(spark, t).collect()}
     assert got == {("k0", 99)} | set(rows[1:])
     materialize.truncate_table(t)
-    _assert_single_layout(t)
+    check()
     assert materialize.read_graph_table(spark, t).count() == 0
+
+
+def test_failed_install_releases_staging(spark, tmp_warehouse, monkeypatch):
+    """A write that fails after staging its files (here: the disk fills
+    while installing them) removes its staging dir and leaves the live
+    snapshot as it was — on every write path."""
+    import errno
+
+    import pytest
+
+    t = os.path.join(tmp_warehouse, "tbl")
+    rows = [(f"k{i}", i) for i in range(40)]
+    materialize.merge_upsert(spark, t, _mk(spark, rows), ["k"], n_buckets=4)
+    sid = materialize._live_sid(t)
+
+    def disk_full(src_dir, bucket_dir):
+        raise OSError(errno.ENOSPC, "No space left on device")
+
+    monkeypatch.setattr(materialize, "_install_version", disk_full)
+    writes = {
+        "merge": lambda: materialize.merge_upsert(
+            spark, t, _mk(spark, [("k0", 99), ("new", 1)]), ["k"], n_buckets=4),
+        "rebucket": lambda: materialize.rebucket_table(spark, t, ["k"], new_buckets=8),
+        "compact": lambda: materialize.compact_table(spark, t, max_files=0),
+        "cluster": lambda: materialize.cluster_table(spark, t, "v", files_per_bucket=2),
+    }
+    for name, write in writes.items():
+        with pytest.raises(OSError) as err:
+            write()
+        assert err.value.errno == errno.ENOSPC, name
+        left = [d for d in os.listdir(tmp_warehouse) if d.startswith("tbl__staging_")]
+        assert left == [], name
+        assert materialize._live_sid(t) == sid, name
+        got = {(r["k"], r["v"])
+               for r in materialize.read_graph_table(spark, t).collect()}
+        assert got == set(rows), name
+
+
+@pytest.mark.parametrize("op, knob, bad", [
+    ("merge_upsert", "n_buckets", 0),
+    ("merge_upsert", "n_buckets", True),
+    ("merge_upsert", "n_buckets", 2.0),
+    ("rebucket_table", "new_buckets", 0),
+    ("rebucket_table", "new_buckets", False),
+    ("compact_table", "max_files", -1),
+    ("compact_table", "max_files", 1.5),
+    ("cluster_table", "files_per_bucket", 0),
+    ("cluster_table", "files_per_bucket", True),
+])
+def test_table_knobs_rejected_before_any_job(spark, tmp_warehouse, op, knob, bad):
+    """A bad bucket or file count raises a ValueError naming the knob
+    before any Spark job runs (unchecked, n_buckets=0 on a first write
+    failed inside a job with a remainder-by-zero error)."""
+    t = os.path.join(tmp_warehouse, "tbl")
+    if op != "merge_upsert":
+        materialize.merge_upsert(spark, t, _mk(spark, [("a", 1)]), ["k"], n_buckets=2)
+    sid = materialize._live_sid(t)
+    call = {
+        "merge_upsert": lambda: materialize.merge_upsert(
+            spark, t, _mk(spark, [("a", 1)]), ["k"], n_buckets=bad),
+        "rebucket_table": lambda: materialize.rebucket_table(
+            spark, t, ["k"], new_buckets=bad),
+        "compact_table": lambda: materialize.compact_table(spark, t, max_files=bad),
+        "cluster_table": lambda: materialize.cluster_table(
+            spark, t, "v", files_per_bucket=bad),
+    }[op]
+    sc = spark.sparkContext
+    sc.setJobGroup("bad-knob", "table knob validation")
+    try:
+        with pytest.raises(ValueError, match=knob):
+            call()
+        assert sc.statusTracker().getJobIdsForGroup("bad-knob") == []
+    finally:
+        sc._jsc.clearJobGroup()
+    assert materialize._live_sid(t) == sid
 
 
 def test_path_without_snapshot_is_not_a_table(spark, tmp_warehouse):
