@@ -45,24 +45,28 @@ def _any_null(key: list[str]):
     return reduce(lambda a, c: a | c, [F.col(k).isNull() for k in key])
 
 
+def domain_passes(domains: dict[str, list[str]]):
+    """Column that is true for rows passing every domain CHECK (NULL passes,
+    SQL semantics). Never NULL itself, so ``~domain_passes(d)`` is exactly
+    the violations."""
+    from functools import reduce
+
+    return reduce(
+        lambda a, b: a & b,
+        [F.col(c).isNull() | F.col(c).isin(*allowed) for c, allowed in domains.items()],
+        F.lit(True),
+    )
+
+
 def domain_filter(df: DataFrame, domains: dict[str, list[str]]) -> DataFrame:
-    """Rows passing every domain CHECK (NULL passes, SQL semantics). A pure
-    Catalyst filter — pushes to the scan, no shuffle."""
-    out = df
-    for col, allowed in domains.items():
-        out = out.filter(F.col(col).isNull() | F.col(col).isin(*allowed))
-    return out
+    """Rows passing every domain CHECK. A pure Catalyst filter — pushes to
+    the scan, no shuffle."""
+    return df.filter(domain_passes(domains))
 
 
 def domain_violations(df: DataFrame, domains: dict[str, list[str]]) -> DataFrame:
     """Rows failing at least one domain CHECK (complement of domain_filter)."""
-    from functools import reduce
-
-    conds = [
-        F.col(c).isNotNull() & ~F.col(c).isin(*allowed)
-        for c, allowed in domains.items()
-    ]
-    return df.filter(reduce(lambda a, b: a | b, conds)) if conds else df.limit(0)
+    return df.filter(~domain_passes(domains))
 
 
 def conform(df: DataFrame, schema: StructType, keep: list[str] | None = None) -> DataFrame:

@@ -83,12 +83,18 @@ def _assign_entity_ids(mapped: DataFrame) -> DataFrame:
     rather than duplicate. Components whose min-norm is empty (all-suffix
     names) fall back to the min raw key. Two same-type components sharing
     a norm collapse to one id — exactly the reference's normalized-equality
-    merge (reference src/db/neo4j_handler.py:84-99)."""
-    comp_rep = mapped.groupBy("comp").agg(
-        F.min(F.when(F.col("norm") != "", F.col("norm"))).alias("comp_norm"),
-        F.min("key").alias("comp_key"),
+    merge (reference src/db/neo4j_handler.py:84-99).
+
+    The per-component minima are window aggregates, not a groupBy joined
+    back: ``comp`` comes from the connected-components label UDF, and a
+    self-join would evaluate that UDF once per join side. ``comp`` leads
+    the output columns, as the join key did."""
+    by_comp = Window.partitionBy("comp")
+    mapped = mapped.select(
+        "comp", *[c for c in mapped.columns if c != "comp"],
+        F.min(F.when(F.col("norm") != "", F.col("norm"))).over(by_comp).alias("comp_norm"),
+        F.min("key").over(by_comp).alias("comp_key"),
     )
-    mapped = mapped.join(comp_rep, "comp")
     return mapped.withColumn(
         "entity_id",
         F.concat(
@@ -373,7 +379,7 @@ def canonical_mapping_incremental(
     # union, CC) AND sit UPSTREAM of the node set here (unlike the full
     # path, where the node set feeds the edges). Without truncation the
     # edge subtree is replicated through members → sub_keys → CC → the
-    # _assign_entity_ids self-join, and the logical plan grows
+    # _assign_entity_ids window, and the logical plan grows
     # multiplicatively (observed: explainString OOMs the driver). Eager
     # localCheckpoint computes the verify join exactly once and replaces
     # the subtree with an RDD scan leaf — the same lineage-truncation CC

@@ -378,7 +378,6 @@ def run_pipeline(
     # the graph table enforces it — an off-vocabulary pred never merges, and
     # the reject count is surfaced to metrics (never silent).
     _vocab = {"pred": list(schemas.PREDICATES)}
-    offvocab = constraints.domain_violations(triples_all, _vocab)
     triples = constraints.domain_filter(triples_all, _vocab)
 
     # ---- stale-triple remap (only when a canonical id was retired) ---------
@@ -420,10 +419,14 @@ def run_pipeline(
     from concurrent.futures import ThreadPoolExecutor
 
     def _count_triples():
-        # triples first (fills the ep_joined + triples caches), dropped +
-        # off-vocab after (both re-read the now-warm caches)
-        n = triples.count()
-        return n, dropped.count(), offvocab.count()
+        # in-vocab and off-vocab from ONE pass over triples_all (fills the
+        # ep_joined + triples_all caches); dropped after (re-reads the warm
+        # ep_joined cache)
+        in_vocab = constraints.domain_passes(_vocab)
+        row = triples_all.agg(
+            F.count_if(in_vocab).alias("n"), F.count_if(~in_vocab).alias("off")
+        ).first()
+        return row["n"], dropped.count(), row["off"]
 
     def _merge_vertices():
         materialize.merge_upsert(

@@ -326,3 +326,78 @@ def test_symmetric_swap_total_order(spark):
     rows = {(r["subj"], r["obj"]) for r in triples.collect()}
     joined.unpersist()
     assert rows == {("ENT_A", "ENT_B")}, rows  # one orientation, both docs
+
+
+def test_cached_plan_shuffle_coalesces_to_batch_size(spark):
+    """A persisted frame's shuffle is coalesced by AQE like any other: a
+    groupBy over ~100 rows must not keep the session's static shuffle
+    partitions (8 here, 64 in production) in the stages that read it. The
+    input has two partitions (one would need no exchange at all), so every
+    stage of the group runs at most two tasks only if the cached plan's
+    exchange was coalesced."""
+    sc = spark.sparkContext
+    df = spark.range(0, 100, 1, numPartitions=2).groupBy(
+        (F.col("id") % 10).alias("k")
+    ).agg(F.count(F.lit(1)).alias("n")).persist()
+    sc.setJobGroup("cached-coalesce", "cached plan coalescing")
+    try:
+        assert df.count() == 10
+        tracker = sc.statusTracker()
+        job_ids = tracker.getJobIdsForGroup("cached-coalesce")
+        stage_tasks = {
+            sid: tracker.getStageInfo(sid).numTasks
+            for jid in job_ids
+            for sid in tracker.getJobInfo(jid).stageIds
+            if tracker.getStageInfo(sid) is not None
+        }
+    finally:
+        sc._jsc.clearJobGroup()
+        df.unpersist()
+    assert job_ids and stage_tasks
+    assert max(stage_tasks.values()) <= 2, stage_tasks
+
+
+def test_fused_triple_counts_equal_separate_counts(spark, small_corpus, tmp_warehouse,
+                                                   monkeypatch):
+    """res.triples, offvocab_triples and dropped_endpoint_rows come from one
+    aggregate over the persisted triples plus the dropped count; they must
+    equal the three separate counts. The batch is seeded with off-vocabulary
+    preds and unmapped endpoints so all three are exercised."""
+    from financial_knowledge_graphs_spark import schemas
+    from financial_knowledge_graphs_spark.operators import constraints, extract
+
+    real_raw = extract.raw_triples_df
+    real_build = materialize.build_triples
+
+    def raw_with_faults(extracted):
+        raw = real_raw(extracted)
+        pick = raw.filter(F.abs(F.hash("doc_id", "local_id")) % 5 == 0)
+        offvocab = pick.withColumn("pred", F.concat(F.lit("novelPred_"), "local_id"))
+        dangling = pick.withColumn("src_local", F.lit("no_such_mention"))
+        return raw.unionByName(
+            offvocab.withColumn("local_id", F.concat("local_id", F.lit("_ov")))
+        ).unionByName(
+            dangling.withColumn("local_id", F.concat("local_id", F.lit("_dg")))
+        )
+
+    separate = {}
+
+    def build_and_count(raw_triples, mentions, mapping):
+        triples, dropped, joined = real_build(raw_triples, mentions, mapping)
+        vocab = {"pred": list(schemas.PREDICATES)}
+        separate["triples"] = constraints.domain_filter(triples, vocab).count()
+        separate["offvocab"] = constraints.domain_violations(triples, vocab).count()
+        separate["dropped"] = dropped.count()
+        return triples, dropped, joined
+
+    monkeypatch.setattr(extract, "raw_triples_df", raw_with_faults)
+    monkeypatch.setattr(materialize, "build_triples", build_and_count)
+    docs, alias = _docs_alias(spark, small_corpus)
+    res = run_pipeline(spark, docs, alias, PipelineConfig(warehouse=tmp_warehouse))
+    assert separate["offvocab"] > 0 and separate["dropped"] > 0
+    assert res.triples == separate["triples"]
+    assert res.extra["offvocab_triples"] == separate["offvocab"]
+    assert res.dropped_endpoint_rows == separate["dropped"]
+    # only in-vocabulary triples reach the graph table
+    stored = materialize.read_graph_table(spark, graph_paths(tmp_warehouse)["triples"])
+    assert stored.count() == separate["triples"]
