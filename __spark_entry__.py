@@ -107,7 +107,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2.2 rows 11-12: quality predicate + derived token_count."""
-    from financial_knowledge_graphs_spark.operators.text import token_count_expr
+    from financial_knowledge_graphs_spark.operators.prep import token_count_expr
 
     d = _t(spark, sf_dir, "documents")
     return (
@@ -123,7 +123,7 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg is computed as exact-long sum / count (NOT F.avg: Spark's avg over
     longs accumulates in double with order-dependent last-ulp error, while
     DuckDB sums exactly — the round-1 hash mismatch)."""
-    from financial_knowledge_graphs_spark.operators.text import token_count_expr
+    from financial_knowledge_graphs_spark.operators.prep import token_count_expr
 
     d = _t(spark, sf_dir, "documents").withColumn("tc", token_count_expr("text").cast("long"))
     return d.groupBy("lang").agg(
@@ -143,7 +143,7 @@ def q_token_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear interpolation == Spark `percentile` == DuckDB quantile_cont);
     std derived from exact long sums so both engines run the identical
     double-arithmetic expression."""
-    from financial_knowledge_graphs_spark.operators.text import token_count_expr
+    from financial_knowledge_graphs_spark.operators.prep import token_count_expr
 
     d = _t(spark, sf_dir, "documents").withColumn(
         "tc", (F.floor(token_count_expr("text") * 1.3) + 10).cast("long")
@@ -176,7 +176,7 @@ def q_token_hist_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     values DROPPED, right edge of the LAST bin inclusive. The reference uses
     range(200, 2200, 100) for real news articles; the testdata docs are
     shorter, so the range is scaled to [0, 200) step 25 — same semantics."""
-    from financial_knowledge_graphs_spark.operators.text import token_count_expr
+    from financial_knowledge_graphs_spark.operators.prep import token_count_expr
 
     lo, hi, width = 0, 200, 25
     d = _t(spark, sf_dir, "documents").withColumn(
@@ -199,9 +199,8 @@ def q_token_hist_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-ish (GPT2-pre-tokenizer-shaped) token counting next to the
     whitespace count — the LLM-cost-proxy pair a training pipeline needs."""
-    from financial_knowledge_graphs_spark.operators.text import (
-        bpe_token_count_expr, token_count_expr,
-    )
+    from financial_knowledge_graphs_spark.operators.prep import token_count_expr
+    from financial_knowledge_graphs_spark.operators.text import bpe_token_count_expr
 
     d = _t(spark, sf_dir, "documents")
     return d.select(
@@ -399,7 +398,7 @@ def q_seeded_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2.7 row 51: token-count histogram (50-token bins)."""
-    from financial_knowledge_graphs_spark.operators.text import token_count_expr
+    from financial_knowledge_graphs_spark.operators.prep import token_count_expr
 
     d = _t(spark, sf_dir, "documents").withColumn(
         "tc", token_count_expr("text").cast("long")
@@ -1003,8 +1002,8 @@ def kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def kg_wcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weakly-connected components over the materialized triples graph
-    (hash-min label propagation to fixpoint; component id = lexicographic
-    min member). Oracle = the same min-propagation unrolled 12 supersteps
+    (components.connected_components; component id = lexicographic min
+    member). Oracle = hash-min label propagation unrolled 12 supersteps
     over GT edges — equal because the fixture graph's diameter is far
     below 12, so both sides are at the fixpoint."""
     from financial_knowledge_graphs_spark.operators.graph import (

@@ -10,7 +10,10 @@ cores keeps both levels un-contended so the ratio measures the ENGINE's
 scalability, not the sandbox's thermal envelope.
 
 Protocol details:
-- separate JVM per measurement (no warm-cache bleed between levels);
+- separate JVM per measurement (no warm-cache bleed between levels), and
+  the corpus is built in a child process too: py4j's gateway JVM outlives
+  ``spark.stop()``, so a parent-built corpus would leave that JVM resident
+  beside every level;
 - interleaved repeats (low, high, low, high) with min-of-repeats per level —
   the sandbox shares cores with neighbors and single-core speed was observed
   drifting ~2x over minutes; interleaving + min filters that noise;
@@ -53,10 +56,28 @@ spark.stop()
 """
 
 
-def run_level(cpus: int, corpus: str) -> dict:
-    script = RUNNER.format(repo=REPO)
+CORPUS = r"""
+import os, sys
+sys.path.insert(0, {repo!r})
+from financial_knowledge_graphs_spark import fixtures
+from financial_knowledge_graphs_spark.session import get_spark
+
+n_docs = int(sys.argv[1]); corpus = sys.argv[2]
+spark = get_spark("fkg-gen", extra_conf={{"spark.ui.showConsoleProgress": "false"}})
+spark.sparkContext.setLogLevel("ERROR")
+os.makedirs(corpus, exist_ok=True)
+fixtures.write_corpus(spark, corpus, n_docs=n_docs, seed=42)
+open(os.path.join(corpus, "_COMPLETE"), "w").write("ok")
+spark.stop()
+print("RESULT {{}}")
+"""
+
+
+def run_child(script: str, *args: str) -> dict:
+    """Run ``script`` in a fresh Python process (and so a fresh JVM) and
+    return the JSON of its ``RESULT`` line."""
     out = subprocess.run(
-        [sys.executable, "-c", script, str(cpus), corpus],
+        [sys.executable, "-c", script.format(repo=REPO), *args],
         capture_output=True, text=True, timeout=7200, cwd=REPO,
     )
     for line in out.stdout.splitlines():
@@ -68,15 +89,7 @@ def run_level(cpus: int, corpus: str) -> dict:
 def ensure_corpus(n_docs: int) -> str:
     corpus = os.path.join(REPO, ".fixtures", f"bench_corpus_n{n_docs}_s42")
     if not os.path.exists(os.path.join(corpus, "_COMPLETE")):
-        from financial_knowledge_graphs_spark import fixtures
-        from financial_knowledge_graphs_spark.session import get_spark
-
-        spark = get_spark("fkg-gen", extra_conf={"spark.ui.showConsoleProgress": "false"})
-        spark.sparkContext.setLogLevel("ERROR")
-        os.makedirs(corpus, exist_ok=True)
-        fixtures.write_corpus(spark, corpus, n_docs=n_docs, seed=42)
-        open(os.path.join(corpus, "_COMPLETE"), "w").write("ok")
-        spark.stop()
+        run_child(CORPUS, str(n_docs), corpus)
     return corpus
 
 
@@ -89,8 +102,8 @@ def main() -> None:
 
     lows, highs = [], []
     for i in range(repeats):
-        lows.append(run_level(low_cpus, corpus))
-        highs.append(run_level(high_cpus, corpus))
+        lows.append(run_child(RUNNER, str(low_cpus), corpus))
+        highs.append(run_child(RUNNER, str(high_cpus), corpus))
         print(f"repeat {i}: low={lows[-1]['seconds']}s high={highs[-1]['seconds']}s",
               file=sys.stderr)
     low = min(lows, key=lambda r: r["seconds"])

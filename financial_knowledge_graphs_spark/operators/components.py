@@ -1,4 +1,5 @@
-"""Connected components over a similarity-edge DataFrame.
+"""The engine's one connected-components implementation (canonicalization,
+dedup clusters, graph WCC) over an edge DataFrame.
 
 Batch, order-free replacement for the reference's incremental greedy merge
 (each insert folds into the first matching DB entity —
@@ -94,10 +95,9 @@ def connected_components(
         if changed == 0:
             break
     else:
-        # same contract as graph.weakly_connected_components: a silent
-        # return here would hand back a partially-propagated labeling —
-        # one real component split into several, i.e. one company getting
-        # multiple entity_ids with no error anywhere downstream.
+        # a silent return here would hand back a partially-propagated
+        # labeling — one real component split into several, i.e. one
+        # company getting multiple entity_ids with no error downstream.
         e.unpersist()
         raise RuntimeError(
             f"connected_components: no fixpoint after {max_iter} rounds "
@@ -106,38 +106,45 @@ def connected_components(
     return comp.select(F.col("id").alias(id_col), "comp")
 
 
-def _driver_union_find(nodes: DataFrame, edge_pdf, id_col: str) -> DataFrame:
-    """Small-graph fast path: union-find with path compression over a pandas
-    frame of (key_a, key_b) pairs, label map shipped back via Arrow and
-    broadcast-joined against the node set. Works on one-directional unique
-    pairs — union is symmetric."""
-    parent: dict[str, str] = {}
+def union_find(pairs) -> dict:
+    """The engine's one union-find (path compression, min label wins):
+    ``pairs`` is any iterable of (a, b) → {node: min member of its
+    component} for every node named in a pair. Pairs are undirected;
+    duplicates and self-pairs are harmless."""
+    parent: dict = {}
 
-    def find(x: str) -> str:
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:
-            parent[x], x = r, parent[x]
-        return r
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
 
-    for a0, b0 in zip(edge_pdf["key_a"].to_numpy(), edge_pdf["key_b"].to_numpy()):
-        a, b = find(a0), find(b0)
-        if a != b:
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
             # min label wins so comp == min(key) of the component
-            lo, hi = (a, b) if a < b else (b, a)
-            parent[hi] = lo
+            parent[max(ra, rb)] = min(ra, rb)
+    return {k: find(k) for k in parent}
 
-    spark = nodes.sparkSession
-    if not parent:
+
+def _driver_union_find(nodes: DataFrame, edge_pdf, id_col: str) -> DataFrame:
+    """Small-graph fast path: ``union_find`` over a pandas frame of
+    (key_a, key_b) pairs, label map shipped back to the node set."""
+    labels = union_find(
+        zip(edge_pdf["key_a"].to_numpy(), edge_pdf["key_b"].to_numpy())
+    )
+    if not labels:
         return nodes.select(F.col(id_col), F.col(id_col).alias("comp"))
-    labels = {k: find(k) for k in list(parent.keys())}
     # Ship the label map as a broadcast VARIABLE consumed by a vectorized
     # UDF, not a DataFrame broadcast join: at O(10^5) labels the
     # createDataFrame + broadcast-exchange + join adds three driver-gated
     # jobs, while the UDF fuses label lookup into whatever stage consumes
     # the result (zero extra jobs, zero shuffles).
-    bc = spark.sparkContext.broadcast(labels)
+    bc = nodes.sparkSession.sparkContext.broadcast(labels)
 
     def _label(s):
         mapped = s.map(bc.value)

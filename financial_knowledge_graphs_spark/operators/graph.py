@@ -179,74 +179,23 @@ def bfs_distances(edges: DataFrame, source: str, max_depth: int = 6) -> DataFram
 
 
 def weakly_connected_components(edges: DataFrame, max_iters: int = 30) -> DataFrame:
-    """Weakly-connected components by hash-min label propagation to
-    fixpoint — the public, generic face of the canonicalization CC
-    (operators/components.py runs the same contraction over linking pairs;
-    reference disambiguates at insert time, neo4j_handler.py:70-134).
-
-    Each superstep every vertex takes the min(label) of itself and its
-    undirected neighbors; convergence in O(diameter) supersteps, each one
-    join + one aggregation on vertex name (same key both times — one
-    co-located shuffle per step at scale, lineage cut by localCheckpoint).
-    Labels are vertex names (string min) so the result is deterministic:
-    component id == lexicographically smallest member name.
-    Returns (name, component).
+    """Weakly-connected components, run by the canonicalization CC
+    (:func:`components.connected_components`; reference disambiguates at
+    insert time, neo4j_handler.py:70-134) over the distinct endpoints, so
+    ``max_iters`` caps only its distributed rounds. Component id ==
+    lexicographically smallest member name. Returns (name, component).
     """
-    # pin the (loop-invariant) adjacency to src-hash partitioning: distinct
-    # leaves it hashed on (src, dst), which does NOT satisfy the per-step
-    # join on src — without this the full edge list would reshuffle every
-    # superstep; with it only the (vertex-sized) label table moves.
-    und = (
-        edges.select("src", "dst")
-        .unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
+    from .components import connected_components
+
+    names = (
+        edges.select(F.col("src").alias("name"))
+        .union(edges.select(F.col("dst").alias("name")))
         .distinct()
-        .repartition("src")
-        .localCheckpoint(eager=True)
     )
-    labels = (
-        und.select(F.col("src").alias("name"))
-        .distinct()
-        .withColumn("comp", F.col("name"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iters):
-        nbr_min = (
-            und.join(labels, und.src == labels.name)
-            .groupBy(F.col("dst").alias("name"))
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        nxt = (
-            labels.join(nbr_min, "name", "left")
-            .select(
-                "name",
-                F.least(
-                    "comp", F.coalesce("nbr_comp", F.col("comp"))
-                ).alias("comp"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            nxt.alias("n")
-            .join(labels.alias("o"), "name")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        labels = nxt
-        if changed == 0:
-            break
-    else:
-        # the cap is a lineage-safety rail, not a semantic knob: returning
-        # here would silently hand back a partially-propagated labeling
-        # (two fragments of one long-chain component with different ids)
-        raise RuntimeError(
-            f"weakly_connected_components did not converge within "
-            f"{max_iters} supersteps — graph diameter exceeds the cap; "
-            f"raise max_iters"
-        )
-    return labels.select("name", F.col("comp").alias("component"))
+    pairs = edges.select(F.col("src").alias("key_a"), F.col("dst").alias("key_b"))
+    return connected_components(
+        names, pairs, id_col="name", max_iter=max_iters
+    ).withColumnRenamed("comp", "component")
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:

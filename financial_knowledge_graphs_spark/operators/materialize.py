@@ -27,7 +27,7 @@ import contextlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .components import connected_components
+from .components import connected_components, union_find
 from .linking import embedding_similarity_edges, name_keys, similarity_edges
 
 
@@ -211,29 +211,17 @@ def _incremental_mapping_driver(prior_map: DataFrame, cand_pdf,
         for r in mem_pdf.itertuples(index=False):
             rows[r.key] = (r.type, r.name, r.norm or "", r.comp, r.entity_id)
 
-    # union-find over verified edges + virtual edges (member → prior comp)
-    parent: dict[str, str] = {k: k for k in rows}
-    def find(x: str) -> str:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-    def union(a: str, b: str) -> None:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    for a, b in edges:
-        union(a, b)
-    for k, (_, _, _, pcomp, _) in rows.items():
-        if pcomp is not None and pcomp != k:
-            union(k, pcomp)
-
+    # components over verified edges + virtual edges (member → prior comp)
+    label = union_find([
+        *edges,
+        *((k, pcomp) for k, (_, _, _, pcomp, _) in rows.items()
+          if pcomp is not None),
+    ])
     groups: dict[str, list[str]] = defaultdict(list)
     for k in rows:
-        groups[find(k)].append(k)
+        groups[label.get(k, k)].append(k)
     out = []
-    for members in groups.values():
-        comp = min(members)
+    for comp, members in groups.items():
         nonempty = [rows[k][2] for k in members if rows[k][2] != ""]
         rep = min(nonempty) if nonempty else comp
         ktype = rows[members[0]][0]

@@ -5,8 +5,9 @@ deliberately written with engine-portable primitives (length/replace/md5/
 regexp) so the DuckDB oracle in __spark_entry__.py computes bit-identical
 results — that is the correctness gate for these operators.
 
-Operators: token counting (whitespace + BPE-ish), language-ID (stopword-hit
-heuristic), quality scoring (length/punct/stopword ratios), document
+Operators: BPE-ish token counting (the whitespace count is
+prep.token_count_expr), language-ID (stopword-hit heuristic), quality
+scoring (length/punct/stopword ratios), document
 fingerprinting (exact md5 + shingle + MOSS winnowing), TF-IDF top-terms,
 document chunking (overlapping token windows) + sequence packing
 (token-budget bins), PII redaction with audit counts, Gopher-style
@@ -37,11 +38,6 @@ def occurrences(col: Column, needle: str) -> Column:
     return (
         F.length(col) - F.length(F.replace(col, F.lit(needle), F.lit("")))
     ) / len(needle)
-
-
-def token_count_expr(text_col: str = "text") -> Column:
-    """Whitespace token count, empty-safe (same semantics as prep.token_count)."""
-    return F.size(F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != F.lit("")))
 
 
 # GPT2-style pre-tokenizer shape, restricted to constructs Java regex and

@@ -44,7 +44,6 @@ class PipelineConfig:
     batch_size: int | None = None       # bounded micro-batch; None = all
     max_block: int = 1000               # linking block cap
     stage_name: str = "extract"
-    extract_partitions: int | None = None  # None = 3 x total cores
     embedding_link: bool = False        # add char-n-gram cosine link edges
     embedding_threshold: float = 0.75
     # row-level-delete strategy for the graph-table merges (Iceberg
@@ -118,6 +117,19 @@ def run_pipeline(
     alias_dict: DataFrame,
     cfg: PipelineConfig,
 ) -> PipelineResult:
+    # every frame the batch persists is released here, on success AND on
+    # error: a failed merge must not leave the batch cached for the rest of
+    # the session (stream_build_graph retries in the same session)
+    cleanup: list[DataFrame] = []
+    try:
+        return _run_batch(spark, documents, alias_dict, cfg, cleanup)
+    finally:
+        for df in cleanup:
+            df.unpersist()
+
+
+def _run_batch(spark: SparkSession, documents: DataFrame, alias_dict: DataFrame,
+               cfg: PipelineConfig, cleanup: list[DataFrame]) -> PipelineResult:
     t0 = time.time()
     ops = OpsStore(spark, os.path.join(cfg.warehouse, "ops"))
     run_id = cfg.run_id or ops.latest_run_id() or ops.next_run_id()
@@ -180,14 +192,14 @@ def run_pipeline(
     # small-footprint/high-CPU extraction input to a handful of tasks and
     # strands the rest of the cluster. Pin partitions to a multiple of total
     # cores so every core gets work (same call a real cluster job makes).
-    n_tasks = cfg.extract_partitions or 3 * spark.sparkContext.defaultParallelism
-    staged = staged.repartition(n_tasks, "doc_id")
+    staged = staged.repartition(3 * spark.sparkContext.defaultParallelism, "doc_id")
     # one pass: extraction output reused by mentions + triples + checkpoint
     udf = extract.make_extract_udf(spark, alias_dict)
     extracted = extract.run_extraction(staged, udf).select(
         "doc_id", "extraction"
     )
     extracted = extracted.persist()
+    cleanup.append(extracted)
     _ph = {"setup": round(time.time() - t0, 3)}
     _t = time.time()
     res.docs_processed = extracted.count()
@@ -216,7 +228,6 @@ def run_pipeline(
         # the batch proceeds even empty — the relink itself is the work.
         ops.log_lineage(run_id, cfg.stage_name, docs_in, 0, 0, status="noop")
         res.seconds = time.time() - t0
-        extracted.unpersist()
         return res
 
     _ph["lineage_prep"] = round(time.time() - _t, 3); _t = time.time()
@@ -259,7 +270,6 @@ def run_pipeline(
     stale_vertex_keys = None
     triple_remap = None
     mapping_updates = None  # rows to merge into graph/mapping (post-merges)
-    _cleanup: list[DataFrame] = []
     map_cols = ["key", "type", "name", "norm", "comp", "entity_id"]
 
     if config_drift or not materialize.table_exists(paths["mapping"]):
@@ -280,9 +290,9 @@ def run_pipeline(
             mention_universe, max_block=cfg.max_block,
             embedding_link=cfg.embedding_link,
             embedding_threshold=cfg.embedding_threshold,
-            cleanup=_cleanup,
+            cleanup=cleanup,
         ).persist()
-        _cleanup.append(mapping)
+        cleanup.append(mapping)
         mapping_updates = mapping.select(*map_cols)
         vertex_mentions = mention_universe
         # tombstones (upgrade path only): prior entities whose id changed
@@ -301,7 +311,7 @@ def run_pipeline(
                 .distinct()
                 .persist()
             )
-            _cleanup.append(remap)
+            cleanup.append(remap)
             # full count (NOT limit(1)): materializes every partition into
             # the cache NOW, while the prior tables' version dirs exist
             if remap.count() > 0:
@@ -309,14 +319,14 @@ def run_pipeline(
                 triple_remap = remap
     else:
         batch_keys = name_keys(mentions).persist()
-        _cleanup.append(batch_keys)
+        cleanup.append(batch_keys)
         prior_map = materialize.read_graph_table(spark, paths["mapping"])
         updates = materialize.canonical_mapping_incremental(
             prior_map, batch_keys, max_block=cfg.max_block,
             embedding_link=cfg.embedding_link,
             embedding_threshold=cfg.embedding_threshold,
         ).persist()
-        _cleanup.append(updates)
+        cleanup.append(updates)
         n_upd = updates.count()
         # entities needing a vertex refresh: those of the batch's (old)
         # surfaces — their n_mentions moved — plus everything the
@@ -349,13 +359,13 @@ def run_pipeline(
                 .distinct()
                 .persist()
             )
-            _cleanup.append(remap)
+            cleanup.append(remap)
             if remap.count() > 0:
                 stale_vertex_keys = remap.select(F.col("old_id").alias("entity_id"))
                 triple_remap = remap
         else:
             mapping = prior_rows.persist()
-        _cleanup.append(mapping)
+        cleanup.append(mapping)
         # touched entities' surfaces only: the ledger scan stays one full
         # parquet pass (embarrassingly parallel; at 10^12 docs, re-bucket
         # the ledger by (type, name) to prune it), but CC, vertex build and
@@ -373,6 +383,7 @@ def run_pipeline(
         raw_triples, mentions, mapping
     )
     triples_all = triples.persist()
+    cleanup += [vertices, ep_joined, triples_all]
     # CHECK-style closed predicate vocabulary (SURVEY §1.3): the reference
     # closes the ontology via prompts + configs/config_neo4j.yaml:16-20; here
     # the graph table enforces it — an off-vocabulary pred never merges, and
@@ -397,7 +408,7 @@ def run_pipeline(
             .filter(F.col("subj_new").isNotNull() | F.col("obj_new").isNotNull())
             .persist()
         )
-        _cleanup.append(affected)
+        cleanup.append(affected)
         triple_deletes = affected.select(*triple_keys)
         rewritten = affected.select(
             "doc_id",
@@ -526,13 +537,6 @@ def run_pipeline(
     compacted = ops.compact()
     if compacted:
         res.extra["ops_compacted"] = compacted
-    extracted.unpersist()
-    mapping.unpersist()
-    vertices.unpersist()
-    ep_joined.unpersist()
-    triples_all.unpersist()
-    for df in _cleanup:
-        df.unpersist()
     _ph["metrics_tail"] = round(time.time() - _t, 3)
     res.extra["phase_seconds"] = _ph
     return res

@@ -50,10 +50,7 @@ def get_spark(
         # compression, wide sorts) far below the cluster. 8MB advisory keeps
         # coalesced stages at >= core-count tasks for our table sizes while
         # still folding away empty partitions.
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_BYTES", str(8 * 1024 * 1024)),
-        )
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", str(8 * 1024 * 1024))
         # Static shuffle partitions get a floor of 64 (not bare 2 x cores):
         # AQE can only coalesce DOWN, so a low-core session would otherwise
         # hard-cap wide shuffles (a 2-core run sorting a 2GB window shuffle
@@ -75,11 +72,8 @@ def get_spark(
         # O(10) ~100MB files, and file-granular splits leave a 2-wave
         # straggler tail on an 8-core run (10 tasks / 8 cores). Finer splits
         # keep every core busy; at petabyte scale the file count dwarfs the
-        # core count and this knob stops mattering (overridable via env).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PART_BYTES", str(32 * 1024 * 1024)),
-        )
+        # core count and this knob stops mattering.
+        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

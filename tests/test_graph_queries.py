@@ -130,14 +130,22 @@ def test_wcc_chain_beyond_one_step(spark):
 
 
 def test_wcc_raises_when_cap_too_small(spark):
-    """Review r3: exhausting max_iters before fixpoint must raise, not
+    """Review r3: exhausting the round cap before fixpoint must raise, not
     silently return a partially-propagated labeling (two fragments of one
-    long chain under different ids)."""
+    long chain under different ids). WCC runs through
+    connected_components, so the cap is checked on its distributed path."""
     import pytest
 
-    e = _edges(spark, [(f"n{i + 1:02d}", f"n{i:02d}") for i in range(12)])
-    with pytest.raises(RuntimeError, match="did not converge"):
-        graph.weakly_connected_components(e, max_iters=5)
+    from financial_knowledge_graphs_spark.operators.components import (
+        connected_components,
+    )
+
+    pairs = [(f"n{i + 1:02d}", f"n{i:02d}") for i in range(12)]
+    nodes = spark.createDataFrame([(f"n{i:02d}",) for i in range(13)], "key string")
+    edges = spark.createDataFrame(pairs, "key_a string, key_b string")
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        connected_components(nodes, edges, driver_threshold=0, max_iter=5)
+    e = _edges(spark, pairs)
     c = {r["name"]: r["component"] for r in
          graph.weakly_connected_components(e, max_iters=30).collect()}
     assert set(c.values()) == {"n00"}

@@ -401,3 +401,30 @@ def test_fused_triple_counts_equal_separate_counts(spark, small_corpus, tmp_ware
     # only in-vocabulary triples reach the graph table
     stored = materialize.read_graph_table(spark, graph_paths(tmp_warehouse)["triples"])
     assert stored.count() == separate["triples"]
+
+
+def test_failed_merge_releases_batch_caches(spark, small_corpus, tmp_warehouse,
+                                            monkeypatch):
+    """A batch whose vertices merge raises must still unpersist every frame
+    it cached: a retry in the same session (stream_build_graph's replay)
+    would otherwise run beside the failed batch's caches."""
+    import os
+
+    import pytest
+
+    real_merge = materialize.merge_upsert
+
+    def merge_failing_on_vertices(spark_, path, *a, **k):
+        if os.path.basename(os.path.normpath(path)) == "vertices":
+            raise OSError("injected vertices merge failure")
+        return real_merge(spark_, path, *a, **k)
+
+    monkeypatch.setattr(materialize, "merge_upsert", merge_failing_on_vertices)
+    docs, alias = _docs_alias(spark, small_corpus)
+    spark.catalog.clearCache()
+    try:
+        with pytest.raises(OSError, match="injected"):
+            run_pipeline(spark, docs, alias, PipelineConfig(warehouse=tmp_warehouse))
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    finally:
+        small_corpus.cache()  # the session fixture's cache, cleared above
