@@ -1442,13 +1442,11 @@ def _kg_oracle_sql() -> dict[str, str]:
     gt_t = f"read_parquet('{root}/gt_triples/*.parquet')"
     gt_e = f"read_parquet('{root}/gt_extractions/*.parquet')"
 
-    # --- sign-LSH planes, identical to similarity._plane ----------------
-    from financial_knowledge_graphs_spark.operators.similarity import _plane
+    # --- sign-LSH planes, identical to similarity.lsh_tables ------------
+    from financial_knowledge_graphs_spark.operators.similarity import lsh_tables
 
     n_tables, n_planes, dim = 4, 6, 64
-    tables = [
-        [_plane(f"t{t}p{p}", dim) for p in range(n_planes)] for t in range(n_tables)
-    ]
+    tables = lsh_tables(dim, n_planes, n_tables)
 
     def bucket_sql(vcol: str, t: int) -> str:
         bits = [

@@ -101,7 +101,7 @@ def main() -> None:
     for name in [
         "q_minhash_lsh",
         "q_ngram_jaccard",
-        "q_simhash" if "q_simhash" in qs else "kg_simhash_pairs",
+        "kg_simhash_pairs",
         "q_ann_topk",
         "q_embedding_neardup",
         "q_embedding_neardup_lsh",

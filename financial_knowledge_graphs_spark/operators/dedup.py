@@ -13,9 +13,12 @@ random permutation statistic) because md5 is the one hash both Spark and
 DuckDB implement identically — making every operator oracle-checkable.
 
 Scale notes: every pair-generating join is blocked (shingle, band, label);
-no operator ever materializes the full O(n²) cross product. Band/shingle
-blocks larger than ``max_block`` are purged — a recall/cost knob, never a
-correctness one (verify-after keeps every EMITTED pair exact). Hot blocks
+no operator ever materializes the full O(n²) cross product. The shingle,
+band, segment and LSH-bucket emitters share one blocking stage from
+``similarity``: ``blocked_pairs`` purges blocks larger than ``max_block``
+(a recall/cost knob, never a correctness one) and self-joins id-only;
+``pair_sides`` joins the verify columns back, and ``jaccard_expr`` /
+``cosine_with_norms_expr`` keep every EMITTED pair exact. Hot blocks
 are measurable up front with ``skew.key_profile`` over the blocking key;
 raise ``max_block`` (or pre-filter boilerplate) when the profile shows
 heavy blocks you can't afford to skip.
@@ -30,6 +33,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .similarity import (blocked_pairs, check_max_block, cosine_with_norms_expr, jaccard_expr,
+                         lsh_bucket_expr, lsh_tables, norm_expr, pair_sides)
 
 
 def _tokens(text_col: Column) -> Column:
@@ -104,13 +110,11 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
     task); the remap join is AQE-decided (broadcasts when the distinct-
     shingle side is small, shuffle-join with skew splitting otherwise).
     """
+    check_max_block(max_block)  # before any persist: a rejected call caches nothing
     sh = docs.select(
         F.col(id_col).alias("id"), shingles_expr(F.col(text_col), n).alias("sh")
     ).persist()  # consumed by prefix explode AND both verify joins
-    # Candidate generation is ID-ONLY: exploding pairs with the shingle
-    # arrays attached would push every multi-KB array through the pair
-    # shuffle; instead dedupe (id_a, id_b) first, then join the two arrays
-    # back for the verify step (each array crosses the wire once per side).
+    # candidate generation is ID-ONLY; the arrays join back per pair (pair_sides)
     prefix_len = (
         F.col("sz")
         - F.ceil(F.col("sz") * F.lit(threshold) - F.lit(1e-9)).cast("int")
@@ -130,24 +134,9 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
         .select("id", F.md5("shingle").alias("s"))
     )
     ex = ex.persist()  # feeds the block-size agg and both join sides
-    sizes = ex.groupBy("s").agg(F.count(F.lit(1)).alias("bs"))
-    ex = ex.join(F.broadcast(sizes.filter(F.col("bs") > max_block)), "s", "left_anti")
-    a = ex.select(F.col("s"), F.col("id").alias("id_a"))
-    b = ex.select(F.col("s"), F.col("id").alias("id_b"))
-    pairs = (
-        a.join(b, "s")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    verified = pairs.join(
-        sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
-    ).join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return verified.select(
-        "id_a", "id_b", F.round(jac, 6).alias("jaccard")
+    pairs = blocked_pairs(ex, "id", ["s"], max_block).select("id_a", "id_b").distinct()
+    return pair_sides(pairs, sh, "id", ["sh"]).select(
+        "id_a", "id_b", F.round(jaccard_expr("sh_a", "sh_b"), 6).alias("jaccard")
     ).filter(F.col("jaccard") >= threshold)
 
 
@@ -249,6 +238,7 @@ def lsh_candidate_pairs(docs: DataFrame, text_col: str = "text",
     bucket key = md5(concat(band minhashes)), join within buckets.
     Returns candidate pairs (id_a < id_b, band hits)."""
     assert num_perm % bands == 0
+    check_max_block(max_block)
     rows_per_band = num_perm // bands
     sig = minhash_signature(docs, text_col, id_col, n, num_perm)
     band_cols = []
@@ -260,15 +250,8 @@ def lsh_candidate_pairs(docs: DataFrame, text_col: str = "text",
     buckets = sig.select("id", F.explode(F.array(*band_cols)).alias("bk")).select(
         "id", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey")
     ).persist()  # feeds the block-size agg and both join sides
-    sizes = buckets.groupBy("band", "bkey").agg(F.count(F.lit(1)).alias("bs"))
-    buckets = buckets.join(
-        F.broadcast(sizes.filter(F.col("bs") > max_block)), ["band", "bkey"], "left_anti"
-    )
-    a = buckets.select("band", "bkey", F.col("id").alias("id_a"))
-    b2 = buckets.select("band", "bkey", F.col("id").alias("id_b"))
     return (
-        a.join(b2, ["band", "bkey"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        blocked_pairs(buckets, "id", ["band", "bkey"], max_block)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("band_hits"))
     )
@@ -282,16 +265,9 @@ def minhash_dedup_pairs(docs: DataFrame, text_col: str = "text",
     sh = docs.select(F.col(id_col).alias("id"),
                      shingles_expr(F.col(text_col), n).alias("sh")).persist()
     cands = lsh_candidate_pairs(docs, text_col, id_col, n, num_perm, bands)
-    j = (
-        cands.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return j.select("id_a", "id_b", F.round(jac, 6).alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
-    )
+    return pair_sides(cands, sh, "id", ["sh"]).select(
+        "id_a", "id_b", F.round(jaccard_expr("sh_a", "sh_b"), 6).alias("jaccard")
+    ).filter(F.col("jaccard") >= threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -340,6 +316,7 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     block in this module."""
     segs = max_hamming + 1
     seg_len = bits // segs
+    check_max_block(max_block)
     h = docs.select(F.col(id_col).alias("id"), simhash_expr(F.col(text_col), bits).alias("sh"))
     h = h.persist()  # reused by blocking AND both verify joins
     seg_cols = F.array(
@@ -354,20 +331,8 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     ex = h.select("id", F.explode(seg_cols).alias("sc")).select(
         "id", F.col("sc.seg").alias("seg"), F.col("sc.skey").alias("skey")
     )
-    sizes = ex.groupBy("seg", "skey").agg(F.count(F.lit(1)).alias("bs"))
-    ex = ex.join(F.broadcast(sizes.filter(F.col("bs") > max_block)),
-                 ["seg", "skey"], "left_anti")
-    a = ex.select("seg", "skey", F.col("id").alias("id_a"))
-    b = ex.select("seg", "skey", F.col("id").alias("id_b"))
-    pairs = (
-        a.join(b, ["seg", "skey"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    verified = pairs.join(
-        h.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
-    ).join(h.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+    pairs = blocked_pairs(ex, "id", ["seg", "skey"], max_block).select("id_a", "id_b").distinct()
+    verified = pair_sides(pairs, h, "id", ["sh"])
     hamming = F.size(
         F.filter(
             F.zip_with(F.split("sh_a", ""), F.split("sh_b", ""), lambda x, y: x != y),
@@ -382,33 +347,6 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
 # ---------------------------------------------------------------------------
 # 5. embedding-cosine near-dup
 # ---------------------------------------------------------------------------
-def norm_expr(a: Column) -> Column:
-    """L2 norm — the same aggregate expression cosine_expr uses, exposed
-    so callers can precompute it ONCE per vector instead of once per
-    candidate pair (bit-identical: same expression over the same array)."""
-    return F.sqrt(
-        F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0),
-                    lambda s, v: s + v)
-    )
-
-
-def cosine_expr(a: Column, b: Column) -> Column:
-    return cosine_with_norms_expr(a, b, norm_expr(a), norm_expr(b))
-
-
-def cosine_with_norms_expr(a: Column, b: Column,
-                           na: Column, nb: Column) -> Column:
-    """Cosine from precomputed norms: per-pair work is ONE dot product.
-    Catalyst higher-order functions are interpreted per element, so at
-    10^5+ candidate pairs the two 64-element norm aggregates dominated
-    the verify stage — precomputing them per VECTOR (|V| rows, not |pairs|)
-    cut the verify ~3x with bit-identical results (same IEEE expression,
-    same operand order)."""
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
-
-
 def embedding_near_dup_pairs_lsh(embeddings: DataFrame, threshold: float = 0.95,
                                  id_col: str = "vec_id", vec_col: str = "embedding",
                                  dim: int = 64, n_planes: int = 6,
@@ -421,11 +359,8 @@ def embedding_near_dup_pairs_lsh(embeddings: DataFrame, threshold: float = 0.95,
     ID-ONLY (vectors join back for the verify), buckets capped like every
     pair join in this module. Recall is the standard LSH trade-off:
     1-(1-s^n_planes)^n_tables for cosine-similarity s."""
-    from .similarity import _plane, lsh_bucket_expr
-
-    tables = [
-        [_plane(f"t{t}p{p}", dim) for p in range(n_planes)] for t in range(n_tables)
-    ]
+    check_max_block(max_block)
+    tables = lsh_tables(dim, n_planes, n_tables)
     e = embeddings.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     ).withColumn(
@@ -440,22 +375,8 @@ def embedding_near_dup_pairs_lsh(embeddings: DataFrame, threshold: float = 0.95,
     ex = e.select("id", F.explode(bucket_structs).alias("bk")).select(
         "id", F.col("bk.tbl").alias("tbl"), F.col("bk.bucket").alias("bucket")
     )
-    sizes = ex.groupBy("tbl", "bucket").agg(F.count(F.lit(1)).alias("bs"))
-    ex = ex.join(F.broadcast(sizes.filter(F.col("bs") > max_block)),
-                 ["tbl", "bucket"], "left_anti")
-    a = ex.select("tbl", "bucket", F.col("id").alias("id_a"))
-    b = ex.select("tbl", "bucket", F.col("id").alias("id_b"))
-    pairs = (
-        a.join(b, ["tbl", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    verified = pairs.join(
-        e.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"),
-                 F.col("n").alias("n_a")), "id_a"
-    ).join(e.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"),
-                    F.col("n").alias("n_b")), "id_b")
+    pairs = blocked_pairs(ex, "id", ["tbl", "bucket"], max_block).select("id_a", "id_b").distinct()
+    verified = pair_sides(pairs, e, "id", ["v", "n"])
     cos = cosine_with_norms_expr(F.col("v_a"), F.col("v_b"),
                                  F.col("n_a"), F.col("n_b"))
     return verified.select(

@@ -11,8 +11,8 @@ reference src/db/neo4j_handler.py:100-134) with a blocked similarity join:
    (type, token) — candidate pairs only ever form inside a block;
 3. score candidates with the reference's exact predicate: containment either
    way with the contained side > 3 chars (reference :123-124) AND word-set
-   Jaccard > 0.5 (reference :131,136-159) — all computed with built-in array
-   functions (array_intersect / array_union), no Python;
+   Jaccard > 0.5 (reference :131,136-159) — all built-in array functions,
+   no Python;
 4. oversized blocks (degenerate tokens like 'bank') are capped: tokens whose
    block exceeds ``max_block`` names are dropped from blocking — any pair
    that satisfies Jaccard > 0.5 on ≤3-token names shares a rarer token too,
@@ -21,9 +21,9 @@ reference src/db/neo4j_handler.py:100-134) with a blocked similarity join:
    emitted pair); profile hot blocking tokens up front with
    ``skew.key_profile`` when tuning ``max_block``.
 
-The shape (token blocking + oversized-block purging before a pair-wise
-verify) is the standard distributed entity-resolution design — cf. SparkER
-(EDBT 2019), whose block-purging step this max_block cap mirrors.
+Steps 2 and 4 are the engine's one blocking stage,
+``similarity.blocked_pairs`` (SparkER's block purging, EDBT 2019, then the
+pair self-join), shared with every dedup pair emitter.
 """
 
 from __future__ import annotations
@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .normalize import norm_tokens_expr, normalize_name_expr
+from .similarity import blocked_pairs, cosine_with_norms_expr, jaccard_expr, norm_expr, pair_sides
 
 
 def name_keys(mentions: DataFrame) -> DataFrame:
@@ -63,44 +64,24 @@ def similarity_edges(keys: DataFrame, max_block: int = 1000,
     The anchor filter runs BEFORE the string predicates, so purged pairs
     never pay the containment/Jaccard work.
     """
-    anchor_cols = [anchor] if anchor else []
+    anchored = [F.col(anchor).alias("anchor")] if anchor else []
     toks = keys.select(
-        "key", "type", "norm", "tokens", *anchor_cols,
+        "key", "type", "norm", "tokens", *anchored,
         F.explode("tokens").alias("tok"),
     )
-    # cap degenerate blocks (see module docstring, step 4)
-    block_sizes = toks.groupBy("type", "tok").agg(F.count(F.lit(1)).alias("bs"))
-    toks = toks.join(
-        F.broadcast(block_sizes.filter(F.col("bs") > max_block)),
-        ["type", "tok"],
-        "left_anti",
-    )
-
-    a = toks.select(
-        F.col("type"), F.col("tok"),
-        F.col("key").alias("key_a"), F.col("norm").alias("norm_a"),
-        F.col("tokens").alias("tokens_a"),
-        *([F.col(anchor).alias("anchor_a")] if anchor else []),
-    )
-    b = toks.select(
-        F.col("type"), F.col("tok"),
-        F.col("key").alias("key_b"), F.col("norm").alias("norm_b"),
-        F.col("tokens").alias("tokens_b"),
-        *([F.col(anchor).alias("anchor_b")] if anchor else []),
-    )
+    # one row per shared token; degenerate blocks capped (module docstring, step 4)
+    pairs = blocked_pairs(toks, "key", ["type", "tok"], max_block,
+                          carry=("norm", "tokens") + (("anchor",) if anchor else ()))
     # containment gate (reference src/db/neo4j_handler.py:123-124)
     contained = (
         (F.instr(F.col("norm_b"), F.col("norm_a")) > 0) & (F.length("norm_a") > 3)
     ) | ((F.instr(F.col("norm_a"), F.col("norm_b")) > 0) & (F.length("norm_b") > 3))
     # Jaccard > 0.5 on word sets (reference :131,136-159)
-    inter = F.size(F.array_intersect("tokens_a", "tokens_b"))
-    union = F.size(F.array_union("tokens_a", "tokens_b"))
-    jaccard = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+    jaccard = jaccard_expr("tokens_a", "tokens_b")
     # score-then-dedupe: the match predicate is deterministic per (key_a,
     # key_b), so multi-token duplicate pairs agree — filtering FIRST shrinks
     # the dedupe shuffle from every candidate pair (with token arrays) to
     # just surviving edges (~50x less shuffle volume at sf0.1-equivalent)
-    pairs = a.join(b, ["type", "tok"]).filter(F.col("key_a") < F.col("key_b"))
     if anchor:
         pairs = pairs.filter(F.col("anchor_a") | F.col("anchor_b"))
     return (
@@ -181,42 +162,20 @@ def embedding_similarity_edges(keys: DataFrame, threshold: float = 0.75,
             F.sequence(F.lit(0), F.lit(dim - 1)),
             lambda b: F.size(F.filter(F.col("bks"), lambda x: x == b)).cast("double"),
         ),
-    ).withColumn(
-        "nrm",
-        F.sqrt(F.aggregate(F.col("vec"), F.lit(0.0), lambda s, x: s + x * x)),
-    )
-    # blocking is ID-ONLY: exploding with the dense dim-sized vector
-    # attached would replicate each ~2KB array once per gram through the
-    # shuffle and re-score each pair once per SHARED gram before dedup;
-    # instead dedupe (key_a, key_b) first, then join the vectors back and
-    # compute the cosine exactly once per candidate pair (the same
-    # filter-then-dedupe discipline as similarity_edges and lsh_topk).
-    ex = v.select("key", "type", *anchor_cols, F.explode("grams").alias("bk"))
-    sizes = ex.groupBy("type", "bk").agg(F.count(F.lit(1)).alias("bs"))
-    ex = ex.join(F.broadcast(sizes.filter(F.col("bs") > max_block)), ["type", "bk"], "left_anti")
-    a = ex.select(
-        "type", "bk", F.col("key").alias("key_a"),
-        *([F.col(anchor).alias("anchor_a")] if anchor else []),
-    )
-    b = ex.select(
-        "type", "bk", F.col("key").alias("key_b"),
-        *([F.col(anchor).alias("anchor_b")] if anchor else []),
-    )
-    pairs = a.join(b, ["type", "bk"]).filter(F.col("key_a") < F.col("key_b"))
+    ).withColumn("nrm", norm_expr(F.col("vec")))
+    # blocking is ID-ONLY: a ~2KB vector riding every gram row would cross
+    # the shuffle once per gram; dedupe (key_a, key_b) first, then join the
+    # vectors back (pair_sides) and score each candidate pair exactly once.
+    ex = v.select("key", "type", *[F.col(c).alias("anchor") for c in anchor_cols],
+                  F.explode("grams").alias("bk"))
+    pairs = blocked_pairs(ex, "key", ["type", "bk"], max_block,
+                          carry=("anchor",) if anchor else ())
     if anchor:
         pairs = pairs.filter(F.col("anchor_a") | F.col("anchor_b"))
-    pairs = pairs.select("key_a", "key_b").distinct()
-    vecs = v.select("key", "vec", "nrm")
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-    )
-    cos = F.when((F.col("na") > 0) & (F.col("nb") > 0), dot / (F.col("na") * F.col("nb"))).otherwise(F.lit(0.0))
+    cos = cosine_with_norms_expr(F.col("vec_a"), F.col("vec_b"),
+                                 F.col("nrm_a"), F.col("nrm_b"))
     return (
-        pairs
-        .join(vecs.select(F.col("key").alias("key_a"), F.col("vec").alias("va"),
-                          F.col("nrm").alias("na")), "key_a")
-        .join(vecs.select(F.col("key").alias("key_b"), F.col("vec").alias("vb"),
-                          F.col("nrm").alias("nb")), "key_b")
+        pair_sides(pairs.select("key_a", "key_b").distinct(), v, "key", ["vec", "nrm"])
         .withColumn("cosine", cos)
         .filter(F.col("cosine") >= threshold)
         .select("key_a", "key_b", "cosine")

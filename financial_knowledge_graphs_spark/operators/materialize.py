@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from .components import connected_components, union_find
 from .linking import embedding_similarity_edges, name_keys, similarity_edges
+from .similarity import check_max_block
 
 
 def canonical_mapping(mentions: DataFrame, max_block: int = 1000,
@@ -51,6 +52,7 @@ def canonical_mapping(mentions: DataFrame, max_block: int = 1000,
     # persist + materialize once instead of re-running the mention
     # aggregation (NOT localCheckpoint: the RDD conversion bypasses any
     # upstream DataFrame cache and would re-run the extraction UDF)
+    check_max_block(max_block)  # before the persist: a rejected call caches nothing
     keys = name_keys(mentions).persist()
     edges = similarity_edges(keys, max_block=max_block).select("key_a", "key_b")
     if embedding_link:
@@ -286,6 +288,7 @@ def canonical_mapping_incremental(
     from .linking import raw_char_ngrams_expr
     from .normalize import norm_tokens_expr
 
+    check_max_block(max_block)  # the driver twin never reaches purge_blocks
     key_cols = ["key", "type", "name", "norm", "tokens"]
     new_keys = batch_keys.join(
         prior_map.select("key"), "key", "left_anti"

@@ -486,3 +486,83 @@ def test_c4_span_dedup_hand_checked(spark):
     assert got[3]["n_removed"] == 0
     assert got[4]["clean_text"] == "" and got[4]["n_removed"] == 4
     assert got[4]["n_sentences"] == 4
+
+
+def test_blocking_stage_purge_pairs_and_carry(spark):
+    """The one blocking stage every pair emitter shares: a block of exactly
+    max_block rows is kept, one of max_block + 1 is purged; a pair sharing
+    two blocks comes back twice; carry columns arrive suffixed; id_a < id_b."""
+    rows = spark.createDataFrame(
+        [("x", 1, "t1"), ("x", 2, "t2"), ("x", 3, "t3"),        # 3 rows: kept
+         ("y", 1, "t1"), ("y", 2, "t2"),                        # 2 rows: kept
+         ("z", 4, "t4"), ("z", 5, "t5"), ("z", 6, "t6"), ("z", 7, "t7")],  # 4: purged
+        "blk string, id long, tag string")
+    kept = similarity.purge_blocks(rows, ["blk"], 3)
+    assert sorted(r["blk"] for r in kept.collect()) == ["x"] * 3 + ["y"] * 2
+
+    pairs = similarity.blocked_pairs(rows, "id", ["blk"], 3, carry=("tag",))
+    assert pairs.columns == ["blk", "id_a", "tag_a", "id_b", "tag_b"]
+    got = sorted((r["blk"], r["id_a"], r["id_b"], r["tag_a"], r["tag_b"])
+                 for r in pairs.collect())
+    assert got == [("x", 1, 2, "t1", "t2"), ("x", 1, 3, "t1", "t3"),
+                   ("x", 2, 3, "t2", "t3"), ("y", 1, 2, "t1", "t2")]
+    assert pairs.filter(F.col("id_a") >= F.col("id_b")).count() == 0
+
+
+def _bad_block_calls(spark):
+    from financial_knowledge_graphs_spark.operators import materialize
+    from financial_knowledge_graphs_spark.operators.linking import (
+        name_keys,
+        similarity_edges,
+    )
+
+    docs = spark.createDataFrame([(1, "a b c d"), (2, "a b c e")], "doc_id long, text string")
+    keys = name_keys(spark.createDataFrame(
+        [("Company", "Zeta Alpha"), ("Company", "Zeta Alpha Beta")], "type string, name string"))
+    prior = spark.createDataFrame([], materialize._MAPPING_SCHEMA)
+    return {
+        "ngram_jaccard_pairs": lambda b: dedup.ngram_jaccard_pairs(docs, max_block=b),
+        "similarity_edges": lambda b: similarity_edges(keys, max_block=b),
+        "canonical_mapping_incremental": lambda b: materialize.canonical_mapping_incremental(
+            prior, keys, max_block=b),
+    }
+
+
+@pytest.mark.parametrize("fn", ["ngram_jaccard_pairs", "similarity_edges",
+                                "canonical_mapping_incremental"])
+@pytest.mark.parametrize("bad", [0, -1, True, 2.5])
+def test_max_block_rejected_before_any_job(spark, small_corpus, fn, bad):
+    """A block cap that purges every block (0, negative) or is not an int
+    raises a ValueError naming max_block before any Spark job runs, instead
+    of silently returning no pairs, and leaves nothing cached."""
+    call = _bad_block_calls(spark)[fn]
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    sc.setJobGroup("bad-max-block", "max_block validation")
+    try:
+        with pytest.raises(ValueError, match="max_block"):
+            call(bad)
+        assert sc.statusTracker().getJobIdsForGroup("bad-max-block") == []
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    finally:
+        sc._jsc.clearJobGroup()
+        small_corpus.cache()  # the session fixture's cache, cleared above
+
+
+def test_embedding_near_dup_lsh_pairs_are_brute_force_pairs(spark):
+    """Sign-LSH blocking only drops candidates: every LSH pair is a
+    brute-force (unblocked) pair with the same cosine, and the planted
+    near-duplicates are found."""
+    import random
+
+    rng = random.Random(11)
+    rows = [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(60)]
+    rows += [(100 + i, [x + rng.gauss(0, 0.01) for x in rows[i][1]]) for i in range(5)]
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    lsh = {(r["id_a"], r["id_b"]): r["cosine"] for r in dedup.embedding_near_dup_pairs_lsh(
+        e, threshold=0.5, dim=16, n_planes=4, n_tables=4).collect()}
+    brute = {(r["id_a"], r["id_b"]): r["cosine"] for r in dedup.embedding_near_dup_pairs(
+        e, threshold=0.5, block_col=None).collect()}
+    assert {(i, 100 + i) for i in range(5)} <= set(lsh)
+    assert set(lsh) <= set(brute)
+    assert all(lsh[p] == brute[p] for p in lsh)
