@@ -3,17 +3,17 @@
 ``entry(spark)`` — flagship KG query on the deterministic interleaved-span
 fixture corpus (the BASELINE.json input shape, synthesized at small scale).
 
-``queries()`` — one entry per implemented operator family (SURVEY.md §2 +
-the training-data operators). EVERY query has an exact DuckDB oracle in
-``oracle_sql()`` (round-1 left the kg_* rows oracle-less):
+``queries()`` — 50 queries, one per implemented operator family (SURVEY.md
+§2 + the training-data operators). EVERY query has an exact DuckDB oracle
+under the same name in ``oracle_sql()``:
 - ``q_*``  : run on the driver's testdata parquet tables; oracles are SQL
   twins (hashing is md5-based everywhere so both engines compute identical
   values);
 - ``kg_*`` : run on the deterministic interleaved-document fixture corpus
   COMMITTED under .fixtures/corpus_n400_s42/; the strongest oracles compare
   pipeline output against the fixture's by-construction GROUND TRUTH
-  (kg_triples / kg_vertices / kg_ops_metrics / kg_degree / kg_two_hop), so
-  the driver's hash match IS the P/R parity gate. The pytest suite
+  (kg_triples / kg_vertices / kg_ops_metrics / kg_graph_suite), so the
+  driver's hash match IS the P/R parity gate. The pytest suite
   additionally gates resume idempotence and evaluator parity.
 """
 
@@ -132,41 +132,6 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("tc").alias("min_tokens"),
         F.max("tc").alias("max_tokens"),
         F.sum("tc").alias("sum_tokens"),
-    )
-
-
-def q_token_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §2.7 row 51 (full): the reference's token-distribution summary
-    (reference src/utils/data_processing.py:165-233) — approx tokens =
-    int(words * 1.3) + 10, then mean / median / min / max / POPULATION std /
-    10th / 90th percentiles over the corpus. Exact percentiles (np.percentile
-    linear interpolation == Spark `percentile` == DuckDB quantile_cont);
-    std derived from exact long sums so both engines run the identical
-    double-arithmetic expression."""
-    from financial_knowledge_graphs_spark.operators.prep import token_count_expr
-
-    d = _t(spark, sf_dir, "documents").withColumn(
-        "tc", (F.floor(token_count_expr("text") * 1.3) + 10).cast("long")
-    )
-    agg = d.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("tc").alias("s"),
-        F.sum(F.col("tc") * F.col("tc")).alias("s2"),
-        F.min("tc").alias("min_tokens"),
-        F.max("tc").alias("max_tokens"),
-        F.expr("percentile(tc, array(0.1D, 0.5D, 0.9D))").alias("pct"),
-    )
-    return agg.select(
-        F.col("n").alias("n_docs"),
-        F.round(F.col("s") / F.col("n"), 6).alias("mean_tokens"),
-        F.round(F.col("pct")[1], 6).alias("median_tokens"),
-        "min_tokens",
-        "max_tokens",
-        F.round(
-            F.sqrt((F.col("s2") - F.col("s") * F.col("s") / F.col("n")) / F.col("n")), 6
-        ).alias("std_tokens"),
-        F.round(F.col("pct")[0], 6).alias("p10_tokens"),
-        F.round(F.col("pct")[2], 6).alias("p90_tokens"),
     )
 
 
@@ -357,55 +322,12 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quality_score(_t(spark, sf_dir, "documents"))
 
 
-def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from financial_knowledge_graphs_spark.operators.text import fingerprint
-
-    return fingerprint(_t(spark, sf_dir, "documents"))
-
-
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc top-3 TF-IDF terms (exact rational idf — see operator
     docstring for why the oracle-checked form avoids log)."""
     from financial_knowledge_graphs_spark.operators.text import tfidf_top_terms
 
     return tfidf_top_terms(_t(spark, sf_dir, "documents"), k=3)
-
-
-def q_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §2.3 row 16: keep-first content dedup — surviving rows
-    (deterministic min-id per content digest), the prep-stage form."""
-    d = _t(spark, sf_dir, "documents")
-    w = Window.partitionBy(F.md5(F.lower(F.trim(F.col("text"))))).orderBy("doc_id")
-    return (
-        d.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "n_chars")
-    )
-
-
-def q_seeded_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §2.3 row 19: exactly-n seeded sample via content-hash order
-    (stable under any partitioning — rand(seed) is not)."""
-    d = _t(spark, sf_dir, "documents")
-    r = F.md5(F.concat(F.lit("42:"), F.col("doc_id").cast("string")))
-    return (
-        d.withColumn("r", r)
-        .orderBy("r", "doc_id")
-        .limit(50)
-        .select("doc_id", "r")
-    )
-
-
-def q_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §2.7 row 51: token-count histogram (50-token bins)."""
-    from financial_knowledge_graphs_spark.operators.prep import token_count_expr
-
-    d = _t(spark, sf_dir, "documents").withColumn(
-        "tc", token_count_expr("text").cast("long")
-    )
-    return d.groupBy(
-        (F.floor(F.col("tc") / 50) * 50).alias("bin_lo")
-    ).agg(F.count(F.lit(1)).alias("n_docs"))
 
 
 def q_name_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -531,14 +453,6 @@ def q_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §2.7 rows 45-46: group-by counts."""
-    return _t(spark, sf_dir, "orders").groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.countDistinct("o_custkey").alias("n_customers"),
-    )
-
-
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped aggregate (partial/final hash agg showcase); decimal
     sums so both engines are bit-exact."""
@@ -553,17 +467,6 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((dec("l_extendedprice") * (F.lit(1).cast("decimal(18,2)") - dec("l_discount"))).cast("decimal(28,6)")).cast("double").alias("sum_disc_price"),
             F.count(F.lit(1)).alias("count_order"),
         )
-    )
-
-
-def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming-analog windowed aggregate: per event_type per hour."""
-    e = _t(spark, sf_dir, "events")
-    return e.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
     )
 
 
@@ -701,7 +604,7 @@ def q_orders_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# KG queries (fixture corpus; rows-only driver check, gated by pytest)
+# KG queries (fixture corpus; ground-truth or SQL oracles)
 # ---------------------------------------------------------------------------
 
 def kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -800,60 +703,41 @@ def kg_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def kg_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graph-analytics surface: per-entity in/out/total degree over the
-    materialized triples (oracle = the same roll-up over GT triples)."""
-    from financial_knowledge_graphs_spark.operators.graph import degree_table
+def kg_graph_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Graph-analytics suite over the materialized triples: degree, 2-hop
+    paths, co-mention edges, the 1-hop neighborhood and BFS distances from
+    the top-degree entity (degree desc, name asc), fixed-point PageRank,
+    triangle counts and weakly-connected components. One (algo, row) frame,
+    each result row serialized by to_json in its own column order, so the
+    eight result shapes share one driver row; oracle = the same eight
+    roll-ups over GT triples."""
+    from functools import reduce
+
+    from financial_knowledge_graphs_spark.operators import graph
     from financial_knowledge_graphs_spark.operators.materialize import read_graph_table
 
     root = ensure_fixture(spark, _kg_n_docs(sf_dir))
     t = read_graph_table(spark, os.path.join(root, "warehouse", "graph", "triples"))
-    return degree_table(t)
-
-
-def kg_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-hop path expansion (a)-[p1]->(b)-[p2]->(c) over the materialized
-    graph — the canonical-id self-join a co-located bucketed table runs
-    shuffle-free."""
-    from financial_knowledge_graphs_spark.operators.graph import two_hop
-    from financial_knowledge_graphs_spark.operators.materialize import read_graph_table
-
-    root = ensure_fixture(spark, _kg_n_docs(sf_dir))
-    t = read_graph_table(spark, os.path.join(root, "warehouse", "graph", "triples"))
-    return two_hop(t)
-
-
-def kg_comention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Undirected entity co-mention graph (weight = shared docs) over the
-    materialized triples; per-doc self-join, bounded by per-doc entity
-    count — oracle = the same roll-up over GT triples."""
-    from financial_knowledge_graphs_spark.operators.graph import comention_edges
-    from financial_knowledge_graphs_spark.operators.materialize import read_graph_table
-
-    root = ensure_fixture(spark, _kg_n_docs(sf_dir))
-    t = read_graph_table(spark, os.path.join(root, "warehouse", "graph", "triples"))
-    return comention_edges(t).withColumn("weight", F.col("weight").cast("long"))
-
-
-def kg_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-hop neighborhood of the highest-degree entity (deterministic pick:
-    degree desc, name asc) — the pushdown-filtered point query a graph
-    explorer runs constantly. The entity pick is a 1-row aggregate collect;
-    the neighborhood itself is two pushed filters + a union, no shuffle."""
-    from financial_knowledge_graphs_spark.operators.graph import (
-        degree_table, neighbors,
-    )
-    from financial_knowledge_graphs_spark.operators.materialize import read_graph_table
-
-    root = ensure_fixture(spark, _kg_n_docs(sf_dir))
-    t = read_graph_table(spark, os.path.join(root, "warehouse", "graph", "triples"))
-    top = (
-        degree_table(t)
-        .orderBy(F.desc("degree"), F.asc("name"))
-        .limit(1)
-        .collect()[0]["name"]
-    )
-    return neighbors(t, top)
+    edges = graph.edge_list(t)
+    deg = graph.degree_table(t)
+    top = deg.orderBy(F.desc("degree"), F.asc("name")).limit(1).collect()[0]["name"]
+    algos = {
+        "degree": deg,
+        "two_hop": graph.two_hop(t),
+        "comention": graph.comention_edges(t).withColumn(
+            "weight", F.col("weight").cast("long")),
+        "neighbors": graph.neighbors(t, top),
+        "pagerank": graph.pagerank(edges, iters=10),
+        "bfs": graph.bfs_distances(edges, top, max_depth=6),
+        "triangles": graph.triangle_counts(edges),
+        "wcc": graph.weakly_connected_components(edges),
+    }
+    return reduce(DataFrame.union, (
+        df.select(F.lit(algo).alias("algo"),
+                  F.to_json(F.struct(*df.columns),
+                            {"ignoreNullFields": "false"}).alias("row"))
+        for algo, df in algos.items()
+    ))
 
 
 def ensure_typo_fixture(spark: SparkSession, n_docs: int = 240,
@@ -951,69 +835,6 @@ def kg_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "subj_name", "pred", "obj_name",
         "valueAmount", "percentage", "transactionDate", "_change_type",
     )
-
-
-def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-iteration PageRank over the materialized triples graph —
-    GraphFrames-style iterative DataFrame joins with BIGINT fixed-point
-    arithmetic, so the oracle (DuckDB re-running the same 10 supersteps
-    over GT edges, unrolled CTEs) matches bit-for-bit."""
-    from financial_knowledge_graphs_spark.operators.graph import edge_list, pagerank
-    from financial_knowledge_graphs_spark.operators.materialize import read_graph_table
-
-    root = ensure_fixture(spark, _kg_n_docs(sf_dir))
-    t = read_graph_table(spark, os.path.join(root, "warehouse", "graph", "triples"))
-    return pagerank(edge_list(t), iters=10)
-
-
-def kg_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-source BFS hop distances from the top-degree entity (same
-    deterministic pick as kg_neighbors), depth-capped at 6. Oracle = a
-    depth-bounded recursive CTE over GT edges with min(dist) roll-up —
-    identical semantics because hop counts are integers."""
-    from financial_knowledge_graphs_spark.operators.graph import (
-        bfs_distances, degree_table, edge_list,
-    )
-    from financial_knowledge_graphs_spark.operators.materialize import read_graph_table
-
-    root = ensure_fixture(spark, _kg_n_docs(sf_dir))
-    t = read_graph_table(spark, os.path.join(root, "warehouse", "graph", "triples"))
-    top = (
-        degree_table(t)
-        .orderBy(F.desc("degree"), F.asc("name"))
-        .limit(1)
-        .collect()[0]["name"]
-    )
-    return bfs_distances(edge_list(t), top, max_depth=6)
-
-
-def kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-vertex triangle counts over the undirected simple graph of the
-    materialized triples (ordered two-join enumeration, each triangle once)."""
-    from financial_knowledge_graphs_spark.operators.graph import (
-        edge_list, triangle_counts,
-    )
-    from financial_knowledge_graphs_spark.operators.materialize import read_graph_table
-
-    root = ensure_fixture(spark, _kg_n_docs(sf_dir))
-    t = read_graph_table(spark, os.path.join(root, "warehouse", "graph", "triples"))
-    return triangle_counts(edge_list(t))
-
-
-def kg_wcc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weakly-connected components over the materialized triples graph
-    (components.connected_components; component id = lexicographic min
-    member). Oracle = hash-min label propagation unrolled 12 supersteps
-    over GT edges — equal because the fixture graph's diameter is far
-    below 12, so both sides are at the fixpoint."""
-    from financial_knowledge_graphs_spark.operators.graph import (
-        edge_list, weakly_connected_components,
-    )
-    from financial_knowledge_graphs_spark.operators.materialize import read_graph_table
-
-    root = ensure_fixture(spark, _kg_n_docs(sf_dir))
-    t = read_graph_table(spark, os.path.join(root, "warehouse", "graph", "triples"))
-    return weakly_connected_components(edge_list(t))
 
 
 def ensure_fixture_mor(spark: SparkSession, n_docs: int, seed: int = 42) -> str:
@@ -1199,50 +1020,31 @@ def kg_eval_attrs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registration ORDER IS LOAD-BEARING: the driver's correctness gate
-    checks exactly the FIRST 50 entries (verified in VERDICT r3 against
-    CORRECTNESS_r03.json). Ordering policy for r5 (VERDICT r4 next #1):
-
-    1. the 13 queries rotated out of the r4 window go FIRST — with this
-       round's green rows, EVERY one of the 64 registered queries has had
-       a driver-green row within rounds 4-5;
-    2. then this round's new query (kg_triples_pruned — the z-order
-       pruned-read path, VERDICT r4 next #2);
-    3. then the kg pipeline core and the q_* operator queries, one per
-       graded SURVEY §2 / extension component;
-    4. entries PAST the 50th are rows driver-verified green in r4 whose
-       graded component keeps an in-window sibling (mapping documented in
-       COVERAGE.md); they stay registered, pytest-covered, and locally
-       checked by tools/check_oracles.py every round.
-    """
+    """Every registered query, each with an exact DuckDB oracle under the
+    same name in ``oracle_sql()``. The driver's correctness gate checks the
+    first 50 entries, and exactly 50 are registered, so order carries no
+    meaning and every query is inside the checked window
+    (tests/test_registry.py holds the cap and the query/oracle pairing)."""
     return {
-        # -- 1. driver-window priority: the 13 rows rotated out in r4 ------
-        "kg_lsh_ann": kg_lsh_ann,
-        "q_ann_topk": q_ann_topk,
-        "q_embedding_neardup": q_embedding_neardup,
-        "q_token_dist": q_token_dist,
-        "q_token_histogram": q_token_histogram,
-        "q_bpe_token_count": q_bpe_token_count,
-        "q_fingerprint": q_fingerprint,
-        "q_seeded_sample": q_seeded_sample,
-        "q_status_counts": q_status_counts,
-        "q_top_orders_per_customer": q_top_orders_per_customer,
-        "q_pricing_summary": q_pricing_summary,
-        "q_events_hourly": q_events_hourly,
-        "q_orders_join_agg": q_orders_join_agg,
-        # -- 2. new this round ---------------------------------------------
-        "kg_triples_pruned": kg_triples_pruned,
-        # -- 3. kg pipeline core -------------------------------------------
+        # -- kg pipeline core (committed fixture corpus) -------------------
         "kg_triples": kg_triples,
         "kg_vertices": kg_vertices,
         "kg_vertices_embedding": kg_vertices_embedding,
+        "kg_vertices_mor": kg_vertices_mor,
+        "kg_triples_pruned": kg_triples_pruned,
+        "kg_changelog": kg_changelog,
+        "kg_table_stats": kg_table_stats,
+        "kg_ops_metrics": kg_ops_metrics,
         "kg_story_reconstruction": kg_story_reconstruction,
         "kg_eval_metrics": kg_eval_metrics,
-        "kg_simhash_pairs": kg_simhash_pairs,
+        "kg_eval_attrs": kg_eval_attrs,
         "kg_media_features": kg_media_features,
+        "kg_graph_suite": kg_graph_suite,
         # -- operator queries (testdata tables), one per graded component --
         "q_quality_filter": q_quality_filter,
         "q_token_stats": q_token_stats,
+        "q_token_hist_ref": q_token_hist_ref,
+        "q_bpe_token_count": q_bpe_token_count,
         "q_redact_pii": q_redact_pii,
         "q_gopher_signals": q_gopher_signals,
         "q_ngram_repetition": q_ngram_repetition,
@@ -1251,7 +1053,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_chunk_documents": q_chunk_documents,
         "q_pack_chunks": q_pack_chunks,
         "q_dedup_exact": q_dedup_exact,
-        "q_dedup_keep_first": q_dedup_keep_first,
         "q_stratified_sample": q_stratified_sample,
         "q_name_normalize": q_name_normalize,
         "q_lang_id": q_lang_id,
@@ -1261,33 +1062,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_ngram_jaccard": q_ngram_jaccard,
         "q_neardup_clusters": q_neardup_clusters,
         "q_minhash_lsh": q_minhash_lsh,
+        "kg_simhash_pairs": kg_simhash_pairs,
+        "q_embedding_neardup": q_embedding_neardup,
         "q_embedding_neardup_lsh": q_embedding_neardup_lsh,
+        "q_ann_topk": q_ann_topk,
+        "kg_lsh_ann": kg_lsh_ann,
         "q_ivf_ann": q_ivf_ann,
         "q_anti_join_resume": q_anti_join_resume,
+        "q_top_orders_per_customer": q_top_orders_per_customer,
+        "q_pricing_summary": q_pricing_summary,
+        "q_orders_join_agg": q_orders_join_agg,
+        "q_rollup_revenue": q_rollup_revenue,
         "q_asof_join": q_asof_join,
         "q_sessionize": q_sessionize,
         "q_rolling_agg": q_rolling_agg,
         "q_key_skew_profile": q_key_skew_profile,
-        "q_rollup_revenue": q_rollup_revenue,
         "q_salted_join": q_salted_join,
-        # ------------------- 50-query driver window ends here -------------
-        # -- 4. rotated out this round: every row below was driver-verified
-        #       GREEN in r4 (CORRECTNESS_r04.json) and keeps an in-window
-        #       sibling for its graded component (see COVERAGE.md) ----------
-        "kg_pagerank": kg_pagerank,          # graph suite; r4-green
-        "kg_wcc": kg_wcc,                    # graph suite; r4-green
-        "kg_bfs": kg_bfs,                    # graph suite; r4-green
-        "kg_triangles": kg_triangles,        # graph suite; r4-green
-        "kg_comention": kg_comention,        # graph suite; r4-green
-        "kg_neighbors": kg_neighbors,        # graph suite; r4-green
-        "kg_changelog": kg_changelog,        # CDC read; r4-green
-        "kg_table_stats": kg_table_stats,    # manifest stats; r4-green
-        "kg_ops_metrics": kg_ops_metrics,    # ops roll-up; r4-green
-        "kg_degree": kg_degree,              # counts: q_status_counts in-window
-        "kg_two_hop": kg_two_hop,            # graph suite; r4-green
-        "kg_eval_attrs": kg_eval_attrs,      # eval: kg_eval_metrics in-window
-        "kg_vertices_mor": kg_vertices_mor,  # MOR: kg_vertices in-window + pytest
-        "q_token_hist_ref": q_token_hist_ref,  # q_token_histogram in-window
     }
 
 
@@ -1427,49 +1217,14 @@ def _vertices_oracle_sql(gt_e_expr: str) -> str:
         """
 
 
-def _kg_oracle_sql() -> dict[str, str]:
-    """Oracles for the kg_* queries (VERDICT r1 top-next).
-
-    The fixture corpus is deterministic parquet committed under .fixtures/
-    (n=400 = the driver's sf0.01 correctness scale), so DuckDB reads the
-    very tables the Spark queries run on. kg_triples / kg_vertices compare
-    against the BY-CONSTRUCTION GROUND TRUTH — a stronger check than any SQL
-    re-derivation. kg_simhash_pairs / kg_lsh_ann run on the driver-registered
-    testdata views with the operator's math re-implemented in SQL (planes /
-    hashes are md5-derived so both engines compute identical values)."""
-    root = _fixture_dir(400)
-    docs = f"read_parquet('{root}/documents/*.parquet')"
-    gt_t = f"read_parquet('{root}/gt_triples/*.parquet')"
-    gt_e = f"read_parquet('{root}/gt_extractions/*.parquet')"
-
-    # --- sign-LSH planes, identical to similarity.lsh_tables ------------
-    from financial_knowledge_graphs_spark.operators.similarity import lsh_tables
-
-    n_tables, n_planes, dim = 4, 6, 64
-    tables = lsh_tables(dim, n_planes, n_tables)
-
-    def bucket_sql(vcol: str, t: int) -> str:
-        bits = [
-            f"CASE WHEN list_dot_product({vcol}, [{', '.join(repr(x) for x in tables[t][p])}]) >= 0 THEN '1' ELSE '0' END"
-            for p in range(n_planes)
-        ]
-        return " || ".join(bits)
-
-    lsh_tbl = " UNION ALL ".join(
-        f"SELECT vec_id, v, {t} AS tbl, {bucket_sql('v', t)} AS bucket FROM e"
-        for t in range(n_tables)
-    )
-
-    # --- 32-bit simhash bitstring over lowercased whitespace tokens -----
-    toks_lower = _TOKENS.format(col="lower(text)")
-    sim_bits = " || ".join(
-        f"CASE WHEN 2 * len(list_filter(toks, t -> substr(md5(t), {i}, 1) >= '8')) >= len(toks) THEN '1' ELSE '0' END"
-        for i in range(1, 33)
-    )
-
-    # --- integer-fixed-point PageRank, 10 supersteps unrolled ------------
+def _graph_suite_oracle_sql(gt_t: str) -> str:
+    """DuckDB twin of kg_graph_suite: the eight graph roll-ups over the GT
+    triples ``gt_t``, each row serialized by to_json (DuckDB's row JSON is
+    byte-identical to Spark's to_json of the same columns) and tagged with
+    its algo name."""
     from financial_knowledge_graphs_spark.operators.graph import PR_SCALE
 
+    # --- integer-fixed-point PageRank, 10 supersteps unrolled ------------
     pr_tele = 15 * PR_SCALE // 100
     pr_ctes = [
         f"e AS (SELECT DISTINCT subj AS src, obj AS dst FROM {gt_t} WHERE subj <> obj)",
@@ -1516,20 +1271,55 @@ def _kg_oracle_sql() -> dict[str, str]:
         + "\nSELECT name, comp AS component FROM l12"
     )
 
-    return {
-        "kg_pagerank": pr_sql,
-        "kg_wcc": wcc_sql,
-        "kg_bfs": f"""
-            WITH RECURSIVE
-            e AS (SELECT DISTINCT subj AS src, obj AS dst FROM {gt_t}
-                  WHERE subj <> obj),
+    # top-degree entity (degree desc, name asc): the neighbors/bfs source
+    top_cte = f"""
             o AS (SELECT subj AS name, count(*) AS od FROM {gt_t} GROUP BY 1),
             i AS (SELECT obj AS name, count(*) AS id_ FROM {gt_t} GROUP BY 1),
             deg AS (
               SELECT coalesce(o.name, i.name) AS name,
                      coalesce(od, 0) + coalesce(id_, 0) AS degree
               FROM o FULL OUTER JOIN i ON o.name = i.name),
-            top AS (SELECT name FROM deg ORDER BY degree DESC, name ASC LIMIT 1),
+            top AS (SELECT name FROM deg ORDER BY degree DESC, name ASC LIMIT 1)"""
+    sqls = {
+        "degree": f"""
+            WITH o AS (SELECT subj AS name, count(*) AS od FROM {gt_t} GROUP BY 1),
+            i AS (SELECT obj AS name, count(*) AS id_ FROM {gt_t} GROUP BY 1)
+            SELECT coalesce(o.name, i.name) AS name,
+                   coalesce(od, 0) AS out_degree,
+                   coalesce(id_, 0) AS in_degree,
+                   coalesce(od, 0) + coalesce(id_, 0) AS degree
+            FROM o FULL OUTER JOIN i ON o.name = i.name
+        """,
+        "two_hop": f"""
+            SELECT DISTINCT e1.subj AS a, e1.pred AS p1, e1.obj AS b,
+                            e2.pred AS p2, e2.obj AS c
+            FROM {gt_t} e1 JOIN {gt_t} e2 ON e1.obj = e2.subj
+            WHERE e1.subj <> e2.obj
+        """,
+        "comention": f"""
+            WITH ent AS (
+              SELECT DISTINCT doc_id, subj AS name FROM {gt_t}
+              UNION
+              SELECT DISTINCT doc_id, obj AS name FROM {gt_t}
+            )
+            SELECT a.name AS src, b.name AS dst, count(*)::BIGINT AS weight
+            FROM ent a JOIN ent b ON a.doc_id = b.doc_id AND a.name < b.name
+            GROUP BY 1, 2
+        """,
+        "neighbors": f"""
+            WITH {top_cte}
+            SELECT DISTINCT obj AS neighbor, pred, 'out' AS direction
+            FROM {gt_t} WHERE subj = (SELECT name FROM top)
+            UNION
+            SELECT DISTINCT subj AS neighbor, pred, 'in' AS direction
+            FROM {gt_t} WHERE obj = (SELECT name FROM top)
+        """,
+        "pagerank": pr_sql,
+        "bfs": f"""
+            WITH RECURSIVE
+            e AS (SELECT DISTINCT subj AS src, obj AS dst FROM {gt_t}
+                  WHERE subj <> obj),
+            {top_cte},
             p(name, dist) AS (
               SELECT name, 0 FROM top
               UNION
@@ -1538,7 +1328,7 @@ def _kg_oracle_sql() -> dict[str, str]:
             )
             SELECT name, min(dist)::INT AS dist FROM p GROUP BY name
         """,
-        "kg_triangles": f"""
+        "triangles": f"""
             WITH e AS (SELECT DISTINCT subj AS src, obj AS dst FROM {gt_t}
                        WHERE subj <> obj),
             u AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
@@ -1554,6 +1344,56 @@ def _kg_oracle_sql() -> dict[str, str]:
             SELECT v.name, coalesce(per.n, 0)::BIGINT AS n_triangles
             FROM v LEFT JOIN per ON v.name = per.name
         """,
+        "wcc": wcc_sql,
+    }
+    return " UNION ALL ".join(
+        f"SELECT '{algo}' AS algo, to_json(q) AS row FROM ({sql}) q"
+        for algo, sql in sqls.items()
+    )
+
+
+def _kg_oracle_sql() -> dict[str, str]:
+    """Oracles for the kg_* queries (VERDICT r1 top-next).
+
+    The fixture corpus is deterministic parquet committed under .fixtures/
+    (n=400 = the driver's sf0.01 correctness scale), so DuckDB reads the
+    very tables the Spark queries run on. kg_triples / kg_vertices compare
+    against the BY-CONSTRUCTION GROUND TRUTH — a stronger check than any SQL
+    re-derivation. kg_simhash_pairs / kg_lsh_ann run on the driver-registered
+    testdata views with the operator's math re-implemented in SQL (planes /
+    hashes are md5-derived so both engines compute identical values)."""
+    root = _fixture_dir(400)
+    docs = f"read_parquet('{root}/documents/*.parquet')"
+    gt_t = f"read_parquet('{root}/gt_triples/*.parquet')"
+    gt_e = f"read_parquet('{root}/gt_extractions/*.parquet')"
+
+    # --- sign-LSH planes, identical to similarity.lsh_tables ------------
+    from financial_knowledge_graphs_spark.operators.similarity import lsh_tables
+
+    n_tables, n_planes, dim = 4, 6, 64
+    tables = lsh_tables(dim, n_planes, n_tables)
+
+    def bucket_sql(vcol: str, t: int) -> str:
+        bits = [
+            f"CASE WHEN list_dot_product({vcol}, [{', '.join(repr(x) for x in tables[t][p])}]) >= 0 THEN '1' ELSE '0' END"
+            for p in range(n_planes)
+        ]
+        return " || ".join(bits)
+
+    lsh_tbl = " UNION ALL ".join(
+        f"SELECT vec_id, v, {t} AS tbl, {bucket_sql('v', t)} AS bucket FROM e"
+        for t in range(n_tables)
+    )
+
+    # --- 32-bit simhash bitstring over lowercased whitespace tokens -----
+    toks_lower = _TOKENS.format(col="lower(text)")
+    sim_bits = " || ".join(
+        f"CASE WHEN 2 * len(list_filter(toks, t -> substr(md5(t), {i}, 1) >= '8')) >= len(toks) THEN '1' ELSE '0' END"
+        for i in range(1, 33)
+    )
+
+    return {
+        "kg_graph_suite": _graph_suite_oracle_sql(gt_t),
         "kg_triples": f"""
             SELECT doc_id, subj AS subj_name, pred, obj AS obj_name,
                    value_amount AS valueAmount, percentage,
@@ -1678,45 +1518,6 @@ def _kg_oracle_sql() -> dict[str, str]:
                   FROM p)
             SELECT id_a, id_b, hamming FROM h WHERE hamming <= 2
         """,
-        "kg_degree": f"""
-            WITH o AS (SELECT subj AS name, count(*) AS od FROM {gt_t} GROUP BY 1),
-            i AS (SELECT obj AS name, count(*) AS id_ FROM {gt_t} GROUP BY 1)
-            SELECT coalesce(o.name, i.name) AS name,
-                   coalesce(od, 0) AS out_degree,
-                   coalesce(id_, 0) AS in_degree,
-                   coalesce(od, 0) + coalesce(id_, 0) AS degree
-            FROM o FULL OUTER JOIN i ON o.name = i.name
-        """,
-        "kg_two_hop": f"""
-            SELECT DISTINCT e1.subj AS a, e1.pred AS p1, e1.obj AS b,
-                            e2.pred AS p2, e2.obj AS c
-            FROM {gt_t} e1 JOIN {gt_t} e2 ON e1.obj = e2.subj
-            WHERE e1.subj <> e2.obj
-        """,
-        "kg_comention": f"""
-            WITH ent AS (
-              SELECT DISTINCT doc_id, subj AS name FROM {gt_t}
-              UNION
-              SELECT DISTINCT doc_id, obj AS name FROM {gt_t}
-            )
-            SELECT a.name AS src, b.name AS dst, count(*)::BIGINT AS weight
-            FROM ent a JOIN ent b ON a.doc_id = b.doc_id AND a.name < b.name
-            GROUP BY 1, 2
-        """,
-        "kg_neighbors": f"""
-            WITH o AS (SELECT subj AS name, count(*) AS od FROM {gt_t} GROUP BY 1),
-            i AS (SELECT obj AS name, count(*) AS id_ FROM {gt_t} GROUP BY 1),
-            deg AS (
-              SELECT coalesce(o.name, i.name) AS name,
-                     coalesce(od, 0) + coalesce(id_, 0) AS degree
-              FROM o FULL OUTER JOIN i ON o.name = i.name),
-            top AS (SELECT name FROM deg ORDER BY degree DESC, name ASC LIMIT 1)
-            SELECT DISTINCT obj AS neighbor, pred, 'out' AS direction
-            FROM {gt_t} WHERE subj = (SELECT name FROM top)
-            UNION
-            SELECT DISTINCT subj AS neighbor, pred, 'in' AS direction
-            FROM {gt_t} WHERE obj = (SELECT name FROM top)
-        """,
         # Expected-value oracle: the pipeline's recorded counter metrics
         # must equal the ground-truth corpus counts.
         "kg_ops_metrics": f"""
@@ -1826,27 +1627,6 @@ def oracle_sql() -> dict[str, str]:
                    sum(tc)::BIGINT AS sum_tokens
             FROM (SELECT lang, {_TC} AS tc FROM documents)
             GROUP BY lang
-        """,
-        "q_token_dist": f"""
-            WITH t AS (SELECT (floor({_TC} * 1.3) + 10)::BIGINT AS tc FROM documents),
-            a AS (SELECT count(*) AS n,
-                         sum(tc) AS s,
-                         sum(tc * tc) AS s2,
-                         min(tc) AS min_tokens,
-                         max(tc) AS max_tokens,
-                         quantile_cont(tc, 0.1) AS p10,
-                         quantile_cont(tc, 0.5) AS p50,
-                         quantile_cont(tc, 0.9) AS p90
-                  FROM t)
-            SELECT n AS n_docs,
-                   round(CAST(s AS DOUBLE) / n, 6) AS mean_tokens,
-                   round(p50, 6) AS median_tokens,
-                   min_tokens,
-                   max_tokens,
-                   round(sqrt((CAST(s2 AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n) / n), 6) AS std_tokens,
-                   round(p10, 6) AS p10_tokens,
-                   round(p90, 6) AS p90_tokens
-            FROM a
         """,
         "q_token_hist_ref": f"""
             SELECT least(175, (floor(tc / 25) * 25))::BIGINT AS bin_lo,
@@ -2060,20 +1840,6 @@ def oracle_sql() -> dict[str, str]:
                   FROM corpus)
             WHERE doc_id <> keep_id
         """,
-        "q_dedup_keep_first": """
-            SELECT doc_id, n_chars
-            FROM (SELECT doc_id, n_chars,
-                         row_number() OVER (PARTITION BY md5(lower(trim(text)))
-                                            ORDER BY doc_id) AS rn
-                  FROM documents)
-            WHERE rn = 1
-        """,
-        "q_seeded_sample": """
-            SELECT doc_id, md5('42:' || doc_id) AS r
-            FROM documents
-            ORDER BY r, doc_id
-            LIMIT 50
-        """,
         "q_stratified_sample": """
             SELECT o_orderkey, o_orderstatus, o_custkey
             FROM (
@@ -2084,11 +1850,6 @@ def oracle_sql() -> dict[str, str]:
                                     o_orderkey ASC) AS rn
                 FROM orders
             ) WHERE rn <= 5
-        """,
-        "q_token_histogram": f"""
-            SELECT (floor(tc / 50) * 50)::BIGINT AS bin_lo, count(*) AS n_docs
-            FROM (SELECT {_TC} AS tc FROM documents)
-            GROUP BY 1
         """,
         "q_name_normalize": f"""
             WITH named AS (
@@ -2138,18 +1899,6 @@ def oracle_sql() -> dict[str, str]:
                              THEN length(regexp_replace(low, '[a-z0-9\\s]', '', 'g'))::DOUBLE / length(low) ELSE 0 END)
                        + 0.3 * least(1.0, 4.0 * CASE WHEN len(toks) > 0
                              THEN len(list_filter(toks, x -> list_contains({stopwords}, x)))::DOUBLE / len(toks) ELSE 0 END), 6) AS quality
-            FROM t
-        """,
-        "q_fingerprint": f"""
-            WITH t AS (
-              SELECT doc_id, lower(trim(text)) AS norm,
-                     {_TOKENS.format(col='lower(trim(text))')} AS toks
-              FROM documents)
-            SELECT doc_id,
-                   md5(norm) AS exact_fp,
-                   list_min(CASE WHEN len(toks) >= 3
-                        THEN list_transform(generate_series(1, len(toks)-2), i -> md5(array_to_string(toks[i:i+2], ' ')))
-                        ELSE [md5(array_to_string(toks, ' '))] END) AS shingle_fp
             FROM t
         """,
         "q_tfidf_top_terms": """
@@ -2300,11 +2049,6 @@ def oracle_sql() -> dict[str, str]:
                   FROM orders)
             WHERE rn <= 3
         """,
-        "q_status_counts": """
-            SELECT o_orderstatus, count(*) AS n_orders,
-                   count(DISTINCT o_custkey) AS n_customers
-            FROM orders GROUP BY o_orderstatus
-        """,
         "q_pricing_summary": """
             SELECT l_returnflag, l_linestatus,
                    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
@@ -2315,12 +2059,6 @@ def oracle_sql() -> dict[str, str]:
             FROM lineitem
             WHERE l_shipdate <= TIMESTAMP '2024-12-01 00:00:00'
             GROUP BY l_returnflag, l_linestatus
-        """,
-        "q_events_hourly": """
-            SELECT event_type, date_trunc('hour', ts) AS hour,
-                   count(*) AS n_events,
-                   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-            FROM events GROUP BY 1, 2
         """,
         "q_asof_join": """
             WITH ranked AS (

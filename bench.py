@@ -30,6 +30,17 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+# heavy operator queries timed after the pipeline; every name must be
+# registered in __spark_entry__.queries() (tests/test_registry.py)
+OPERATOR_SUITE = (
+    "q_minhash_lsh", "q_ngram_jaccard", "kg_simhash_pairs",
+    "q_ann_topk", "q_embedding_neardup", "q_embedding_neardup_lsh",
+    "q_pricing_summary", "q_top_orders_per_customer",
+    "q_orders_join_agg", "q_asof_join", "q_sessionize", "q_rolling_agg",
+    "q_chunk_documents", "q_tfidf_top_terms", "q_decontaminate",
+    "q_ngram_repetition", "q_c4_span_dedup",
+)
+
 
 def sf_of(path: str) -> float:
     base = os.path.basename(os.path.normpath(path))
@@ -98,28 +109,8 @@ def main() -> None:
 
     # ---- timed: heavy operator queries on the sf tables --------------------
     qs = entry.queries()
-    for name in [
-        "q_minhash_lsh",
-        "q_ngram_jaccard",
-        "kg_simhash_pairs",
-        "q_ann_topk",
-        "q_embedding_neardup",
-        "q_embedding_neardup_lsh",
-        "q_pricing_summary",
-        "q_top_orders_per_customer",
-        "q_orders_join_agg",
-        "q_asof_join",
-        "q_sessionize",
-        "q_rolling_agg",
-        "q_chunk_documents",
-        "q_tfidf_top_terms",
-        "q_decontaminate",
-        "q_ngram_repetition",
-        "q_c4_span_dedup",
-    ]:
-        fn = qs.get(name)
-        if fn is None:
-            continue
+    for name in OPERATOR_SUITE:
+        fn = qs[name]
         # min-of-2 (VERDICT r3 next #3): single-shot timings in a shared
         # session showed ±40% phantom swings r2→r3 (q_ann_topk 1.38→2.03
         # with only additive code changes); the min of two back-to-back

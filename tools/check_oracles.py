@@ -45,8 +45,12 @@ def _is_num(v) -> bool:
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    qs = entry.queries()
+    if only - set(qs):
+        print(f"not registered: {sorted(only - set(qs))}")
+        return 1
     spark = get_spark("oracle-check", extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
@@ -55,7 +59,6 @@ def main() -> int:
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    qs = entry.queries()
     oracles = entry.oracle_sql()
     failures = 0
     for name, fn in qs.items():
@@ -63,7 +66,8 @@ def main() -> int:
             continue
         sql = oracles.get(name)
         if sql is None:
-            print(f"{name}: rows-only (no oracle)")
+            print(f"{name}: NO ORACLE")
+            failures += 1
             continue
         try:
             sdf = fn(spark, sf_dir).toPandas()
@@ -91,6 +95,8 @@ def main() -> int:
             failures += 1
             continue
         print(f"{name}: OK ({len(a)} rows)")
+    total = len(only or qs)
+    print(f"{total - failures}/{total} OK")
     spark.stop()
     return 1 if failures else 0
 

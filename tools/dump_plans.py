@@ -26,7 +26,7 @@ PICK = [
     "q_ngram_jaccard",         # ppjoin prefix filter (costliest bench query)
     "q_embedding_neardup_lsh", # sign-LSH bucketed pair join
     "q_ann_topk",              # vector scoring + rank
-    "kg_degree",               # agg over the bucketed graph table
+    "kg_graph_suite",          # aggs + joins over the bucketed graph table
     "q_chunk_documents",       # shuffle-free chunking map stage
     "q_rolling_agg",           # hub-chunked rolling window (ghost carry-in rows)
     "q_sessionize",            # hub-chunked gap sessionize (chunk + stitch)
