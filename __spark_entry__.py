@@ -656,6 +656,7 @@ def kg_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row of corpus micro-metrics (P/R/F1 ≥ 0.95 gate lives in pytest)."""
     from financial_knowledge_graphs_spark import fixtures
     from financial_knowledge_graphs_spark.operators import evaluate, extract, prep
+    from financial_knowledge_graphs_spark.session import local_frame
 
     n = _kg_n_docs(sf_dir)
     root = ensure_fixture(spark, n)
@@ -669,7 +670,8 @@ def kg_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dm = evaluate.per_doc_metrics(pred, gt)
     m = evaluate.corpus_metrics(dm)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [tuple(round(m[k], 6) for k in sorted(m))],
         ", ".join(f"`{k}` double" for k in sorted(m)),
     )
@@ -805,14 +807,15 @@ def kg_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle = the same counts recomputed from ground truth, so this checks
     that the stats the merge layer records are exact."""
     from financial_knowledge_graphs_spark.operators.materialize import table_stats
+    from financial_knowledge_graphs_spark.session import local_frame
 
     root = ensure_fixture(spark, _kg_n_docs(sf_dir))
     rows = []
     for t in ("triples", "vertices"):
         st = table_stats(os.path.join(root, "warehouse", "graph", t))
         rows.append((t, int(st["rows"]) if st else -1))
-    return spark.createDataFrame(
-        rows, "table_name string, n_rows long"
+    return local_frame(
+        spark, rows, "table_name string, n_rows long"
     ).orderBy("table_name")
 
 

@@ -32,6 +32,7 @@ from pyspark.sql.types import (
 )
 
 from . import schemas
+from .session import local_frame
 
 # ---------------------------------------------------------------------------
 # Company universe (deterministic)
@@ -543,7 +544,7 @@ def alias_dict_df(spark: SparkSession, n_companies: int, seed: int = 42,
         for c in companies
         for a in aliases_for(c, typos)
     ]
-    return spark.createDataFrame(rows, schemas.ALIAS_DICT)
+    return local_frame(spark, rows, schemas.ALIAS_DICT)
 
 
 def write_corpus(spark: SparkSession, out_dir: str, n_docs: int = 1000,

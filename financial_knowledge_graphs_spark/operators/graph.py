@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def register_views(spark: SparkSession, warehouse: str) -> None:
     """Expose the graph + ops tables to the SQL surface
@@ -156,9 +158,7 @@ def bfs_distances(edges: DataFrame, source: str, max_depth: int = 6) -> DataFram
     graph. Returns (name, dist) for every vertex reachable in <= max_depth
     hops; deterministic (hop counts are integers).
     """
-    dist = edges.sparkSession.createDataFrame(
-        [(source, 0)], "name string, dist int"
-    )
+    dist = local_frame(edges.sparkSession, [(source, 0)], "name string, dist int")
     # src-partitioned adjacency: every expansion joins on src, so only the
     # (small) frontier shuffles per step, never the edge list
     e = edges.repartition("src").localCheckpoint(eager=True)

@@ -27,6 +27,7 @@ import contextlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .components import connected_components, union_find
 from .linking import embedding_similarity_edges, name_keys, similarity_edges
 from .similarity import check_max_block
@@ -196,8 +197,8 @@ def _incremental_mapping_driver(prior_map: DataFrame, cand_pdf,
         else:
             # a literal isin of 10^4+ values bloats the plan; broadcast a
             # one-column frame instead (same pushdown-free semantics)
-            spark_touched = spark.createDataFrame(
-                [(c,) for c in sorted(touched)], "comp string"
+            spark_touched = local_frame(
+                spark, [(c,) for c in sorted(touched)], "comp string"
             )
             flt = prior_map.join(F.broadcast(spark_touched), "comp")
         mem_sel = flt.select("key", "type", "name", "norm", "comp", "entity_id")
@@ -235,7 +236,7 @@ def _incremental_mapping_driver(prior_map: DataFrame, cand_pdf,
             if pcomp == comp and pid == eid:
                 continue  # unchanged member: no merge, no tombstone
             out.append((k, t, nm, no, comp, eid))
-    return spark.createDataFrame(out, _MAPPING_SCHEMA)
+    return local_frame(spark, out, _MAPPING_SCHEMA)
 
 
 def canonical_mapping_incremental(
@@ -1512,7 +1513,7 @@ def _empty_df(spark: SparkSession, meta: dict) -> DataFrame:
     """Zero rows typed by the snapshot's recorded schema."""
     from pyspark.sql.types import StructType
 
-    return spark.createDataFrame([], StructType.fromJson(meta["schema"]))
+    return local_frame(spark, [], StructType.fromJson(meta["schema"]))
 
 
 def read_graph_table(spark: SparkSession, table_path: str,
@@ -1600,9 +1601,9 @@ def read_table_changes(spark: SparkSession, table_path: str,
         rows_b = _snapshot_scan(spark, table_path, b, buckets=diff_buckets,
                                 strict=True)
         if rows_a is None:
-            rows_a = spark.createDataFrame([], rows_b.schema)
+            rows_a = local_frame(spark, [], rows_b.schema)
         if rows_b is None:
-            rows_b = spark.createDataFrame([], rows_a.schema)
+            rows_b = local_frame(spark, [], rows_a.schema)
         parts.append(
             rows_b.exceptAll(rows_a).withColumn("_change_type", F.lit("insert"))
         )
@@ -1634,7 +1635,11 @@ def lookup_by_key(spark: SparkSession, table_path: str, keys: list[str],
 
     from pyspark.sql.types import StructType
 
-    assert len(keys) == len(values)
+    if not keys or len(keys) != len(values):
+        # zip() below would silently drop the extras
+        raise ValueError(f"lookup_by_key: {len(keys)} key column(s) and "
+                         f"{len(values)} value(s); need one value per key, "
+                         f"at least one key")
     state = _table_state(table_path)
     if state is None:
         raise ValueError(f"{table_path}: no committed snapshot to look up")
@@ -1653,7 +1658,9 @@ def lookup_by_key(spark: SparkSession, table_path: str, keys: list[str],
         lambda a, c: a & c,
         [F.col(k).eqNullSafe(c) for k, c in zip(keys, lits)],
     )
-    b = spark.range(1).select(
+    # a one-row local frame: Catalyst folds the hash on the driver, so
+    # finding the bucket runs no Spark job
+    b = local_frame(spark, [(0,)], "id long").select(
         *[c.alias(k) for k, c in zip(keys, lits)]
     ).select(_bucket_expr(keys, n_buckets).alias("b")).first()["b"]
     out = _snapshot_scan(spark, table_path, state, buckets=[f"bucket={b}"],

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import schemas
+from .session import local_frame
 
 
 class OpsStore:
@@ -38,8 +39,8 @@ class OpsStore:
         n = (max(nums) + 1) if nums else 1
         run_id = f"run_{n}"
         # read("runs") above already ran _recover for this path
-        self.spark.createDataFrame(
-            [(run_id, n)], "run_id string, run_num int"
+        local_frame(
+            self.spark, [(run_id, n)], "run_id string, run_num int"
         ).withColumn("created_at", F.current_timestamp()).write.mode("append").parquet(
             self.runs_path
         )
@@ -55,7 +56,7 @@ class OpsStore:
     def processed_docs(self, run_id: str, stage: str) -> DataFrame:
         self._recover(self.checkpoints_path)
         if not os.path.isdir(self.checkpoints_path):
-            return self.spark.createDataFrame([], schemas.CHECKPOINTS).select("doc_id")
+            return local_frame(self.spark, [], schemas.CHECKPOINTS).select("doc_id")
         cp = self.spark.read.schema(schemas.CHECKPOINTS).parquet(self.checkpoints_path)
         return cp.filter(
             (F.col("run_id") == run_id) & (F.col("stage") == stage)
@@ -119,7 +120,7 @@ class OpsStore:
     def log_metrics(self, run_id: str, stage: str, values: dict[str, float]) -> None:
         rows = [(run_id, stage, k, float(v)) for k, v in values.items()]
         self._recover(self.metrics_path)  # see checkpoint_docs
-        self.spark.createDataFrame(rows, schemas.METRICS).write.mode("append").parquet(
+        local_frame(self.spark, rows, schemas.METRICS).write.mode("append").parquet(
             self.metrics_path
         )
 
@@ -134,7 +135,7 @@ class OpsStore:
                   "runs": schemas.RUNS}[which]
         self._recover(path)
         if not os.path.isdir(path):
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(path)
 
     # -- small-file hygiene (the ops-plane rewrite_data_files analog) --------

@@ -4,13 +4,20 @@ The sandbox runs local[N] on one JVM; the config set below is the same one a
 1000-executor deployment would ship (AQE + skew-join splitting on, Arrow
 vectorization on, sane shuffle sizing), so plans exercised in tests are the
 plans we'd get on a real cluster.
+
+``local_frame`` is the one way the engine turns driver-side Python rows
+(run registry, metrics, empty typed sides, a BFS seed, a driver-computed
+mapping delta) into a DataFrame: an Arrow table the JVM plans as a
+``LocalRelation``, so building and reading such a frame starts no Python
+worker and runs no Spark job.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, TimestampType
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -100,3 +107,46 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """A DataFrame over driver-sized ``rows`` (tuples in ``schema`` order).
+
+    ``spark.createDataFrame(<python list>)`` parallelizes pickled rows into
+    ``defaultParallelism`` Python-worker tasks, and pays them again on every
+    action over the frame: ~200 ms and one job per small ops-table append,
+    and an empty frame inside a plan (the resume anti-join's checkpoint
+    side) costs the same. Handed over as a ``pyarrow.Table`` the rows reach
+    the JVM as a ``LocalRelation``: no Python worker, no job, and Catalyst
+    can fold expressions over it on the driver.
+
+    The arrays are built with the schema's own Arrow types, so a value of
+    the wrong type (a ``str`` in an ``int`` column) or a null in a
+    non-nullable column raises here, as ``createDataFrame``'s
+    ``verifySchema`` does. Timestamps go through ``TimestampType.toInternal``
+    so a naive ``datetime`` means what it means on the list path. Pass
+    tuples, not a pandas frame: ``createDataFrame`` takes its Arrow path
+    for pandas only when it has rows, so an empty one still starts workers.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    rows = list(rows)
+    width = len(schema.fields)
+    bad = next((r for r in rows if len(r) != width), None)
+    if bad is not None:
+        raise ValueError(f"local_frame: row {bad!r} has {len(bad)} fields, "
+                         f"schema has {width}")
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * width
+    arrays = []
+    for field, col, atype in zip(schema.fields, cols, arrow_schema.types):
+        if not field.nullable and None in col:
+            raise ValueError(f"local_frame: null in non-nullable {field.name!r}")
+        if isinstance(field.dataType, TimestampType):
+            col = [field.dataType.toInternal(v) for v in col]
+        arrays.append(pa.array(col, type=atype))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema),
+                                 schema)

@@ -17,6 +17,7 @@ from pyspark.sql.types import (
 )
 
 from .. import schemas
+from ..session import local_frame
 
 # reference CSV shape (src/utils/data_processing.py:13-16)
 ARTICLES_CSV = StructType(
@@ -62,7 +63,7 @@ def read_articles_yaml(spark: SparkSession, path: str) -> DataFrame:
     with open(path) as f:
         data = yaml.safe_load(f) or {}
     rows = [(str(k), str(v)) for k, v in data.items()]
-    return spark.createDataFrame(rows, "newsID string, story string")
+    return local_frame(spark, rows, "newsID string, story string")
 
 
 def _read_xlsx_minimal(path: str) -> list[dict[str, str]]:
@@ -142,19 +143,17 @@ def read_articles_excel(spark: SparkSession, path: str) -> DataFrame:
         import pandas as pd  # inside the try: missing PANDAS must also
         # fall back to the vendored reader, not just missing openpyxl
 
-        pdf = pd.read_excel(path)
         # blank cells are NaN; fillna BEFORE astype or they become the
         # literal string 'nan' (the vendored fallback yields '')
-        return spark.createDataFrame(pdf.fillna("").astype(str))
+        pdf = pd.read_excel(path).fillna("").astype(str)
+        cols = [str(c) for c in pdf.columns]
+        rows = list(pdf.itertuples(index=False, name=None))
     except ImportError:  # pandas/openpyxl/xlrd not installed in this env
-        rows = _read_xlsx_minimal(path)
-        if not rows:
-            return spark.createDataFrame([], "newsID string")
-        cols = list(rows[0].keys())
-        return spark.createDataFrame(
-            [tuple(str(r.get(c, "")) for c in cols) for r in rows],
-            ", ".join(f"`{c}` string" for c in cols),
-        )
+        recs = _read_xlsx_minimal(path)
+        cols = list(recs[0].keys()) if recs else []
+        rows = [tuple(str(r.get(c, "")) for c in cols) for r in recs]
+    return local_frame(spark, rows,
+                       ", ".join(f"`{c}` string" for c in cols or ["newsID"]))
 
 
 def articles_to_documents(articles: DataFrame) -> DataFrame:
