@@ -62,8 +62,9 @@ sys.path.insert(0, {repo!r})
 from financial_knowledge_graphs_spark import fixtures
 from financial_knowledge_graphs_spark.session import get_spark
 
-n_docs = int(sys.argv[1]); corpus = sys.argv[2]
-spark = get_spark("fkg-gen", extra_conf={{"spark.ui.showConsoleProgress": "false"}})
+n_docs = int(sys.argv[1]); corpus = sys.argv[2]; cpus = int(sys.argv[3])
+spark = get_spark("fkg-gen", master=f"local[{{cpus}}]",
+                  extra_conf={{"spark.ui.showConsoleProgress": "false"}})
 spark.sparkContext.setLogLevel("ERROR")
 os.makedirs(corpus, exist_ok=True)
 fixtures.write_corpus(spark, corpus, n_docs=n_docs, seed=42)
@@ -86,10 +87,13 @@ def run_child(script: str, *args: str) -> dict:
     raise RuntimeError(f"no RESULT line (rc={out.returncode}):\n{out.stdout[-2000:]}\n{out.stderr[-2000:]}")
 
 
-def ensure_corpus(n_docs: int) -> str:
+def ensure_corpus(n_docs: int, cpus: int) -> str:
+    """Build the corpus once, at the high level's core count: the session
+    default (``SPARK_GRAFT_CPUS`` or 32 threads) can oversubscribe a small
+    host. The rows do not depend on the core count (seeded per doc)."""
     corpus = os.path.join(REPO, ".fixtures", f"bench_corpus_n{n_docs}_s42")
     if not os.path.exists(os.path.join(corpus, "_COMPLETE")):
-        run_child(CORPUS, str(n_docs), corpus)
+        run_child(CORPUS, str(n_docs), corpus, str(cpus))
     return corpus
 
 
@@ -98,7 +102,7 @@ def main() -> None:
     low_cpus = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     high_cpus = int(sys.argv[3]) if len(sys.argv) > 3 else 8
     repeats = int(sys.argv[4]) if len(sys.argv) > 4 else 2
-    corpus = ensure_corpus(n_docs)
+    corpus = ensure_corpus(n_docs, high_cpus)
 
     lows, highs = [], []
     for i in range(repeats):

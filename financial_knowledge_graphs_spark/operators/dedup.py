@@ -230,6 +230,18 @@ def minhash_signature(docs: DataFrame, text_col: str = "text",
     return sh.select("id", *cols)
 
 
+def _check_bands(num_perm, bands) -> None:
+    """Banded LSH needs ``bands`` equal bands of the ``num_perm`` minhashes;
+    refuse any other split before a plan is built (``bands=0`` would divide
+    by zero, an uneven split would drop minhashes)."""
+    for name, v in (("num_perm", num_perm), ("bands", bands)):
+        if isinstance(v, bool) or not isinstance(v, int) or v < 1:
+            raise ValueError(f"{name} must be an int >= 1, got {v!r}")
+    if num_perm % bands:
+        raise ValueError(
+            f"num_perm ({num_perm}) must be a multiple of bands ({bands})")
+
+
 def lsh_candidate_pairs(docs: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", n: int = 3,
                         num_perm: int = 8, bands: int = 4,
@@ -237,7 +249,7 @@ def lsh_candidate_pairs(docs: DataFrame, text_col: str = "text",
     """Banded LSH: split the K minhashes into ``bands`` rows of K/bands,
     bucket key = md5(concat(band minhashes)), join within buckets.
     Returns candidate pairs (id_a < id_b, band hits)."""
-    assert num_perm % bands == 0
+    _check_bands(num_perm, bands)
     check_max_block(max_block)
     rows_per_band = num_perm // bands
     sig = minhash_signature(docs, text_col, id_col, n, num_perm)
@@ -262,6 +274,7 @@ def minhash_dedup_pairs(docs: DataFrame, text_col: str = "text",
                         num_perm: int = 8, bands: int = 4,
                         threshold: float = 0.8) -> DataFrame:
     """LSH candidates verified with exact shingle Jaccard ≥ threshold."""
+    _check_bands(num_perm, bands)  # before the persist: a rejected call caches nothing
     sh = docs.select(F.col(id_col).alias("id"),
                      shingles_expr(F.col(text_col), n).alias("sh")).persist()
     cands = lsh_candidate_pairs(docs, text_col, id_col, n, num_perm, bands)
@@ -281,7 +294,8 @@ def simhash_expr(text_col: Column, bits: int = 16) -> Column:
     (Round 1 truncated the digest to 16 hex chars, silently zeroing bits
     17-32 of a 32-bit hash — half the hash carried no signal.)
     """
-    assert bits <= 32, "md5 hex has 32 digits"
+    if isinstance(bits, bool) or not isinstance(bits, int) or not 1 <= bits <= 32:
+        raise ValueError(f"bits must be an int in [1, 32] (md5 hex has 32 digits), got {bits!r}")
     # hash each token ONCE, then fold bits over the digests — the round-1
     # expression re-evaluated md5(t) per bit position (bits× the hash work;
     # VERDICT r1 flagged this stage as the costliest in the bench)

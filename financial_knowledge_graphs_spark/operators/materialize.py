@@ -36,7 +36,8 @@ from .similarity import check_max_block
 def canonical_mapping(mentions: DataFrame, max_block: int = 1000,
                       embedding_link: bool = False,
                       embedding_threshold: float = 0.75,
-                      cleanup: list | None = None) -> DataFrame:
+                      cleanup: list | None = None,
+                      driver_threshold: int = 50_000) -> DataFrame:
     """(type, name) → canonical component + canonical entity_id.
 
     entity_id is content-addressed (sha2 of the component's min key), so
@@ -48,6 +49,17 @@ def canonical_mapping(mentions: DataFrame, max_block: int = 1000,
     reference's containment+Jaccard predicate — catches typos/run-together
     variants the token-set test misses. Off by default: the reference-parity
     P/R gate is defined on the reference predicate alone.
+
+    Adaptive plan, chosen at run time from the ledger's size: up to
+    ``driver_threshold`` distinct surfaces (and up to DRIVER_PAIR_BUDGET
+    in-block candidate pairs), the surface keys are collected once and
+    blocked, verified, labelled and id'd on the driver by the same core the
+    incremental path uses (``_driver_canonicalize``), then joined back onto
+    the keys as a broadcast frame — one collect instead of the ~13 jobs of
+    the distributed blocking → verify → components chain. Larger ledgers,
+    pair-heavy ones, ``embedding_link`` and ``driver_threshold=0`` take the
+    distributed plan. Both plans return the same rows and columns
+    (``tests/test_canonical_mapping_driver.py``).
     """
     # keys feed three consumers (edge build ×2 sides, final map join) —
     # persist + materialize once instead of re-running the mention
@@ -55,6 +67,29 @@ def canonical_mapping(mentions: DataFrame, max_block: int = 1000,
     # upstream DataFrame cache and would re-run the extraction UDF)
     check_max_block(max_block)  # before the persist: a rejected call caches nothing
     keys = name_keys(mentions).persist()
+    # ownership of the keys cache passes to the caller via `cleanup`: once
+    # the returned mapping is materialized, unpersist it (the pipeline
+    # passes its batch-scoped _cleanup list). Leaving it cached for the
+    # session lifetime leaks the full distinct-surface ledger into executor
+    # storage on every full relink. Callers that pass no list (short-lived
+    # tests/tools) accept the session-scoped cache.
+    if cleanup is not None:
+        cleanup.append(keys)
+    if not embedding_link and driver_threshold:
+        cand_pdf = (keys.select("key", "type", "name", "norm", "tokens")
+                    .limit(driver_threshold + 1).toPandas())
+        if len(cand_pdf) <= driver_threshold:
+            cand_pdf["is_new"] = True   # a full relink: every surface is new
+            cand_pdf["comp"] = None
+            res = _driver_canonicalize(keys.sparkSession, cand_pdf, max_block)
+            if res is not None:
+                mapped = keys.join(
+                    F.broadcast(res.select("key", "comp", "entity_id")), "key", "left")
+                # the distributed plan's columns: order (_assign_entity_ids)
+                # and a non-null comp (every key is in `res`)
+                return mapped.select(F.coalesce("comp", "key").alias("comp"), "key",
+                                     *[c for c in keys.columns if c != "key"],
+                                     "entity_id")
     edges = similarity_edges(keys, max_block=max_block).select("key_a", "key_b")
     if embedding_link:
         edges = edges.unionByName(
@@ -66,16 +101,7 @@ def canonical_mapping(mentions: DataFrame, max_block: int = 1000,
     mapped = keys.join(comp, "key", "left").withColumn(
         "comp", F.coalesce("comp", "key")  # singletons
     )
-    out = _assign_entity_ids(mapped)
-    # ownership of the keys cache passes to the caller via `cleanup`: once
-    # the returned mapping is materialized, unpersist it (the pipeline
-    # passes its batch-scoped _cleanup list). Leaving it cached for the
-    # session lifetime leaks the full distinct-surface ledger into executor
-    # storage on every full relink. Callers that pass no list (short-lived
-    # tests/tools) accept the session-scoped cache.
-    if cleanup is not None:
-        cleanup.append(keys)
-    return out
+    return _assign_entity_ids(mapped)
 
 
 def _assign_entity_ids(mapped: DataFrame) -> DataFrame:
@@ -112,78 +138,99 @@ def _assign_entity_ids(mapped: DataFrame) -> DataFrame:
 
 _MAPPING_SCHEMA = "key string, type string, name string, norm string, comp string, entity_id string"
 
+# The driver core verifies in-block candidate pairs in Python, about 0.3 µs
+# a pair (2.59M pairs of a 36k-surface alias ledger in 0.79 s, 4 cores).
+# Against the distributed plan on the same host, the driver path wins at
+# 2.6M pairs (that ledger: 1.58 vs 2.36 s) and at 3.1M pairs in one block
+# (1.27 vs 1.38 s), and loses at 6.1M (2.21 vs 1.92 s). Past this many
+# pairs the core returns None and the caller runs the distributed plan.
+DRIVER_PAIR_BUDGET = 3_000_000
 
-def _incremental_mapping_driver(prior_map: DataFrame, cand_pdf,
-                                max_block: int,
-                                driver_threshold: int = 0) -> DataFrame | None:
-    """Driver twin of the distributed incremental path (token edges only).
 
-    Returns ``None`` when the touched-component member pull would exceed
-    ``driver_threshold`` rows (ADVICE r3: the candidate cap alone does not
-    bound the member fetch — one degenerate mega-component could OOM the
-    driver even on a tiny batch); the caller falls back to the distributed
-    path, which streams members through Spark.
+def _driver_canonicalize(spark: SparkSession, cand_pdf, max_block: int,
+                         prior_map: DataFrame | None = None,
+                         member_limit: int = 0) -> DataFrame | None:
+    """Driver twin of the distributed canonicalization (token edges only),
+    shared by the full path (every surface new, no ``prior_map``) and the
+    incremental path (new surfaces plus their bridged prior surfaces).
+
+    ``cand_pdf`` is a pandas frame of ``key, type, name, norm, tokens,
+    is_new, comp`` (``comp``: the prior component of a non-new row). The
+    return is the mapping rows (``_MAPPING_SCHEMA``) whose (comp,
+    entity_id) moved — every row on the full path — or ``None`` when the
+    in-block pairs to verify exceed DRIVER_PAIR_BUDGET, or the
+    touched-component member pull exceeds ``member_limit`` rows (ADVICE
+    r3: the candidate cap alone does not bound the member fetch — one
+    degenerate mega-component could OOM the driver even on a tiny batch);
+    the caller then runs the distributed plan.
 
     Every step mirrors the Catalyst expressions bit-for-bit: block sizes
-    count token OCCURRENCES (explode semantics), pairs are anchored on a
-    new side and ordered key_a < key_b, the predicate is the reference's
-    containment gate (len>3 substring either way) AND token-set Jaccard
-    > 0.5 (array_intersect/array_union are set ops), comp = min member key
-    (CC semantics), entity_id = sha2(type|min-nonempty-norm, 256)[:16]
-    with min-key fallback (_assign_entity_ids), and only rows whose
-    (comp, entity_id) moved are returned. ASCII/UTF-8 string comparison
-    agrees between Python and UTF8String for the BMP, so min/ordering
-    match."""
+    count token OCCURRENCES (explode semantics), a NULL type joins no
+    block, pairs are anchored on a new side and ordered key_a < key_b, the
+    predicate is the reference's containment gate (len>3 substring either
+    way) AND token-set Jaccard > 0.5 (array_intersect/array_union are set
+    ops), comp = min member key (CC semantics), entity_id =
+    sha2(type|min-nonempty-norm, 256)[:16] with min-key fallback
+    (_assign_entity_ids; concat_ws skips a NULL type). A NULL name has NULL
+    norm and tokens: it blocks nowhere and keeps its NULL norm. UTF-8 byte
+    order is code-point order, so Python's string min/ordering matches
+    UTF8String's."""
     import hashlib
     from collections import defaultdict
+    from itertools import chain, combinations, product
 
-    spark = prior_map.sparkSession
     n = len(cand_pdf)
     keys = cand_pdf["key"].tolist()
     types = cand_pdf["type"].tolist()
     names = cand_pdf["name"].tolist()
-    norms = [x or "" for x in cand_pdf["norm"].tolist()]
-    toks = [list(t) for t in cand_pdf["tokens"].tolist()]
+    norms = cand_pdf["norm"].tolist()
+    texts = [x or "" for x in norms]  # NULL fails the gate exactly like ""
+    toks = [[] if t is None else list(t) for t in cand_pdf["tokens"].tolist()]
     is_new = cand_pdf["is_new"].tolist()
     prior_comp = cand_pdf["comp"].tolist()
 
     blocks: dict[tuple[str, str], list[int]] = defaultdict(list)
     for i in range(n):
-        for t in toks[i]:
-            blocks[(types[i], t)].append(i)
+        if types[i] is not None:
+            for t in toks[i]:
+                blocks[(types[i], t)].append(i)
 
-    tok_sets = [set(t) for t in toks]
-    edges: set[tuple[str, str]] = set()
+    # size the Python work before doing it: pairs with a new side, per kept
+    # block (oversized blocks are purged, occurrence-counted)
+    kept, n_pairs = [], 0
     for idxs in blocks.values():
         if len(idxs) > max_block:
-            continue  # oversized-block purge, occurrence-counted
+            continue
         uniq = set(idxs)
-        new_in_block = [i for i in uniq if is_new[i]]
-        for i in new_in_block:
-            for j in uniq:
-                if i == j:
-                    continue
-                a, b = (i, j) if keys[i] < keys[j] else (j, i)
-                if is_new[a] and is_new[b] and a != i:
-                    continue  # new↔new pair: visit once (from the lower side)
-                pair = (keys[a], keys[b])
-                if pair in edges:
-                    continue
-                na, nb = norms[a], norms[b]
-                if not ((len(na) > 3 and na in nb) or (len(nb) > 3 and nb in na)):
-                    continue
-                union = len(tok_sets[a] | tok_sets[b])
-                if union == 0 or len(tok_sets[a] & tok_sets[b]) / union <= 0.5:
-                    continue
-                edges.add(pair)
+        new = sorted(i for i in uniq if is_new[i])
+        old = [i for i in uniq if not is_new[i]]
+        n_pairs += len(new) * len(old) + len(new) * (len(new) - 1) // 2
+        kept.append((new, old))
+    if n_pairs > DRIVER_PAIR_BUDGET:
+        return None
+
+    tok_sets = [set(t) for t in toks]
+    edges: set[tuple[int, int]] = set()
+    for new, old in kept:
+        for i, j in chain(combinations(new, 2), product(new, old)):
+            if keys[i] < keys[j]:
+                a, b = i, j
+            elif keys[j] < keys[i]:
+                a, b = j, i
+            else:
+                continue
+            if (a, b) in edges:
+                continue
+            na, nb = texts[a], texts[b]
+            if not ((len(na) > 3 and na in nb) or (len(nb) > 3 and nb in na)):
+                continue
+            union = len(tok_sets[a] | tok_sets[b])
+            if union == 0 or len(tok_sets[a] & tok_sets[b]) / union <= 0.5:
+                continue
+            edges.add((a, b))
 
     # touched components: prior endpoints of an actual verified edge
-    by_key = {keys[i]: i for i in range(n)}
-    touched = {
-        prior_comp[by_key[k]]
-        for e in edges for k in e
-        if not is_new[by_key[k]]
-    }
+    touched = {prior_comp[i] for e in edges for i in e if not is_new[i]}
 
     # every member of a touched component (pushed isin filter: components
     # are a point-lookup-sized set, the scan prunes on the comp column)
@@ -202,21 +249,21 @@ def _incremental_mapping_driver(prior_map: DataFrame, cand_pdf,
             )
             flt = prior_map.join(F.broadcast(spark_touched), "comp")
         mem_sel = flt.select("key", "type", "name", "norm", "comp", "entity_id")
-        if driver_threshold:
+        if member_limit:
             # bound the member fetch like the candidate fetch: limit+1 and
             # bail to the distributed path on overflow (arbitrary subset is
             # fine — it is discarded)
-            mem_pdf = mem_sel.limit(driver_threshold + 1).toPandas()
-            if len(mem_pdf) > driver_threshold:
+            mem_pdf = mem_sel.limit(member_limit + 1).toPandas()
+            if len(mem_pdf) > member_limit:
                 return None
         else:
             mem_pdf = mem_sel.toPandas()
         for r in mem_pdf.itertuples(index=False):
-            rows[r.key] = (r.type, r.name, r.norm or "", r.comp, r.entity_id)
+            rows[r.key] = (r.type, r.name, r.norm, r.comp, r.entity_id)
 
     # components over verified edges + virtual edges (member → prior comp)
     label = union_find([
-        *edges,
+        *((keys[a], keys[b]) for a, b in edges),
         *((k, pcomp) for k, (_, _, _, pcomp, _) in rows.items()
           if pcomp is not None),
     ])
@@ -225,12 +272,11 @@ def _incremental_mapping_driver(prior_map: DataFrame, cand_pdf,
         groups[label.get(k, k)].append(k)
     out = []
     for comp, members in groups.items():
-        nonempty = [rows[k][2] for k in members if rows[k][2] != ""]
+        nonempty = [rows[k][2] for k in members if rows[k][2]]
         rep = min(nonempty) if nonempty else comp
         ktype = rows[members[0]][0]
-        eid = "ent_" + hashlib.sha256(
-            f"{ktype}|{rep}".encode("utf-8")
-        ).hexdigest()[:16]
+        basis = rep if ktype is None else f"{ktype}|{rep}"
+        eid = "ent_" + hashlib.sha256(basis.encode("utf-8")).hexdigest()[:16]
         for k in members:
             t, nm, no, pcomp, pid = rows[k]
             if pcomp == comp and pid == eid:
@@ -329,7 +375,7 @@ def canonical_mapping_incremental(
     # Below the threshold, ONE Arrow collect + pure-Python twin of the
     # exact same predicate/UF/assignment + one pushed-filter member fetch
     # replaces the whole chain; the distributed path remains for large
-    # batches (cold starts, fresh domains) and for embedding_link, whose
+    # batches (fresh domains) and for embedding_link, whose
     # hashed-cosine math stays Catalyst-only. Equality of the two paths is
     # pinned by test_incremental_mapping.py::test_driver_path_equals_distributed.
     if not embedding_link and driver_threshold:
@@ -344,14 +390,15 @@ def canonical_mapping_incremental(
             .toPandas()
         )
         if len(cand_pdf) <= driver_threshold:
-            res = _incremental_mapping_driver(
-                prior_map, cand_pdf, max_block, driver_threshold
+            res = _driver_canonicalize(
+                prior_map.sparkSession, cand_pdf, max_block,
+                prior_map=prior_map, member_limit=driver_threshold,
             )
             if res is not None:
                 return res
-        # over threshold (candidates OR touched-component members): fall
-        # through to the distributed plan (recomputes the bridge —
-        # acceptable for the rare huge-batch / mega-component case)
+        # over threshold (candidates, in-block pairs OR touched-component
+        # members): fall through to the distributed plan (recomputes the
+        # bridge — acceptable for the rare huge-batch / mega-component case)
 
     # --- edges: verify ONLY pairs with a new side, over new ∪ bridged
     cand_universe = new_keys.withColumn("is_new", F.lit(True)).unionByName(
@@ -1843,7 +1890,10 @@ def _merge_upsert_attempt(spark: SparkSession, table_path: str,
     # ONE driver-blocking job answers all three head questions (any update
     # rows? any delete rows? which buckets touched?) — these were three
     # separate jobs, and at ~0.5s scheduling latency each across the 4-5
-    # merges a pipeline batch runs, the pure-latency tail added seconds.
+    # merges a pipeline batch runs, the pure-latency tail added seconds. A
+    # first write (no snapshot) runs no head: there is nothing to match,
+    # delete or leave untouched, so its deletes are void and every row
+    # (none included — a zero-row table is still committed) is an append.
     src = dedup.select("__bucket", F.lit(0).alias("__src"))
     if deletes is not None:
         src = src.unionByName(
@@ -1855,7 +1905,7 @@ def _merge_upsert_attempt(spark: SparkSession, table_path: str,
         for r in src.groupBy("__src").agg(
             F.collect_set("__bucket").alias("bs")
         ).collect()
-    }
+    } if state else {}
     upd_buckets = per_src.get(0, set())
     del_buckets = per_src.get(1, set())
     if not del_buckets:
@@ -1960,9 +2010,12 @@ def _merge_upsert_attempt(spark: SparkSession, table_path: str,
     # N_tasks×N_buckets small files per merge. Hash-repartitioning on
     # __bucket gives exactly one file per bucket (at real scale, pair with
     # spark.sql.files.maxRecordsPerFile to re-split oversized buckets).
-    # Only dirty buckets' survivors + the new rows cross this shuffle.
+    # Only dirty buckets' survivors + the new rows cross this shuffle. No
+    # partition count: AQE coalesces the shuffle to the batch's bytes (a
+    # small batch writes in a task or two, not n_buckets tasks), and
+    # coalescing only merges whole partitions, so a bucket never splits.
     with _staging(table_path) as staging:
-        merged.repartition(n_buckets, F.col("__bucket")).write.partitionBy(
+        merged.repartition(F.col("__bucket")).write.partitionBy(
             "__bucket"
         ).mode("overwrite").parquet(os.path.join(staging, "data"))
         if mor_gone is not None:

@@ -549,6 +549,42 @@ def test_max_block_rejected_before_any_job(spark, small_corpus, fn, bad):
         small_corpus.cache()  # the session fixture's cache, cleared above
 
 
+_BAD_LSH_KNOBS = {
+    "lsh_bands_zero": (lambda d: dedup.lsh_candidate_pairs(d, bands=0), "bands"),
+    "lsh_uneven_bands": (lambda d: dedup.lsh_candidate_pairs(d, num_perm=8, bands=3),
+                         "multiple of bands"),
+    "lsh_num_perm_zero": (lambda d: dedup.lsh_candidate_pairs(d, num_perm=0), "num_perm"),
+    "minhash_bands_zero": (lambda d: dedup.minhash_dedup_pairs(d, bands=0), "bands"),
+    "minhash_uneven_bands": (lambda d: dedup.minhash_dedup_pairs(d, num_perm=7, bands=2),
+                             "multiple of bands"),
+    "simhash_bits_33": (lambda d: d.select(dedup.simhash_expr(F.col("text"), bits=33)),
+                        "bits"),
+    "simhash_bits_zero": (lambda d: d.select(dedup.simhash_expr(F.col("text"), bits=0)),
+                          "bits"),
+    "simhash_pairs_bits_64": (lambda d: dedup.simhash_pairs(d, bits=64), "bits"),
+}
+
+
+@pytest.mark.parametrize("case", list(_BAD_LSH_KNOBS))
+def test_lsh_and_simhash_knobs_rejected_before_any_job(spark, case):
+    """Band and bit counts are checked where they enter, with a ValueError
+    (an assert vanishes under ``python -O``; bands=0 divided by zero), before
+    any job runs or anything is cached."""
+    from financial_knowledge_graphs_spark.session import local_frame
+
+    call, match = _BAD_LSH_KNOBS[case]
+    docs = local_frame(spark, [("d1", "alpha beta gamma delta")],
+                       "doc_id string, text string")
+    sc = spark.sparkContext
+    sc.setJobGroup("bad-lsh-knob", "lsh knob validation")
+    try:
+        with pytest.raises(ValueError, match=match):
+            call(docs)
+        assert sc.statusTracker().getJobIdsForGroup("bad-lsh-knob") == []
+    finally:
+        sc._jsc.clearJobGroup()
+
+
 def test_embedding_near_dup_lsh_pairs_are_brute_force_pairs(spark):
     """Sign-LSH blocking only drops candidates: every LSH pair is a
     brute-force (unblocked) pair with the same cosine, and the planted
