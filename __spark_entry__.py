@@ -1092,6 +1092,19 @@ _TOKENS = "list_filter(regexp_split_to_array({col}, '\\s+'), x -> x <> '')"
 _TC = f"len({_TOKENS.format(col='text')})"
 
 
+def _ngrams_sql(toks: str, n: int, gram: str = "{}", keep_short: bool = True) -> str:
+    """DuckDB twin of text.word_ngrams: ``gram`` (a format string) of every
+    space-joined n-token window of the list ``toks``; a shorter list gives
+    [gram(all tokens joined)] when ``keep_short``, else []."""
+    join = "array_to_string({}, ' ')"
+    win = gram.format(join.format(f"{toks}[i:i+{n - 1}]"))
+    # DuckDB joins an empty list to NULL where Spark's concat_ws gives ''
+    whole = f"coalesce({join.format(toks)}, '')"
+    short = f"[{gram.format(whole)}]" if keep_short else "[]::VARCHAR[]"
+    return (f"CASE WHEN len({toks}) >= {n} THEN list_transform("
+            f"generate_series(1, len({toks}) - {n - 1}), i -> {win}) ELSE {short} END")
+
+
 def _pii_oracle_sql() -> str:
     """DuckDB twin of q_redact_pii, generated from the SAME PII_PATTERNS
     list so the two can never drift."""
@@ -1119,7 +1132,7 @@ def _pii_oracle_sql() -> str:
 def _gopher_oracle_sql() -> str:
     """DuckDB twin of q_gopher_signals (same injected text derivation and
     the same int/int double divisions, so values are bit-identical)."""
-    return """
+    return f"""
         WITH base AS (
           SELECT doc_id,
                  replace(text, ' merge ', chr(10)) ||
@@ -1132,8 +1145,7 @@ def _gopher_oracle_sql() -> str:
         ), arr AS (
           SELECT doc_id, t,
                  list_filter(str_split(t, chr(10)), x -> x <> '') AS lines,
-                 list_filter(regexp_split_to_array(t, '\\s+'),
-                             x -> x <> '') AS toks
+                 {_TOKENS.format(col='t')} AS toks
           FROM base
         ), sig AS (
           SELECT doc_id,
@@ -1599,11 +1611,7 @@ def _kg_oracle_sql() -> dict[str, str]:
 
 
 def oracle_sql() -> dict[str, str]:
-    shingles = (
-        "list_distinct(CASE WHEN len(toks) >= 3 THEN "
-        "list_transform(generate_series(1, len(toks)-2), i -> array_to_string(toks[i:i+2], ' ')) "
-        "ELSE [array_to_string(toks, ' ')] END)"
-    )
+    shingles = f"list_distinct({_ngrams_sql('toks', 3)})"
     toks_lower = _TOKENS.format(col="lower(text)")
     lang_occ = lambda m: (
         f"(length(' ' || lower(text) || ' ') - length(replace(' ' || lower(text) || ' ', '{m}', ''))) / {len(m)}"
@@ -1668,11 +1676,7 @@ def oracle_sql() -> dict[str, str]:
                      toks
               FROM t
             ), g2 AS (
-              SELECT doc_id, unnest(
-                CASE WHEN len(toks) >= 2
-                  THEN list_transform(generate_series(1, len(toks) - 1),
-                                      i -> array_to_string(toks[i:i+1], ' '))
-                  ELSE []::VARCHAR[] END) AS gram
+              SELECT doc_id, unnest({_ngrams_sql('toks', 2, keep_short=False)}) AS gram
               FROM base
             ), c2 AS (
               SELECT doc_id, gram, count(*)::BIGINT AS c,
@@ -1685,11 +1689,7 @@ def oracle_sql() -> dict[str, str]:
                     FROM c2)
               WHERE rn = 1
             ), g5 AS (
-              SELECT doc_id, unnest(
-                CASE WHEN len(toks) >= 5
-                  THEN list_transform(generate_series(1, len(toks) - 4),
-                                      i -> array_to_string(toks[i:i+4], ' '))
-                  ELSE []::VARCHAR[] END) AS gram
+              SELECT doc_id, unnest({_ngrams_sql('toks', 5, keep_short=False)}) AS gram
               FROM base
             ), c5 AS (
               SELECT doc_id, gram, count(*)::BIGINT AS c,
@@ -1723,12 +1723,7 @@ def oracle_sql() -> dict[str, str]:
                      {_TOKENS.format(col='lower(trim(text))')} AS toks
               FROM documents
             ), h AS (
-              SELECT doc_id,
-                     CASE WHEN len(toks) >= 8
-                       THEN list_transform(
-                              generate_series(1, len(toks) - 7),
-                              i -> md5(array_to_string(toks[i:i+7], ' ')))
-                       ELSE [md5(array_to_string(toks, ' '))] END AS hs
+              SELECT doc_id, {_ngrams_sql('toks', 8, 'md5({})')} AS hs
               FROM t
             ), g AS (
               SELECT doc_id, unnest(list_distinct(hs)) AS g FROM h
@@ -1929,11 +1924,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "q_winnow_fingerprint": f"""
             WITH t AS (SELECT doc_id, {_TOKENS.format(col='lower(trim(text))')} AS toks FROM documents),
-            h AS (SELECT doc_id,
-                    CASE WHEN len(toks) >= 3
-                      THEN list_transform(generate_series(1, len(toks)-2), i -> md5(array_to_string(toks[i:i+2], ' ')))
-                      ELSE [md5(array_to_string(toks, ' '))] END AS hs
-                  FROM t),
+            h AS (SELECT doc_id, {_ngrams_sql('toks', 3, 'md5({})')} AS hs FROM t),
             m AS (SELECT doc_id,
                     CASE WHEN len(hs) >= 4
                       THEN list_transform(generate_series(1, len(hs)-3), i -> list_min(hs[i:i+3]))

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .text import word_tokens
+
 DEFAULT_MIN_TOKENS = 250  # reference src/utils/data_processing.py:18
 
 
@@ -68,10 +70,9 @@ def with_story(docs: DataFrame, spans_col: str = "spans") -> DataFrame:
 
 
 def token_count_expr(story_col: str = "story") -> F.Column:
-    """Whitespace-split word count (reference src/utils/data_processing.py:52).
-    ``split`` on \\s+ can emit one leading empty token for all-blank strings;
-    filter empties so blank stories count 0."""
-    return F.size(F.filter(F.split(F.col(story_col), r"\s+"), lambda w: w != F.lit("")))
+    """Whitespace-split word count (reference src/utils/data_processing.py:52):
+    the size of ``text.word_tokens``, so blank stories count 0."""
+    return F.size(word_tokens(F.col(story_col)))
 
 
 def quality_filter(docs: DataFrame, min_tokens: int = DEFAULT_MIN_TOKENS,

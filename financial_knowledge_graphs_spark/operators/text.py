@@ -5,6 +5,12 @@ deliberately written with engine-portable primitives (length/replace/md5/
 regexp) so the DuckDB oracle in __spark_entry__.py computes bit-identical
 results — that is the correctness gate for these operators.
 
+Every whitespace word split and word n-gram window goes through one stage:
+``word_tokens`` (split on \\s+, empty tokens dropped) and ``word_ngrams``
+(space-joined n-token windows, optionally hashed per gram, with an explicit
+rule for docs shorter than n). ``dedup`` and ``prep`` use the same two; the
+DuckDB twins are ``_TOKENS`` and ``_ngrams_sql`` in __spark_entry__.py.
+
 Operators: BPE-ish token counting (the whitespace count is
 prep.token_count_expr), language-ID (stopword-hit heuristic), quality
 scoring (length/punct/stopword ratios), document
@@ -38,6 +44,37 @@ def occurrences(col: Column, needle: str) -> Column:
     return (
         F.length(col) - F.length(F.replace(col, F.lit(needle), F.lit("")))
     ) / len(needle)
+
+
+def word_tokens(c: Column) -> Column:
+    """Whitespace tokens of ``c`` with empty tokens dropped (``split`` on
+    \\s+ emits a leading "" for leading blanks and one for "").  Callers
+    pass the column already normalized (lowercased, trimmed) as they need."""
+    return F.filter(F.split(c, r"\s+"), lambda w: w != F.lit(""))
+
+
+def _check_length(name: str, v) -> None:
+    """A window length below 1 (or a bool/float) would give empty or NULL
+    grams, or fail inside a Spark job; refuse it before a plan is built."""
+    if isinstance(v, bool) or not isinstance(v, int) or v < 1:
+        raise ValueError(f"{name} must be an int >= 1, got {v!r}")
+
+
+def word_ngrams(toks: Column, n: int, gram=lambda g: g,
+                keep_short: bool = True) -> Column:
+    """``gram`` of every space-joined ``n``-token window of the token array
+    ``toks``, in order.  A doc with fewer than ``n`` tokens gives
+    ``[gram(all tokens joined)]`` when ``keep_short`` (a short doc can still
+    match itself) and ``[]`` otherwise."""
+    _check_length("n-gram length n", n)
+    sz = F.size(toks)
+    short = (F.array(gram(F.concat_ws(" ", toks))) if keep_short
+             else F.array().cast("array<string>"))
+    return F.when(
+        sz >= n,
+        F.transform(F.sequence(F.lit(1), sz - (n - 1)),
+                    lambda i: gram(F.concat_ws(" ", F.slice(toks, i, n)))),
+    ).otherwise(short)
 
 
 # GPT2-style pre-tokenizer shape, restricted to constructs Java regex and
@@ -94,7 +131,7 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     - stop_ratio: English stopword tokens over tokens
     """
     low = F.lower(F.col(text_col))
-    toks = F.filter(F.split(low, r"\s+"), lambda w: w != F.lit(""))
+    toks = word_tokens(low)
     n_tok = F.size(toks)
     n_stop = F.size(F.filter(toks, lambda w: w.isin(*ENGLISH_STOPWORDS)))
     punct = F.length(F.regexp_replace(low, r"[a-z0-9\s]", ""))
@@ -119,15 +156,7 @@ def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
     fingerprint (min md5 over 3-word shingles — a 1-permutation MinHash /
     rolling-hash winnow)."""
     norm = F.lower(F.trim(F.col(text_col)))
-    toks = F.filter(F.split(norm, r"\s+"), lambda w: w != F.lit(""))
-    n = F.size(toks)
-    sh = F.when(
-        n >= 3,
-        F.transform(
-            F.sequence(F.lit(1), n - 2),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, 3))),
-        ),
-    ).otherwise(F.array(F.md5(F.concat_ws(" ", toks))))
+    sh = word_ngrams(word_tokens(norm), 3, gram=F.md5)
     return docs.select(
         "doc_id",
         F.md5(norm).alias("exact_fp"),
@@ -144,16 +173,9 @@ def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
     fingerprint. One row per (doc_id, fp): the natural join key for a
     plagiarism/near-dup blocking pass (fp is the blocking key at scale).
     Pure higher-order functions over the shingle-hash array — no UDF."""
-    norm = F.lower(F.trim(F.col(text_col)))
-    toks = F.filter(F.split(norm, r"\s+"), lambda w: w != F.lit(""))
-    n = F.size(toks)
-    hashes = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, k))),
-        ),
-    ).otherwise(F.array(F.md5(F.concat_ws(" ", toks))))
+    _check_length("window", window)
+    hashes = word_ngrams(word_tokens(F.lower(F.trim(F.col(text_col)))), k,
+                         gram=F.md5)
     nh = F.size(hashes)
     minima = F.when(
         nh >= window,
@@ -240,11 +262,8 @@ def chunk_documents(docs: DataFrame, text_col: str = "text",
     if not 0 <= overlap < chunk_tokens:
         raise ValueError("need 0 <= overlap < chunk_tokens")
     step = chunk_tokens - overlap
-    toks = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda w: w != F.lit("")
-    )
     d = (
-        docs.withColumn("__toks", toks)
+        docs.withColumn("__toks", word_tokens(F.trim(F.col(text_col))))
         .withColumn("__n", F.size("__toks"))
         .filter(F.col("__n") > 0)
     )
@@ -317,7 +336,7 @@ def gopher_quality_signals(docs: DataFrame, text_col: str = "text",
         (n_lines - F.size(F.array_distinct(lines))).cast("double")
         / n_lines.cast("double"),
     ).otherwise(F.lit(0.0))
-    toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != F.lit(""))
+    toks = word_tokens(F.col(text_col))
     n_tok = F.size(toks)
     sum_len = F.aggregate(toks, F.lit(0),
                           lambda acc, w: acc + F.length(w))
@@ -355,19 +374,6 @@ GOPHER_TOP_NGRAM_THRESH = {2: 0.20, 3: 0.18, 4: 0.16}
 GOPHER_DUP_NGRAM_THRESH = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10}
 
 
-def _word_ngrams(text_col: str, n: int) -> Column:
-    """Array of space-joined lowercase word n-grams (empty when the doc has
-    fewer than n tokens)."""
-    toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                    lambda w: w != F.lit(""))
-    sz = F.size(toks)
-    return F.when(
-        sz >= n,
-        F.transform(F.sequence(F.lit(1), sz - (n - 1)),
-                    lambda i: F.concat_ws(" ", F.slice(toks, i, n))),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def ngram_repetition_signals(docs: DataFrame, top_n: int = 2, dup_n: int = 5,
                              text_col: str = "text",
                              id_col: str = "doc_id") -> DataFrame:
@@ -384,8 +390,7 @@ def ngram_repetition_signals(docs: DataFrame, top_n: int = 2, dup_n: int = 5,
     published thresholds when the chosen n has one."""
     from pyspark.sql import Window
 
-    toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                    lambda w: w != F.lit(""))
+    toks = word_tokens(F.lower(F.trim(F.col(text_col))))
     base = docs.select(
         F.col(id_col),
         F.aggregate(toks, F.lit(0), lambda a, w: a + F.length(w))
@@ -395,7 +400,7 @@ def ngram_repetition_signals(docs: DataFrame, top_n: int = 2, dup_n: int = 5,
     def gram_counts(n: int) -> DataFrame:
         g = docs.select(
             F.col(id_col),
-            F.explode(_word_ngrams(text_col, n)).alias("gram"),
+            F.explode(word_ngrams(toks, n, keep_short=False)).alias("gram"),
         )
         # chars in one occurrence = gram length minus its n-1 separators
         return (
@@ -445,23 +450,6 @@ def ngram_repetition_signals(docs: DataFrame, top_n: int = 2, dup_n: int = 5,
     )
 
 
-def _ngram_hash_array(text_col: str, n: int) -> Column:
-    """md5 hashes of the lowercase word n-grams of a text column; docs with
-    fewer than n tokens contribute their whole token string as one gram so
-    a short doc can still match itself. Same normalize/slice/md5 constructs
-    as winnow_fingerprints — the proven cross-engine-parity shape."""
-    norm = F.lower(F.trim(F.col(text_col)))
-    toks = F.filter(F.split(norm, r"\s+"), lambda w: w != F.lit(""))
-    sz = F.size(toks)
-    return F.when(
-        sz >= n,
-        F.transform(
-            F.sequence(F.lit(1), sz - (n - 1)),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, n))),
-        ),
-    ).otherwise(F.array(F.md5(F.concat_ws(" ", toks))))
-
-
 def decontaminate(docs: DataFrame, test_docs: DataFrame, n: int = 8,
                   text_col: str = "text",
                   id_col: str = "doc_id") -> DataFrame:
@@ -477,13 +465,10 @@ def decontaminate(docs: DataFrame, test_docs: DataFrame, n: int = 8,
     scanned once, bodies never shuffle (only (doc_id, 32B hash) pairs of
     MATCHED grams reach the aggregate), and clean docs rejoin via the
     doc_id left join."""
-    grams = docs.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(_ngram_hash_array(text_col, n))).alias("g"),
-    )
-    test_grams = test_docs.select(
-        F.explode(F.array_distinct(_ngram_hash_array(text_col, n))).alias("g")
-    ).distinct()
+    hashes = F.array_distinct(word_ngrams(
+        word_tokens(F.lower(F.trim(F.col(text_col)))), n, gram=F.md5))
+    grams = docs.select(F.col(id_col), F.explode(hashes).alias("g"))
+    test_grams = test_docs.select(F.explode(hashes).alias("g")).distinct()
     hits = (
         grams.join(F.broadcast(test_grams), "g")
         .groupBy(id_col)

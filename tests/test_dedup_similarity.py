@@ -562,27 +562,47 @@ _BAD_LSH_KNOBS = {
     "simhash_bits_zero": (lambda d: d.select(dedup.simhash_expr(F.col("text"), bits=0)),
                           "bits"),
     "simhash_pairs_bits_64": (lambda d: dedup.simhash_pairs(d, bits=64), "bits"),
+    # n-gram lengths and windows: n=0 made every doc's only gram "" (every
+    # pair Jaccard 1.0, every doc contaminated), n=-1 failed inside a job
+    "ngram_jaccard_n_zero": (lambda d: dedup.ngram_jaccard_pairs(d, n=0), "n-gram length"),
+    "minhash_n_negative": (lambda d: dedup.minhash_dedup_pairs(d, n=-1), "n-gram length"),
+    "winnow_k_zero": (lambda d: text.winnow_fingerprints(d, k=0), "n-gram length"),
+    "winnow_window_zero": (lambda d: text.winnow_fingerprints(d, window=0), "window"),
+    "winnow_k_float": (lambda d: text.winnow_fingerprints(d, k=2.5), "n-gram length"),
+    "shingles_n_bool": (lambda d: d.select(dedup.shingles_expr(F.col("text"), n=True)),
+                        "n-gram length"),
+    "decontaminate_n_zero": (lambda d: text.decontaminate(d, d, n=0), "n-gram length"),
+    "ngram_repetition_top_n_zero": (lambda d: text.ngram_repetition_signals(d, top_n=0),
+                                    "n-gram length"),
+    # max_hamming=-1 divided by zero; max_hamming >= bits left empty segments
+    "simhash_pairs_max_hamming_negative": (lambda d: dedup.simhash_pairs(d, max_hamming=-1),
+                                           "max_hamming"),
+    "simhash_pairs_max_hamming_32": (lambda d: dedup.simhash_pairs(d, max_hamming=32),
+                                     "max_hamming"),
 }
 
 
 @pytest.mark.parametrize("case", list(_BAD_LSH_KNOBS))
-def test_lsh_and_simhash_knobs_rejected_before_any_job(spark, case):
-    """Band and bit counts are checked where they enter, with a ValueError
-    (an assert vanishes under ``python -O``; bands=0 divided by zero), before
-    any job runs or anything is cached."""
+def test_lsh_and_simhash_knobs_rejected_before_any_job(spark, small_corpus, case):
+    """Band, bit, n-gram and window counts are checked where they enter, with
+    a ValueError (an assert vanishes under ``python -O``; bands=0 divided by
+    zero), before any job runs or anything is cached."""
     from financial_knowledge_graphs_spark.session import local_frame
 
     call, match = _BAD_LSH_KNOBS[case]
     docs = local_frame(spark, [("d1", "alpha beta gamma delta")],
                        "doc_id string, text string")
     sc = spark.sparkContext
+    spark.catalog.clearCache()
     sc.setJobGroup("bad-lsh-knob", "lsh knob validation")
     try:
         with pytest.raises(ValueError, match=match):
             call(docs)
         assert sc.statusTracker().getJobIdsForGroup("bad-lsh-knob") == []
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     finally:
         sc._jsc.clearJobGroup()
+        small_corpus.cache()  # the session fixture's cache, cleared above
 
 
 def test_embedding_near_dup_lsh_pairs_are_brute_force_pairs(spark):
