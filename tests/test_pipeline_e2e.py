@@ -428,3 +428,117 @@ def test_failed_merge_releases_batch_caches(spark, small_corpus, tmp_warehouse,
         assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     finally:
         small_corpus.cache()  # the session fixture's cache, cleared above
+
+
+
+def _fail_mapping_merge(monkeypatch):
+    """Make the mapping-table merge raise: the crash point after the graph
+    merges and before the mapping commits ("mapping table LAST")."""
+    import os
+
+    real_merge = materialize.merge_upsert
+
+    def merge_failing_on_mapping(spark_, path, *a, **k):
+        if os.path.basename(os.path.normpath(path)) == "mapping":
+            raise OSError("injected mapping merge failure")
+        return real_merge(spark_, path, *a, **k)
+
+    monkeypatch.setattr(materialize, "merge_upsert", merge_failing_on_mapping)
+
+
+def _nested_name_batches(spark, monkeypatch):
+    """The 300-doc fixture with company 5 renamed to company 4's base plus
+    " Labs" ("Vertex Tech Labs" next to "Vertex Tech"): the two link, and
+    the merged entity's id is addressed on company 4's shorter norm. The
+    first batch is every extractable doc that does not mention company 4,
+    so its "vertex tech labs" entity id retires once company 4 arrives.
+    Returns (first-batch docs, all docs, alias dict)."""
+    real = fixtures.make_companies
+
+    def companies(n, seed=42):
+        cs = real(n, seed)
+        cs[5]["base"] = cs[4]["base"] + " Labs"
+        cs[5]["canonical"] = f"{cs[5]['base']} {cs[5]['suffix']}"
+        return cs
+
+    with monkeypatch.context() as m:
+        m.setattr(fixtures, "make_companies", companies)
+        corpus = fixtures.corpus_df(spark, n_docs=300, seed=42)
+        alias = fixtures.alias_dict_df(spark, 20, 42)
+        shorter = companies(20, 42)[4]["canonical"]
+    # only docs that pass prep, so no dedup original is left behind
+    first = corpus.filter(F.col("has_gt") & ~F.exists(
+        "entities", lambda e: e["attributes"]["companyName"] == shorter))
+    return fixtures.documents_df(first), fixtures.documents_df(corpus), alias
+
+
+def _assert_equals_single_run(spark, wh, docs, alias):
+    """Triples (ids included) and vertices (entity_id, companyName,
+    n_mentions) of ``wh`` equal a clean single run's."""
+    import shutil
+    import tempfile
+
+    single = tempfile.mkdtemp(prefix="fkg_single_")
+    try:
+        run_pipeline(spark, docs, alias, PipelineConfig(warehouse=single))
+        for table, cols in (("triples", None),
+                            ("vertices", ["entity_id", "companyName", "n_mentions"])):
+            a = materialize.read_graph_table(spark, graph_paths(wh)[table])
+            b = materialize.read_graph_table(spark, graph_paths(single)[table])
+            if cols:
+                a, b = a.select(*cols), b.select(*cols)
+            assert a.count() == b.count(), table
+            assert a.exceptAll(b).count() == 0, table
+            assert b.exceptAll(a).count() == 0, table
+    finally:
+        shutil.rmtree(single, ignore_errors=True)
+
+
+def _vertex_ids(spark, wh):
+    return {r["entity_id"] for r in materialize.read_graph_table(
+        spark, graph_paths(wh)["vertices"]).select("entity_id").collect()}
+
+
+def test_first_batch_failed_mapping_merge_replays_full_relink(
+        spark, tmp_warehouse, monkeypatch):
+    """The first batch commits triples and vertices, then its mapping merge
+    fails. With no mapping table, the replay (now over every doc) takes the
+    full relink of the whole ledger and remaps retired ids from the prior
+    vertices' representative surfaces; it must converge to a clean single
+    run."""
+    import pytest
+
+    first, docs, alias = _nested_name_batches(spark, monkeypatch)
+    paths = graph_paths(tmp_warehouse)
+    _fail_mapping_merge(monkeypatch)
+    with pytest.raises(OSError, match="injected"):
+        run_pipeline(spark, first, alias, PipelineConfig(warehouse=tmp_warehouse))
+    monkeypatch.undo()
+    assert not materialize.table_exists(paths["mapping"])
+    first_ids = _vertex_ids(spark, tmp_warehouse)
+    res = run_pipeline(spark, docs, alias, PipelineConfig(warehouse=tmp_warehouse))
+    assert res.docs_processed == res.extra["docs_prepared"]  # none checkpointed
+    assert first_ids - _vertex_ids(spark, tmp_warehouse)  # the replay retired an id
+    _assert_equals_single_run(spark, tmp_warehouse, docs, alias)
+
+
+def test_incremental_batch_failed_mapping_merge_replays_remap(
+        spark, tmp_warehouse, monkeypatch):
+    """An incremental batch that retires an id commits the rewritten
+    triples and the tombstoned vertices, then its mapping merge fails. The
+    replay re-derives the same old → new remap from the unchanged mapping
+    table and must converge to a clean single run."""
+    import pytest
+
+    first, docs, alias = _nested_name_batches(spark, monkeypatch)
+    run_pipeline(spark, first, alias, PipelineConfig(warehouse=tmp_warehouse))
+    first_ids = _vertex_ids(spark, tmp_warehouse)
+    _fail_mapping_merge(monkeypatch)
+    with pytest.raises(OSError, match="injected"):
+        run_pipeline(spark, docs, alias, PipelineConfig(warehouse=tmp_warehouse))
+    monkeypatch.undo()
+    # the failed batch retired a first-batch id (its vertices merge
+    # tombstoned it) before the mapping merge raised
+    assert first_ids - _vertex_ids(spark, tmp_warehouse)
+    run_pipeline(spark, docs, alias, PipelineConfig(warehouse=tmp_warehouse))
+    _assert_equals_single_run(spark, tmp_warehouse, docs, alias)
