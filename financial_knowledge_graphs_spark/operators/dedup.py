@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .similarity import (blocked_pairs, check_max_block, cosine_with_norms_expr, jaccard_expr,
+from .similarity import (blocked_pairs, check_int, cosine_with_norms_expr, jaccard_expr,
                          lsh_bucket_expr, lsh_tables, norm_expr, pair_sides)
 from .text import word_ngrams, word_tokens
 
@@ -100,7 +100,7 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
     task); the remap join is AQE-decided (broadcasts when the distinct-
     shingle side is small, shuffle-join with skew splitting otherwise).
     """
-    check_max_block(max_block)  # before any persist: a rejected call caches nothing
+    check_int("max_block", max_block)  # before any persist: a rejected call caches nothing
     sh = docs.select(
         F.col(id_col).alias("id"), shingles_expr(F.col(text_col), n).alias("sh")
     ).persist()  # consumed by prefix explode AND both verify joins
@@ -224,9 +224,8 @@ def _check_bands(num_perm, bands) -> None:
     """Banded LSH needs ``bands`` equal bands of the ``num_perm`` minhashes;
     refuse any other split before a plan is built (``bands=0`` would divide
     by zero, an uneven split would drop minhashes)."""
-    for name, v in (("num_perm", num_perm), ("bands", bands)):
-        if isinstance(v, bool) or not isinstance(v, int) or v < 1:
-            raise ValueError(f"{name} must be an int >= 1, got {v!r}")
+    check_int("num_perm", num_perm)
+    check_int("bands", bands)
     if num_perm % bands:
         raise ValueError(
             f"num_perm ({num_perm}) must be a multiple of bands ({bands})")
@@ -240,7 +239,7 @@ def lsh_candidate_pairs(docs: DataFrame, text_col: str = "text",
     bucket key = md5(concat(band minhashes)), join within buckets.
     Returns candidate pairs (id_a < id_b, band hits)."""
     _check_bands(num_perm, bands)
-    check_max_block(max_block)
+    check_int("max_block", max_block)
     rows_per_band = num_perm // bands
     sig = minhash_signature(docs, text_col, id_col, n, num_perm)
     band_cols = []
@@ -284,8 +283,7 @@ def simhash_expr(text_col: Column, bits: int = 16) -> Column:
     (Round 1 truncated the digest to 16 hex chars, silently zeroing bits
     17-32 of a 32-bit hash — half the hash carried no signal.)
     """
-    if isinstance(bits, bool) or not isinstance(bits, int) or not 1 <= bits <= 32:
-        raise ValueError(f"bits must be an int in [1, 32] (md5 hex has 32 digits), got {bits!r}")
+    check_int("bits", bits, 1, 32)  # md5 hex has 32 digits
     # hash each token ONCE, then fold bits over the digests — the round-1
     # expression re-evaluated md5(t) per bit position (bits× the hash work;
     # VERDICT r1 flagged this stage as the costliest in the bench)
@@ -318,13 +316,11 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     join per segment (id-only), verify full hamming after. Oversized
     segment buckets (low-entropy corpora) are capped like every other
     block in this module."""
-    check_max_block(max_block)
+    check_int("max_block", max_block)
     h = docs.select(F.col(id_col).alias("id"), simhash_expr(F.col(text_col), bits).alias("sh"))
     # bits is checked by simhash_expr; max_hamming >= bits would leave empty
     # segments (one block holding every doc), a negative one divides by zero
-    if (isinstance(max_hamming, bool) or not isinstance(max_hamming, int)
-            or not 0 <= max_hamming < bits):
-        raise ValueError(f"max_hamming must be an int in [0, bits={bits}), got {max_hamming!r}")
+    check_int("max_hamming", max_hamming, 0, bits - 1)
     segs = max_hamming + 1
     seg_len = bits // segs
     h = h.persist()  # reused by blocking AND both verify joins
@@ -368,7 +364,7 @@ def embedding_near_dup_pairs_lsh(embeddings: DataFrame, threshold: float = 0.95,
     ID-ONLY (vectors join back for the verify), buckets capped like every
     pair join in this module. Recall is the standard LSH trade-off:
     1-(1-s^n_planes)^n_tables for cosine-similarity s."""
-    check_max_block(max_block)
+    check_int("max_block", max_block)
     tables = lsh_tables(dim, n_planes, n_tables)
     e = embeddings.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")

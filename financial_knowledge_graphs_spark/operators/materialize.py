@@ -30,78 +30,39 @@ from pyspark.sql import functions as F
 from ..session import local_frame
 from .components import connected_components, union_find
 from .linking import embedding_similarity_edges, name_keys, similarity_edges
-from .similarity import check_max_block
+from .similarity import check_int
 
 
 def canonical_mapping(mentions: DataFrame, max_block: int = 1000,
                       embedding_link: bool = False,
                       embedding_threshold: float = 0.75,
-                      cleanup: list | None = None,
                       driver_threshold: int = 50_000) -> DataFrame:
-    """(type, name) → canonical component + canonical entity_id.
+    """(type, name) → canonical component + canonical entity_id, over every
+    surface of ``mentions``, plus each surface's ``n_mentions``.
 
-    entity_id is content-addressed (sha2 of the component's min key), so
+    A full canonicalization is the incremental one over an empty mapping (a
+    first load is the delta from an empty state): every surface is new,
+    nothing is bridged, and ``canonical_mapping_incremental`` returns a row
+    for every surface. So both take the same adaptive plan — the driver core
+    up to ``driver_threshold`` surfaces and DRIVER_PAIR_BUDGET in-block
+    pairs, else the distributed blocking → verify → components chain — and
+    return the same rows either way (``tests/test_canonical_mapping_driver.py``).
+
+    entity_id is content-addressed (sha2 of the component's min norm), so
     re-runs over overlapping corpora assign stable ids — required for
-    idempotent MERGE semantics.
-
-    ``embedding_link=True`` adds char-n-gram cosine edges (north-star axis:
-    alias-dictionary + embedding-similarity linking) on top of the
-    reference's containment+Jaccard predicate — catches typos/run-together
-    variants the token-set test misses. Off by default: the reference-parity
-    P/R gate is defined on the reference predicate alone.
-
-    Adaptive plan, chosen at run time from the ledger's size: up to
-    ``driver_threshold`` distinct surfaces (and up to DRIVER_PAIR_BUDGET
-    in-block candidate pairs), the surface keys are collected once and
-    blocked, verified, labelled and id'd on the driver by the same core the
-    incremental path uses (``_driver_canonicalize``), then joined back onto
-    the keys as a broadcast frame — one collect instead of the ~13 jobs of
-    the distributed blocking → verify → components chain. Larger ledgers,
-    pair-heavy ones, ``embedding_link`` and ``driver_threshold=0`` take the
-    distributed plan. Both plans return the same rows and columns
-    (``tests/test_canonical_mapping_driver.py``).
+    idempotent MERGE semantics. ``embedding_link=True`` adds char-n-gram
+    cosine edges on top of the reference's containment+Jaccard predicate
+    (typos and run-together variants the token-set test misses); off by
+    default, since the reference-parity P/R gate is defined on the
+    reference predicate alone.
     """
-    # keys feed three consumers (edge build ×2 sides, final map join) —
-    # persist + materialize once instead of re-running the mention
-    # aggregation (NOT localCheckpoint: the RDD conversion bypasses any
-    # upstream DataFrame cache and would re-run the extraction UDF)
-    check_max_block(max_block)  # before the persist: a rejected call caches nothing
-    keys = name_keys(mentions).persist()
-    # ownership of the keys cache passes to the caller via `cleanup`: once
-    # the returned mapping is materialized, unpersist it (the pipeline
-    # passes its batch-scoped _cleanup list). Leaving it cached for the
-    # session lifetime leaks the full distinct-surface ledger into executor
-    # storage on every full relink. Callers that pass no list (short-lived
-    # tests/tools) accept the session-scoped cache.
-    if cleanup is not None:
-        cleanup.append(keys)
-    if not embedding_link and driver_threshold:
-        cand_pdf = (keys.select("key", "type", "name", "norm", "tokens")
-                    .limit(driver_threshold + 1).toPandas())
-        if len(cand_pdf) <= driver_threshold:
-            cand_pdf["is_new"] = True   # a full relink: every surface is new
-            cand_pdf["comp"] = None
-            res = _driver_canonicalize(keys.sparkSession, cand_pdf, max_block)
-            if res is not None:
-                mapped = keys.join(
-                    F.broadcast(res.select("key", "comp", "entity_id")), "key", "left")
-                # the distributed plan's columns: order (_assign_entity_ids)
-                # and a non-null comp (every key is in `res`)
-                return mapped.select(F.coalesce("comp", "key").alias("comp"), "key",
-                                     *[c for c in keys.columns if c != "key"],
-                                     "entity_id")
-    edges = similarity_edges(keys, max_block=max_block).select("key_a", "key_b")
-    if embedding_link:
-        edges = edges.unionByName(
-            embedding_similarity_edges(
-                keys, threshold=embedding_threshold, max_block=max_block
-            ).select("key_a", "key_b")
-        )
-    comp = connected_components(keys, edges, id_col="key")
-    mapped = keys.join(comp, "key", "left").withColumn(
-        "comp", F.coalesce("comp", "key")  # singletons
+    keys = name_keys(mentions)
+    mapped = canonical_mapping_incremental(
+        empty_mapping(mentions.sparkSession), keys, max_block=max_block,
+        embedding_link=embedding_link, embedding_threshold=embedding_threshold,
+        driver_threshold=driver_threshold,
     )
-    return _assign_entity_ids(mapped)
+    return mapped.join(keys.select("key", "n_mentions"), "key")
 
 
 def _assign_entity_ids(mapped: DataFrame) -> DataFrame:
@@ -138,6 +99,11 @@ def _assign_entity_ids(mapped: DataFrame) -> DataFrame:
 
 _MAPPING_SCHEMA = "key string, type string, name string, norm string, comp string, entity_id string"
 
+
+def empty_mapping(spark: SparkSession) -> DataFrame:
+    """The mapping before any surface: what a full relink links against."""
+    return local_frame(spark, [], _MAPPING_SCHEMA)
+
 # The driver core verifies in-block candidate pairs in Python, about 0.3 µs
 # a pair (2.59M pairs of a 36k-surface alias ledger in 0.79 s, 4 cores).
 # Against the distributed plan on the same host, the driver path wins at
@@ -150,14 +116,14 @@ DRIVER_PAIR_BUDGET = 3_000_000
 def _driver_canonicalize(spark: SparkSession, cand_pdf, max_block: int,
                          prior_map: DataFrame | None = None,
                          member_limit: int = 0) -> DataFrame | None:
-    """Driver twin of the distributed canonicalization (token edges only),
-    shared by the full path (every surface new, no ``prior_map``) and the
-    incremental path (new surfaces plus their bridged prior surfaces).
+    """Driver twin of the distributed canonicalization (token edges only):
+    the new surfaces plus their bridged prior surfaces. On a full relink
+    every surface is new and ``prior_map`` is empty, so it is never read.
 
     ``cand_pdf`` is a pandas frame of ``key, type, name, norm, tokens,
     is_new, comp`` (``comp``: the prior component of a non-new row). The
     return is the mapping rows (``_MAPPING_SCHEMA``) whose (comp,
-    entity_id) moved — every row on the full path — or ``None`` when the
+    entity_id) moved — every row on a full relink — or ``None`` when the
     in-block pairs to verify exceed DRIVER_PAIR_BUDGET, or the
     touched-component member pull exceeds ``member_limit`` rows (ADVICE
     r3: the candidate cap alone does not bound the member fetch — one
@@ -291,7 +257,11 @@ def canonical_mapping_incremental(
     driver_threshold: int = 50_000,
 ) -> DataFrame:
     """TOUCHED-COMPONENTS-ONLY re-canonicalization (VERDICT r2 watch-item:
-    the full-ledger CC per batch is O(history) at 10^9 distinct surfaces).
+    the full-ledger CC per batch is O(history) at 10^9 distinct surfaces),
+    and the engine's only canonicalization: over an empty ``prior_map``
+    (``empty_mapping``) every surface is new and comes back, which is the
+    full relink (``canonical_mapping``, the pipeline's first batch and
+    link-config drift).
 
     Edges are a pure pairwise function of surface strings, so a new batch
     can only change components REACHABLE FROM ITS NEW SURFACES: a
@@ -335,7 +305,7 @@ def canonical_mapping_incremental(
     from .linking import raw_char_ngrams_expr
     from .normalize import norm_tokens_expr
 
-    check_max_block(max_block)  # the driver twin never reaches purge_blocks
+    check_int("max_block", max_block)  # the driver twin never reaches purge_blocks
     key_cols = ["key", "type", "name", "norm", "tokens"]
     new_keys = batch_keys.join(
         prior_map.select("key"), "key", "left_anti"
@@ -375,9 +345,10 @@ def canonical_mapping_incremental(
     # Below the threshold, ONE Arrow collect + pure-Python twin of the
     # exact same predicate/UF/assignment + one pushed-filter member fetch
     # replaces the whole chain; the distributed path remains for large
-    # batches (fresh domains) and for embedding_link, whose
-    # hashed-cosine math stays Catalyst-only. Equality of the two paths is
-    # pinned by test_incremental_mapping.py::test_driver_path_equals_distributed.
+    # batches (fresh domains, a full relink past the threshold) and for
+    # embedding_link, whose hashed-cosine math stays Catalyst-only.
+    # Equality of the two paths is pinned by test_driver_path_equals_distributed
+    # (test_incremental_mapping.py, test_canonical_mapping_driver.py).
     if not embedding_link and driver_threshold:
         cand_pdf = (
             new_keys.withColumn("is_new", F.lit(True))
@@ -415,8 +386,8 @@ def canonical_mapping_incremental(
             ).select("key_a", "key_b")
         )
     # edges feed three consumers (touched-comp derivation, virtual-edge
-    # union, CC) AND sit UPSTREAM of the node set here (unlike the full
-    # path, where the node set feeds the edges). Without truncation the
+    # union, CC) AND sit UPSTREAM of the node set (the touched members
+    # join the new surfaces as CC nodes). Without truncation the
     # edge subtree is replicated through members → sub_keys → CC → the
     # _assign_entity_ids window, and the logical plan grows
     # multiplicatively (observed: explainString OOMs the driver). Eager
@@ -1331,13 +1302,6 @@ def _build_snapshot(table_path: str, base: dict | None, n_buckets: int, schema,
     return sid
 
 
-def _check_count(name: str, value, minimum: int = 1) -> None:
-    """Table knobs are ints (not bools) >= ``minimum``, checked where they
-    are passed in — before any Spark job, whose failure would be opaque."""
-    if isinstance(value, bool) or not isinstance(value, int) or value < minimum:
-        raise ValueError(f"{name} must be an int >= {minimum}, got {value!r}")
-
-
 def _retained_snapshot(table_path: str, sid: int) -> dict:
     """Metadata of committed snapshot ``sid``, which must still be within
     the retention window (time travel, rollback, CDC)."""
@@ -1834,7 +1798,7 @@ def merge_upsert(spark: SparkSession, table_path: str, updates: DataFrame,
     """
     if mode not in ("cow", "mor"):
         raise ValueError(f"merge mode must be 'cow' or 'mor', got {mode!r}")
-    _check_count("n_buckets", n_buckets)
+    check_int("n_buckets", n_buckets)
     # dedup once and PERSIST: the attempt evaluates this frame 3-5 times
     # (bucket-discovery collect, matched semi-join, survivors anti-join,
     # data write, MOR delete write) — unpersisted, each evaluation re-runs
@@ -2066,7 +2030,7 @@ def rebucket_table(spark: SparkSession, table_path: str, keys: list[str],
     CommitConflictError here (no auto-retry — rerun against the new
     snapshot); the CAS guarantees the rewrite never erases that merge.
     """
-    _check_count("new_buckets", new_buckets)
+    check_int("new_buckets", new_buckets)
     state = _table_state(table_path)
     rows = read_graph_table(spark, table_path)
     with _staging(table_path) as staging:
@@ -2096,7 +2060,7 @@ def compact_table(spark: SparkSession, table_path: str,
 
     from pyspark.sql.types import StructType
 
-    _check_count("max_files", max_files, minimum=0)
+    check_int("max_files", max_files, minimum=0)
     state = _table_state(table_path)
     if not state:
         return
@@ -2244,7 +2208,7 @@ def cluster_table(spark: SparkSession, table_path: str,
 
     from pyspark.sql.types import StructType
 
-    _check_count("files_per_bucket", files_per_bucket)
+    check_int("files_per_bucket", files_per_bucket)
     state = _table_state(table_path)
     if not state:
         return

@@ -26,11 +26,16 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def check_max_block(max_block) -> None:
-    """A block cap below 1 (or a bool/float) would purge every block and
-    return no pairs, silently; refuse it before any plan is built."""
-    if isinstance(max_block, bool) or not isinstance(max_block, int) or max_block < 1:
-        raise ValueError(f"max_block must be an int >= 1, got {max_block!r}")
+def check_int(name: str, value, minimum: int = 1, maximum: int | None = None) -> None:
+    """The engine's one int-knob check: ``value`` must be an int (not a bool)
+    in ``[minimum, maximum]``. Checked where a knob is passed in, before any
+    plan is built or anything is cached: out of range, a knob either fails
+    inside a Spark job or returns a silently wrong result (a block cap below
+    1 purges every block; an n-gram length of 0 makes every gram "")."""
+    if (isinstance(value, bool) or not isinstance(value, int) or value < minimum
+            or (maximum is not None and value > maximum)):
+        bound = f">= {minimum}" if maximum is None else f"in [{minimum}, {maximum}]"
+        raise ValueError(f"{name} must be an int {bound}, got {value!r}")
 
 
 def purge_blocks(rows: DataFrame, block_cols: Sequence[str],
@@ -39,7 +44,7 @@ def purge_blocks(rows: DataFrame, block_cols: Sequence[str],
     ``max_block`` rows: degenerate blocks (a stop token, a zero vector's
     bucket) would otherwise square into most of the pair join. The block
     sizes are one count aggregate, broadcast into a left-anti join."""
-    check_max_block(max_block)
+    check_int("max_block", max_block)
     block_cols = list(block_cols)
     big = (rows.groupBy(*block_cols).agg(F.count(F.lit(1)).alias("bs"))
            .filter(F.col("bs") > max_block))

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .similarity import check_int
+
 # tiny per-language stopword markers; counted as substring occurrences with
 # spaces to avoid word-boundary regex differences across engines
 LANG_MARKERS: dict[str, list[str]] = {
@@ -53,20 +55,13 @@ def word_tokens(c: Column) -> Column:
     return F.filter(F.split(c, r"\s+"), lambda w: w != F.lit(""))
 
 
-def _check_length(name: str, v) -> None:
-    """A window length below 1 (or a bool/float) would give empty or NULL
-    grams, or fail inside a Spark job; refuse it before a plan is built."""
-    if isinstance(v, bool) or not isinstance(v, int) or v < 1:
-        raise ValueError(f"{name} must be an int >= 1, got {v!r}")
-
-
 def word_ngrams(toks: Column, n: int, gram=lambda g: g,
                 keep_short: bool = True) -> Column:
     """``gram`` of every space-joined ``n``-token window of the token array
     ``toks``, in order.  A doc with fewer than ``n`` tokens gives
     ``[gram(all tokens joined)]`` when ``keep_short`` (a short doc can still
     match itself) and ``[]`` otherwise."""
-    _check_length("n-gram length n", n)
+    check_int("n-gram length n", n)
     sz = F.size(toks)
     short = (F.array(gram(F.concat_ws(" ", toks))) if keep_short
              else F.array().cast("array<string>"))
@@ -173,7 +168,7 @@ def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
     fingerprint. One row per (doc_id, fp): the natural join key for a
     plagiarism/near-dup blocking pass (fp is the blocking key at scale).
     Pure higher-order functions over the shingle-hash array — no UDF."""
-    _check_length("window", window)
+    check_int("window", window)
     hashes = word_ngrams(word_tokens(F.lower(F.trim(F.col(text_col)))), k,
                          gram=F.md5)
     nh = F.size(hashes)

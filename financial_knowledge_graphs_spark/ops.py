@@ -26,10 +26,16 @@ class OpsStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.checkpoints_path = os.path.join(root, "checkpoints")
-        self.lineage_path = os.path.join(root, "lineage")
-        self.metrics_path = os.path.join(root, "metrics")
-        self.runs_path = os.path.join(root, "runs")
+        # table name -> (path, schema): the one map read() and compact() use
+        self.tables = {
+            name: (os.path.join(root, name), schema)
+            for name, schema in (("checkpoints", schemas.CHECKPOINTS),
+                                 ("lineage", schemas.LINEAGE),
+                                 ("metrics", schemas.METRICS),
+                                 ("runs", schemas.RUNS))
+        }
+        (self.checkpoints_path, self.lineage_path,
+         self.metrics_path, self.runs_path) = (p for p, _ in self.tables.values())
 
     # -- run registry (SURVEY §2.3 rows 20-21) ------------------------------
     def next_run_id(self) -> str:
@@ -125,14 +131,7 @@ class OpsStore:
         )
 
     def read(self, which: str) -> DataFrame:
-        path = {"checkpoints": self.checkpoints_path,
-                "lineage": self.lineage_path,
-                "metrics": self.metrics_path,
-                "runs": self.runs_path}[which]
-        schema = {"checkpoints": schemas.CHECKPOINTS,
-                  "lineage": schemas.LINEAGE,
-                  "metrics": schemas.METRICS,
-                  "runs": schemas.RUNS}[which]
+        path, schema = self.tables[which]
         self._recover(path)
         if not os.path.isdir(path):
             return local_frame(self.spark, [], schema)
@@ -180,11 +179,7 @@ class OpsStore:
         import shutil
 
         done: dict[str, int] = {}
-        for which in ("checkpoints", "lineage", "metrics", "runs"):
-            path = {"checkpoints": self.checkpoints_path,
-                    "lineage": self.lineage_path,
-                    "metrics": self.metrics_path,
-                    "runs": self.runs_path}[which]
+        for which, (path, _) in self.tables.items():
             self._recover(path)
             n = self._n_files(path)
             if n <= max_files:

@@ -256,129 +256,95 @@ def _run_batch(spark: SparkSession, documents: DataFrame, alias_dict: DataFrame,
         mode=cfg.merge_mode,
     )
     _ph["ledger_merge"] = round(time.time() - _t, 3); _t = time.time()
-    # ---- canonicalization: full CC on the first batch, TOUCHED-COMPONENTS-
-    # ONLY after (VERDICT r2 watch-item: a full-ledger CC per batch is
-    # O(history) at 10^9 distinct surfaces). The persisted graph/mapping
-    # table (surface → comp + entity_id) is the incremental state; a batch
-    # re-canonicalizes only components reachable from its genuinely-new
-    # surfaces (see canonical_mapping_incremental), so per-batch link cost
-    # is O(batch + touched members). The vertices rebuild is likewise
-    # restricted to touched entities, so the vertices MERGE rewrites only
-    # their buckets instead of the whole table every batch.
+    # ---- canonicalization: ONE path, TOUCHED-COMPONENTS-ONLY (VERDICT r2
+    # watch-item: a full-ledger CC per batch is O(history) at 10^9 distinct
+    # surfaces). The persisted graph/mapping table (surface → comp +
+    # entity_id) is the incremental state; canonical_mapping_incremental
+    # links a set of surface keys against it and returns only the rows whose
+    # (comp, entity_id) moved, so per-batch link cost is O(batch + touched
+    # members). A full relink — the first batch, a pre-mapping-table
+    # warehouse (upgrade path), or a linking-config change (drift gate
+    # above) — is the same call over the whole ledger against an EMPTY
+    # mapping: every surface comes back, and the table is (re)seeded. The
+    # only per-path choices are made here:
+    #   - keys: the ledger on a full relink, the batch's mentions otherwise;
+    #   - prior mapping: empty on a full relink, the mapping table otherwise;
+    #   - old ids for the retired-id remap: the prior vertices'
+    #     representative surfaces on a full relink (merged entities retire
+    #     their old ids; a SPLIT under a stricter config remaps old triples
+    #     to the new id of the old entity's representative surface, the
+    #     only deterministic choice once per-surface provenance is gone),
+    #     the mapping table otherwise.
+    # The vertices rebuild is restricted to touched entities, so the
+    # vertices MERGE rewrites only their buckets instead of the whole table
+    # every batch.
     from .operators.linking import name_keys
 
-    stale_vertex_keys = None
-    triple_remap = None
-    mapping_updates = None  # rows to merge into graph/mapping (post-merges)
-    map_cols = ["key", "type", "name", "norm", "comp", "entity_id"]
-
-    if config_drift or not materialize.table_exists(paths["mapping"]):
-        # first batch, a pre-mapping-table warehouse (upgrade path), or a
-        # linking-config change (drift gate above): full canonicalization
-        # over the whole ledger, then (re)seed the table. The prior-vertices
-        # remap below also covers drift-induced id churn — merged entities
-        # retire their old ids; a SPLIT (stricter config) remaps old triples
-        # to the new id of the old entity's representative surface, the only
-        # deterministic choice once per-surface provenance is gone.
-        mention_universe = materialize.read_graph_table(
-            spark, paths["surface_mentions"]
-        )
-        prior_vertices = None
+    full_relink = config_drift or not materialize.table_exists(paths["mapping"])
+    ledger = materialize.read_graph_table(spark, paths["surface_mentions"])
+    if full_relink:
+        keys_from, prior_map = ledger, materialize.empty_mapping(spark)
+        old_ids = None
         if materialize.table_exists(paths["vertices"]):
-            prior_vertices = materialize.read_graph_table(spark, paths["vertices"])
-        mapping = materialize.canonical_mapping(
-            mention_universe, max_block=cfg.max_block,
-            embedding_link=cfg.embedding_link,
-            embedding_threshold=cfg.embedding_threshold,
-            cleanup=cleanup,
-        ).persist()
-        cleanup.append(mapping)
-        mapping_updates = mapping.select(*map_cols)
-        vertex_mentions = mention_universe
-        # tombstones (upgrade path only): prior entities whose id changed
-        if prior_vertices is not None:
-            remap = (
-                prior_vertices.select("entity_id", "type", "name")
-                .join(
-                    mapping.select(
-                        "type", "name", F.col("entity_id").alias("new_entity_id")
-                    ),
-                    ["type", "name"],
-                )
-                .filter(F.col("entity_id") != F.col("new_entity_id"))
-                .select(F.col("entity_id").alias("old_id"),
-                        F.col("new_entity_id").alias("new_id"))
-                .distinct()
-                .persist()
-            )
-            cleanup.append(remap)
-            # full count (NOT limit(1)): materializes every partition into
-            # the cache NOW, while the prior tables' version dirs exist
-            if remap.count() > 0:
-                stale_vertex_keys = remap.select(F.col("old_id").alias("entity_id"))
-                triple_remap = remap
+            old_ids = materialize.read_graph_table(spark, paths["vertices"])
     else:
-        batch_keys = name_keys(mentions).persist()
-        cleanup.append(batch_keys)
-        prior_map = materialize.read_graph_table(spark, paths["mapping"])
-        updates = materialize.canonical_mapping_incremental(
-            prior_map, batch_keys, max_block=cfg.max_block,
-            embedding_link=cfg.embedding_link,
-            embedding_threshold=cfg.embedding_threshold,
-        ).persist()
-        cleanup.append(updates)
-        n_upd = updates.count()
-        # entities needing a vertex refresh: those of the batch's (old)
-        # surfaces — their n_mentions moved — plus everything the
-        # re-canonicalization touched (old AND new ids of the sub-universe,
-        # so norm-collapsed entities get exact counts too)
-        batch_eids = prior_map.join(batch_keys.select("key"), "key").select("entity_id")
-        if n_upd:
-            touched_eids = (
-                batch_eids
-                .unionByName(
-                    prior_map.join(updates.select("key"), "key").select("entity_id")
-                )
-                .unionByName(updates.select("entity_id"))
-                .distinct()
-            )
-        else:
-            touched_eids = batch_eids.distinct()
-        prior_rows = prior_map.join(touched_eids, "entity_id").select(*map_cols)
-        if n_upd:
-            mapping = updates.unionByName(
-                prior_rows.join(updates.select("key"), "key", "left_anti")
-            ).persist()
-            mapping_updates = updates
-            # tombstones: sub-universe surfaces whose canonical id changed
-            remap = (
-                prior_map.select("key", F.col("entity_id").alias("old_id"))
-                .join(updates.select("key", F.col("entity_id").alias("new_id")), "key")
-                .filter(F.col("old_id") != F.col("new_id"))
-                .select("old_id", "new_id")
-                .distinct()
-                .persist()
-            )
-            cleanup.append(remap)
-            if remap.count() > 0:
-                stale_vertex_keys = remap.select(F.col("old_id").alias("entity_id"))
-                triple_remap = remap
-        else:
-            mapping = prior_rows.persist()
-        cleanup.append(mapping)
-        # touched entities' surfaces only: the ledger scan stays one full
-        # parquet pass (embarrassingly parallel; at 10^12 docs, re-bucket
-        # the ledger by (type, name) to prune it), but CC, vertex build and
-        # the vertices merge are now O(touched), not O(history)
-        vertex_mentions = materialize.read_graph_table(
-            spark, paths["surface_mentions"]
-        ).join(mapping.select("type", "name").distinct(), ["type", "name"])
+        keys_from = mentions
+        old_ids = prior_map = materialize.read_graph_table(spark, paths["mapping"])
+    keys = name_keys(keys_from).persist()
+    cleanup.append(keys)
+    updates = materialize.canonical_mapping_incremental(
+        prior_map, keys, max_block=cfg.max_block,
+        embedding_link=cfg.embedding_link,
+        embedding_threshold=cfg.embedding_threshold,
+    ).persist()
+    cleanup.append(updates)
+    n_upd = updates.count()
+    # entities needing a vertex refresh: those of the batch's (old)
+    # surfaces — their n_mentions moved — plus everything the
+    # re-canonicalization touched (old AND new ids of the sub-universe, so
+    # norm-collapsed entities get exact counts too)
+    touched_eids = (
+        prior_map.join(keys.select("key"), "key").select("entity_id")
+        .unionByName(prior_map.join(updates.select("key"), "key").select("entity_id"))
+        .unionByName(updates.select("entity_id"))
+        .distinct()
+    )
+    mapping = updates.unionByName(
+        prior_map.join(touched_eids, "entity_id")
+        .join(updates.select("key"), "key", "left_anti")
+    ).persist()
+    cleanup.append(mapping)
+    # a full relink commits the mapping table even with no rows: the next
+    # batch then takes the incremental path
+    mapping_updates = updates if (n_upd or full_relink) else None
+    # tombstones: surfaces whose canonical id changed (old → new). The join
+    # is on (type, name), the content of the surface key that the prior
+    # vertices lack; a NULL-name surface blocks nowhere, so it never moves
+    stale_vertex_keys = triple_remap = None
+    if old_ids is not None and n_upd:
+        remap = (
+            old_ids.select("type", "name", F.col("entity_id").alias("old_id"))
+            .join(updates.select("type", "name", F.col("entity_id").alias("new_id")),
+                  ["type", "name"])
+            .filter(F.col("old_id") != F.col("new_id"))
+            .select("old_id", "new_id")
+            .distinct()
+            .persist()
+        )
+        cleanup.append(remap)
+        # full count (NOT limit(1)): materializes every partition into the
+        # cache NOW, while the prior tables' version dirs exist
+        if remap.count() > 0:
+            stale_vertex_keys = remap.select(F.col("old_id").alias("entity_id"))
+            triple_remap = remap
 
     _ph["canonicalize"] = round(time.time() - _t, 3); _t = time.time()
     # vertices feed two actions (count implicit in merge + the merge write
     # itself); triples feed count + merge; both persist so the join chains
     # run once. dropped counts off the persisted endpoint-join intermediate.
-    vertices = materialize.build_vertices(vertex_mentions, mapping).persist()
+    # build_vertices inner-joins the ledger with the mapping on (type,
+    # name), unique per key: only touched entities' surfaces get through
+    vertices = materialize.build_vertices(ledger, mapping).persist()
     triples, dropped, ep_joined = materialize.build_triples(
         raw_triples, mentions, mapping
     )
@@ -477,8 +443,8 @@ def _run_batch(spark: SparkSession, documents: DataFrame, alias_dict: DataFrame,
         # erase the evidence replay needs to re-derive the remap.
         if mapping_updates is not None:
             materialize.merge_upsert(
-                spark, paths["mapping"], mapping_updates.select(*map_cols),
-                ["key"], mode=cfg.merge_mode,
+                spark, paths["mapping"], mapping_updates, ["key"],
+                mode=cfg.merge_mode,
             )
         return None
 

@@ -4,6 +4,7 @@ returns the distributed plan's rows and columns, falls back past its pair
 budget, and the cold batch's fixed cost — jobs per canonicalization, the
 merge head, files per bucket — is pinned."""
 
+import ast
 import os
 
 import pandas as pd
@@ -13,6 +14,9 @@ from financial_knowledge_graphs_spark import fixtures
 from financial_knowledge_graphs_spark.operators import materialize
 from financial_knowledge_graphs_spark.operators.linking import name_keys
 from financial_knowledge_graphs_spark.session import local_frame
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                   "financial_knowledge_graphs_spark")
 
 
 def _surfaces(spark, names, typ="Company"):
@@ -130,8 +134,9 @@ def test_incremental_null_name_and_pair_budget(spark, monkeypatch):
 
 # --- the cold batch's fixed cost ------------------------------------------
 
-# canonical_mapping(...).collect() on a small ledger: three jobs to build
-# and collect the keys, two for the result (the distributed plan ran 16)
+# canonical_mapping(...).collect() on a small ledger takes the driver path:
+# the keys' collect for the driver core, then the result joined with the
+# keys' n_mentions (13 jobs on the distributed plan)
 CANONICALIZE_JOBS = 5
 
 
@@ -140,14 +145,10 @@ def test_small_ledger_canonicalization_job_count(spark):
     for thr in (50_000, 0):
         names = [f"Alpha Co{i}" for i in range(20)] + [
             f"Beta Holdings {thr} {i}" for i in range(200)]
-        cleanup = []
         _, counts[thr], _ = _in_group(
             spark, f"canon-jobs-{thr}",
             lambda: materialize.canonical_mapping(
-                _surfaces(spark, names), driver_threshold=thr,
-                cleanup=cleanup).collect())
-        for df in cleanup:
-            df.unpersist()
+                _surfaces(spark, names), driver_threshold=thr).collect())
     assert counts[50_000] <= CANONICALIZE_JOBS, counts
     assert counts[0] > counts[50_000], counts
 
@@ -201,3 +202,32 @@ def test_second_merge_writes_one_file_per_touched_bucket(spark, tmp_warehouse, m
         assert materialize._table_state(t)["deletes"]
     got = {(r["k"], r["v"]) for r in materialize.read_graph_table(spark, t).collect()}
     assert got == (set(base) - {(f"k{i}", i) for i in range(0, 400, 7)}) | set(upd)
+
+
+# --- one canonicalization path ---------------------------------------------
+
+def _call_sites(path, names):
+    """(callee, line) of every call to one of ``names`` in ``path``."""
+    tree = ast.parse(open(path, encoding="utf-8").read())
+    calls = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name in names:
+                calls.append((name, node.lineno))
+    return sorted(calls)
+
+
+def test_one_canonicalization_plan_and_one_pipeline_call():
+    """A full relink is the incremental canonicalization over an empty
+    mapping: materialize.py holds one distributed plan (similarity_edges →
+    connected_components → _assign_entity_ids) and one driver adapter, and
+    the pipeline canonicalizes from one site. A second copy fails here."""
+    plan = ("similarity_edges", "connected_components", "_assign_entity_ids",
+            "_driver_canonicalize")
+    sites = _call_sites(os.path.join(PKG, "operators", "materialize.py"), plan)
+    assert sorted(n for n, _ in sites) == sorted(plan), sites
+    pipe = _call_sites(os.path.join(PKG, "pipeline.py"),
+                       ("canonical_mapping", "canonical_mapping_incremental"))
+    assert len(pipe) == 1, pipe

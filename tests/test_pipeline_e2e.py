@@ -542,3 +542,16 @@ def test_incremental_batch_failed_mapping_merge_replays_remap(
     assert first_ids - _vertex_ids(spark, tmp_warehouse)
     run_pipeline(spark, docs, alias, PipelineConfig(warehouse=tmp_warehouse))
     _assert_equals_single_run(spark, tmp_warehouse, docs, alias)
+
+
+def test_full_relink_with_no_surfaces_commits_empty_mapping(spark, small_corpus,
+                                                            tmp_warehouse):
+    """A first batch whose docs yield no mention still commits the mapping
+    table (with no rows), so the next batch links incrementally."""
+    docs, alias = _docs_alias(spark, small_corpus)
+    res = run_pipeline(spark, docs, alias.filter(F.lit(False)),
+                       PipelineConfig(warehouse=tmp_warehouse, batch_size=20))
+    assert res.docs_processed > 0 and res.mentions == 0
+    mapping = graph_paths(tmp_warehouse)["mapping"]
+    assert materialize.table_exists(mapping)
+    assert materialize.read_graph_table(spark, mapping).count() == 0
