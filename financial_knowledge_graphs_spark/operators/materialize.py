@@ -104,6 +104,7 @@ def empty_mapping(spark: SparkSession) -> DataFrame:
     """The mapping before any surface: what a full relink links against."""
     return local_frame(spark, [], _MAPPING_SCHEMA)
 
+
 # The driver core verifies in-block candidate pairs in Python, about 0.3 µs
 # a pair (2.59M pairs of a 36k-surface alias ledger in 0.79 s, 4 cores).
 # Against the distributed plan on the same host, the driver path wins at

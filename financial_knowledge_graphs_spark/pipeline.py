@@ -298,7 +298,10 @@ def _run_batch(spark: SparkSession, documents: DataFrame, alias_dict: DataFrame,
         embedding_threshold=cfg.embedding_threshold,
     ).persist()
     cleanup.append(updates)
-    n_upd = updates.count()
+    # a full relink commits the mapping table even with no rows, so the
+    # next batch takes the incremental path; an incremental batch commits
+    # only if a row changed (the count also fills the updates cache)
+    changed = full_relink or updates.count() > 0
     # entities needing a vertex refresh: those of the batch's (old)
     # surfaces — their n_mentions moved — plus everything the
     # re-canonicalization touched (old AND new ids of the sub-universe, so
@@ -314,14 +317,12 @@ def _run_batch(spark: SparkSession, documents: DataFrame, alias_dict: DataFrame,
         .join(updates.select("key"), "key", "left_anti")
     ).persist()
     cleanup.append(mapping)
-    # a full relink commits the mapping table even with no rows: the next
-    # batch then takes the incremental path
-    mapping_updates = updates if (n_upd or full_relink) else None
+    mapping_updates = updates if changed else None
     # tombstones: surfaces whose canonical id changed (old → new). The join
     # is on (type, name), the content of the surface key that the prior
     # vertices lack; a NULL-name surface blocks nowhere, so it never moves
     stale_vertex_keys = triple_remap = None
-    if old_ids is not None and n_upd:
+    if old_ids is not None and changed:
         remap = (
             old_ids.select("type", "name", F.col("entity_id").alias("old_id"))
             .join(updates.select("type", "name", F.col("entity_id").alias("new_id")),
